@@ -1185,7 +1185,7 @@ def main():
                     (F.col("vec_id") + n_docs_s).alias("vec_id"), "embedding"
                 )
             ).cache()
-            n_emb_s = emb_s.count()
+            emb_s.count()
             n_cells_s = max(16, n_docs_s // 256)
             t_qt, hkm_q = timed(
                 lambda: ann.hkm_train_df(
@@ -1194,7 +1194,6 @@ def main():
                     branch=16,
                     seed=43,
                     sample_size=16384,
-                    n_rows=n_emb_s,
                 ),
                 reps=1,
             )

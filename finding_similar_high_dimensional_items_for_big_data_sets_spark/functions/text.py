@@ -1,7 +1,8 @@
 """Text primitives: tokenize + shingling (SURVEY §2.8 F1-F3, §2.7 E3).
 
-All pure ``pyspark.sql.functions`` higher-order expressions — no UDFs,
-fully whole-stage-codegen'd, shuffle-free (per-row array work).
+All pure ``pyspark.sql.functions`` expressions — no UDFs, shuffle-free
+(per-row array work). The higher-order ones (``filter``, ``transform``)
+are CodegenFallback: Spark evaluates them interpreted inside the stage.
 """
 
 from __future__ import annotations

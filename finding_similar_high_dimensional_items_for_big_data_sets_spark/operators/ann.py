@@ -1320,7 +1320,6 @@ def hkm_train_df(
     n_iters: int = 8,
     vec_col: str = "embedding",
     sample_size: int = 32768,
-    n_rows: int | None = None,
 ) -> HKMQuantizer:
     """Sample-then-train: a content-deterministic ``sample_size``-row
     subset collected to the driver, then :func:`hkm_train`. This is how
@@ -1338,8 +1337,7 @@ def hkm_train_df(
     One distributed partial top-k (TakeOrderedAndProject) replaces
     both. The collected rows are then put in NaN-safe lexicographic
     order (``np.lexsort``) so the training matrix is invariant to
-    collect order too. ``n_rows`` is retained for API compatibility
-    and ignored (no sizing pass exists anymore).
+    collect order too.
 
     Artifact note: this changes WHICH rows a retrain on identical data
     selects versus pre-round-12 builds (the old subset was
@@ -1492,10 +1490,13 @@ def random_codebooks(
     return rs.randn(m, n_codes, dim // m).tolist()
 
 
-#: sessions (by SparkContext identity) whose JVM passed the
-#: pow(x,2) == x*x bit-identity check — an ENVIRONMENT property, not a
-#: data result, so caching it across invocations is sound.
-_SEQFOLD_GUARD_OK: dict[int, bool] = {}
+#: sessions (by SparkContext application id and start time) whose JVM
+#: passed the pow(x,2) == x*x bit-identity check — an ENVIRONMENT
+#: property, not a data result, so caching it across invocations is
+#: sound. Not keyed by ``id(sc)``: CPython reuses a freed object's id,
+#: so a new session could inherit a stopped one's entry and skip its
+#: check.
+_SEQFOLD_GUARD_OK: dict[tuple[str, int], bool] = {}
 
 
 def _assert_pow_square_identity(spark) -> None:
@@ -1514,7 +1515,7 @@ def _assert_pow_square_identity(spark) -> None:
     ``spark.spark_graft.seqfold_guard=off`` skips it."""
     if spark.conf.get("spark.spark_graft.seqfold_guard", "on") == "off":
         return
-    key = id(spark.sparkContext)
+    key = (spark.sparkContext.applicationId, spark.sparkContext.startTime)
     if _SEQFOLD_GUARD_OK.get(key):
         return
     v = (F.rand(7) * 2 - 1) * F.pow(

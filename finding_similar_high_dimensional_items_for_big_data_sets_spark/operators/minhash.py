@@ -3,10 +3,10 @@
 Spark-first design: the reference materializes a dense ``(N, 128)``
 uint64 NumPy matrix via a Python double loop (reference
 ``benchmarks/synth_data.py:38-60``). Here a signature is an
-``ARRAY<BIGINT>`` column computed entirely inside whole-stage codegen:
+``ARRAY<BIGINT>`` column built in two steps:
 
-    shingles -> hashed = transform(shingles, H)          (hash once)
-             -> sig_i  = min over hashed of (a_i*h + b_i) mod p
+    shingles -> hashed = transform(shingles, H)        (JVM: hash once)
+             -> sig_i  = min over hashed of (a_i*h + b_i) mod p  (numpy)
 
 This is **shuffle-free** — per-document array work, no explode/groupBy
 — so it scales linearly with the corpus and parallelizes per input
@@ -15,8 +15,12 @@ split. At 100 TB the signature build is a single map stage.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa  # module-level: arrow_udf resolves the kernel's type hints here
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import (
     EMPTY_SENTINEL,
@@ -49,51 +53,49 @@ def with_shingles(
     return docs.withColumn("shingles", shingles_col(F.col(text_col), params))
 
 
+def sign_batch(hashed: pa.Array, a: np.ndarray, b: np.ndarray) -> pa.Array:
+    """:func:`signature_col` over one Arrow batch of hashed-shingle
+    lists: flattened once, then per permutation one numpy pass over
+    every cell (exact in int64: a, h < 2^31) and a per-row minimum."""
+    n, num_perm = len(hashed), len(a)
+    # flatten() honours slicing and skips values behind null rows,
+    # which count as empty here and are re-nulled by the mask
+    flat = hashed.flatten()
+    lengths = pc.list_value_length(hashed).fill_null(0).to_numpy()
+    if flat.null_count:  # drop null hashes from their rows
+        valid = flat.is_valid().to_numpy(zero_copy_only=False)
+        lengths = np.bincount(np.repeat(np.arange(n), lengths)[valid], minlength=n)
+    h = flat.drop_null().to_numpy()
+    nonempty = lengths > 0
+    starts = (np.cumsum(lengths) - lengths)[nonempty]
+    out = np.full((n, num_perm), EMPTY_SENTINEL, dtype=np.int64)
+    cell = np.empty_like(h)  # reused: allocation would cost as much as the math
+    for i in range(num_perm if h.size else 0):
+        np.multiply(h, a[i], out=cell)
+        cell += b[i]
+        cell %= MERSENNE31
+        out[nonempty, i] = np.minimum.reduceat(cell, starts)
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * num_perm)
+    return pa.ListArray.from_arrays(offsets, pa.array(out.ravel()), mask=hashed.is_null())
+
+
 def signature_col(shingles: Column, params: MinHashParams) -> Column:
     """ARRAY<BIGINT> MinHash signature of a shingle-array column.
 
     Reference semantics (``benchmarks/synth_data.py:38-55``): per
     permutation i, min over shingles x of ``(a_i*H(x)+b_i) mod p``;
-    empty shingle set -> sentinel (max field value).
-
-    Implementation note: the permutation coefficients enter the plan as
-    ONE literal array of (a, b) structs and the whole signature is a
-    single fused fold — not 128 separate expressions. Evaluation order::
-
-        hashed = transform(shingles, H)            -- S hash calls
-        sig    = aggregate(hashed, [sentinel]*P,
-                   (acc, h) -> zip_with(acc, coeffs, (x, c) ->
-                     least(x, (c.a*h + c.b) mod p)))
-
-    Each shingle is hashed exactly once and each (shingle, perm) cell
-    computed exactly once (the reference's NumPy loop does the same
-    work, ``benchmarks/synth_data.py:47-54``) — and the fold never
-    materializes the S x P permutation matrix, only one P-length
-    accumulator per step (~30% faster than the matrix-then-reduce form
-    at sf0.1). The flat tree also keeps Catalyst optimize time O(1) in
-    num_perm instead of O(num_perm) — the naive 128-column form costs
-    minutes of planning per query.
+    empty shingle set -> sentinel (max field value); null -> null; a
+    null shingle hash is skipped. Shingles are hashed in the JVM (the
+    portable family stays DuckDB-identical) and permuted by the Arrow
+    kernel :func:`sign_batch`: Spark would run a higher-order-function
+    fold interpreted (CodegenFallback), one boxed call per cell.
     """
-    a, b = perm_coeffs(params.num_perm, params.seed)
-    coeffs = F.array(
-        *[
-            F.struct(
-                F.lit(a[i]).cast("long").alias("a"), F.lit(b[i]).cast("long").alias("b")
-            )
-            for i in range(params.num_perm)
-        ]
-    )
+    a, b = (np.asarray(c, dtype=np.int64) for c in perm_coeffs(params.num_perm, params.seed))
+    def sign(hashed: pa.Array) -> pa.Array:
+        return sign_batch(hashed, a, b)
+
     hashed = F.transform(shingles, lambda s: shingle_hash(s, params.hash_family))
-    init = F.array_repeat(F.lit(EMPTY_SENTINEL).cast("long"), params.num_perm)
-    return F.aggregate(
-        hashed,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            coeffs,
-            lambda x, c: F.least(x, F.pmod(c["a"] * h + c["b"], F.lit(MERSENNE31))),
-        ),
-    )
+    return F.arrow_udf(sign, ArrayType(LongType()))(hashed)
 
 
 def with_signature(
@@ -125,6 +127,4 @@ def signatures_long(
     engines); the array form is the production layout.
     """
     sigs = signatures(docs, params, id_col, text_col)
-    return sigs.select(
-        id_col, F.posexplode("sig").alias("perm_id", "sig_value")
-    )
+    return sigs.select(id_col, F.posexplode("sig").alias("perm_id", "sig_value"))

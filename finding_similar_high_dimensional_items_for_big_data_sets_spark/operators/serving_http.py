@@ -170,50 +170,65 @@ def _reload_locked(spark, holders, payload) -> tuple[int, dict]:
     return (500 if failed else 200), {"indexes": report}
 
 
-def _make_handler(routes: dict, health):
+class _Handler(BaseHTTPRequestHandler):
     """ONE HTTP handler for every server in this module, so the body
     parsing, dispatch, reply, and logging behavior cannot diverge
-    between tiers. ``routes``: path -> ``payload -> (status, body)``
-    for POST; ``health``: ``() -> (status, body)`` for ``GET
-    /health``."""
+    between tiers. It reads its server's ``routes`` (path -> ``payload
+    -> (status, body)`` for POST) and ``health`` (``() -> (status,
+    body)`` for ``GET /health``)."""
 
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):  # noqa: N802 (http.server API)
-            handle = routes.get(self.path.rstrip("/"))
-            if handle is None:
-                self._reply(404, {"error": "not found"})
-                return
-            try:
-                length = int(self.headers.get("Content-Length", 0))
-                payload = json.loads(self.rfile.read(length) or b"null")
-            except (ValueError, json.JSONDecodeError):
-                self._reply(400, {"error": "invalid JSON body"})
-                return
-            status, body = handle(payload)
-            self._reply(status, body)
+    def do_POST(self):  # noqa: N802 (http.server API)
+        handle = self.server.routes.get(self.path.rstrip("/"))
+        if handle is None:
+            self._reply(404, {"error": "not found"})
+            return
+        try:
+            length = int(self.headers.get("Content-Length", 0))
+            payload = json.loads(self.rfile.read(length) or b"null")
+        except (ValueError, json.JSONDecodeError):
+            self._reply(400, {"error": "invalid JSON body"})
+            return
+        status, body = handle(payload)
+        self._reply(status, body)
 
-        def do_GET(self):  # noqa: N802
-            if self.path.rstrip("/") == "/health":
-                self._reply(*health())
-            else:
-                self._reply(404, {"error": "not found"})
+    def do_GET(self):  # noqa: N802
+        health = self.server.health
+        if self.path.rstrip("/") == "/health" and health is not None:
+            self._reply(*health())
+        else:
+            self._reply(404, {"error": "not found"})
 
-        def _reply(self, status: int, body: dict) -> None:
-            data = json.dumps(body).encode("utf-8")
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
+    def _reply(self, status: int, body: dict) -> None:
+        data = json.dumps(body).encode("utf-8")
+        self.send_response(status)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(data)))
+        self.end_headers()
+        self.wfile.write(data)
 
-        def log_message(self, fmt, *args):  # silence per-request stderr
-            pass
-
-    return Handler
+    def log_message(self, fmt, *args):  # silence per-request stderr
+        pass
 
 
-def _serve(handler, host: str, port: int):
-    server = ThreadingHTTPServer((host, port), handler)
+class _Server(ThreadingHTTPServer):
+    """A server that lets go of what it serves when closed: the routes
+    and health closures hold the service and so its index, and a
+    stopped replica must free that index at once, not whenever a full
+    cyclic garbage collection next runs."""
+
+    def __init__(self, address, routes: dict, health):
+        super().__init__(address, _Handler)
+        self.routes = routes
+        self.health = health
+
+    def server_close(self) -> None:
+        super().server_close()
+        self.routes, self.health = {}, None
+        self.service = self.hybrid_service = None
+
+
+def _serve(routes: dict, health, host: str, port: int):
+    server = _Server((host, port), routes, health)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server, thread
@@ -235,21 +250,19 @@ def start_server(
     holders = [("lsh", lambda: service.index, _set_index)]
     reload_lock = threading.Lock()
     server, thread = _serve(
-        _make_handler(
-            {
-                "/query": service.handle_query,
-                "/reload": lambda p: _handle_reload(
-                    spark, holders, p, reload_lock
-                ),
-            },
-            lambda: (
-                200,
-                {
-                    "status": "ok",
-                    "n_docs": int(service.index.doc_ids.size),
-                    "stale": _staleness(spark, holders),
-                },
+        {
+            "/query": service.handle_query,
+            "/reload": lambda p: _handle_reload(
+                spark, holders, p, reload_lock
             ),
+        },
+        lambda: (
+            200,
+            {
+                "status": "ok",
+                "n_docs": int(service.index.doc_ids.size),
+                "stale": _staleness(spark, holders),
+            },
         ),
         host,
         port,
@@ -327,21 +340,19 @@ def start_vector_server(
     holders = [("vector", lambda: service.index, _set_index)]
     reload_lock = threading.Lock()
     server, thread = _serve(
-        _make_handler(
-            {
-                "/query": service.handle_query,
-                "/reload": lambda p: _handle_reload(
-                    spark, holders, p, reload_lock
-                ),
-            },
-            lambda: (
-                200,
-                {
-                    "status": "ok",
-                    "n_vecs": int(service.index.vec_ids.size),
-                    "stale": _staleness(spark, holders),
-                },
+        {
+            "/query": service.handle_query,
+            "/reload": lambda p: _handle_reload(
+                spark, holders, p, reload_lock
             ),
+        },
+        lambda: (
+            200,
+            {
+                "status": "ok",
+                "n_vecs": int(service.index.vec_ids.size),
+                "stale": _staleness(spark, holders),
+            },
         ),
         host,
         port,
@@ -468,17 +479,15 @@ def start_lexical_server(
     if hybrid_service is not None:
         routes["/hybrid"] = hybrid_service.handle_query
     server, thread = _serve(
-        _make_handler(
-            routes,
-            lambda: (
-                200,
-                {
-                    "status": "ok",
-                    "n_docs": int(lex_service.index.n_docs),
-                    "hybrid": hybrid_service is not None,
-                    "stale": _staleness(spark, holders),
-                },
-            ),
+        routes,
+        lambda: (
+            200,
+            {
+                "status": "ok",
+                "n_docs": int(lex_service.index.n_docs),
+                "hybrid": hybrid_service is not None,
+                "stale": _staleness(spark, holders),
+            },
         ),
         host,
         port,
@@ -917,15 +926,13 @@ def start_router_server(
     as :func:`start_server`."""
     service = RouterService(tier, replicas, vector_replicas, timeout)
     server, thread = _serve(
-        _make_handler(
-            {
-                "/query": service.handle_query,
-                "/query_batch": service.handle_query_batch,
-                "/hybrid": service.handle_hybrid,
-                "/reload": service.handle_reload,
-            },
-            service.handle_health,
-        ),
+        {
+            "/query": service.handle_query,
+            "/query_batch": service.handle_query_batch,
+            "/hybrid": service.handle_hybrid,
+            "/reload": service.handle_reload,
+        },
+        service.handle_health,
         host,
         port,
     )

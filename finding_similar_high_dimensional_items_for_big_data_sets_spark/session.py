@@ -43,8 +43,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for the few pandas-UDF paths (multimodal stubs, bit-compat
-        # hash family); everything hot stays JVM-side.
+        # Arrow for the Python paths: the MinHash signing kernel, the
+        # mapInPandas scorers and encoders, the multimodal stubs and the
+        # bit-compat hash family.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # The events fixture stores ts with isAdjustedToUTC=0; Spark's NTZ

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,9 @@ from finding_similar_high_dimensional_items_for_big_data_sets_spark.config impor
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.arrays import (
     est_jaccard,
 )
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.hashing import (
+    shingle_hash,
+)
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import lsh, minhash
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import load_table
 
@@ -29,10 +34,27 @@ def py_portable_hash(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-def py_signature(text: str, params: MinHashParams = PARAMS) -> list[int]:
+def py_shingles(text: str, params: MinHashParams) -> list[str]:
+    k = params.k_shingle
+    if params.by_word:
+        tokens = [t for t in text.split(" ") if t]
+        if k > 1 and len(tokens) < k:
+            return [" ".join(tokens)]
+        grams = [" ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)]
+    else:
+        grams = [text] if len(text) < k else [text[i : i + k] for i in range(len(text) - k + 1)]
+    return list(dict.fromkeys(grams))
+
+
+def py_signature(
+    text: str | None, params: MinHashParams = PARAMS, hash_of=None
+) -> list[int] | None:
+    """``hash_of``: shingle -> field hash; the portable md5 family when None."""
+    if text is None:
+        return None
     a, b = perm_coeffs(params.num_perm, params.seed)
-    shingles = list(dict.fromkeys(t for t in text.split(" ") if t))
-    hs = [py_portable_hash(s) % MERSENNE31 for s in shingles]
+    hash_of = hash_of or (lambda s: py_portable_hash(s) % MERSENNE31)
+    hs = [hash_of(s) for s in py_shingles(text, params)]
     if not hs:
         return [MERSENNE31] * params.num_perm
     return [min((a[i] * h + b[i]) % MERSENNE31 for h in hs) for i in range(params.num_perm)]
@@ -48,11 +70,56 @@ def sigs(docs):
     return minhash.signatures(docs, PARAMS).cache()
 
 
-def test_signature_matches_python_oracle(docs, sigs):
+def test_signature_matches_python_oracle(spark, docs, sigs):
     sample = docs.filter(F.col("doc_id").isin([0, 7, 42])).select("doc_id", "text").collect()
     got = {r["doc_id"]: r["sig"] for r in sigs.filter(F.col("doc_id").isin([0, 7, 42])).collect()}
     for row in sample:
         assert got[row["doc_id"]] == py_signature(row["text"]), f"doc {row['doc_id']}"
+
+    # Edge texts (null, empty, blank, shorter than k) among real docs,
+    # for every shingling, hash family and width; Arrow batches of 7
+    # rows over 3 partitions, so each partition arrives in several.
+    texts = [r["text"] for r in docs.filter("doc_id < 40").orderBy("doc_id").collect()]
+    texts += [None, "", "   ", "solo", "x y", "x  y x"]
+    edge = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    edge = edge.repartition(3)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for params in (
+            PARAMS,
+            MinHashParams(k_shingle=3),
+            MinHashParams(by_word=False, k_shingle=3),
+            MinHashParams(hash_family="xxhash64"),
+            MinHashParams(num_perm=64),
+        ):
+            got = dict(map(tuple, minhash.signatures(edge, params).collect()))
+            hash_of = None
+            if params.hash_family != PARAMS.hash_family:
+                # hashing stays in the JVM; the oracle checks the permutations
+                shingles = sorted({s for t in texts if t is not None for s in py_shingles(t, params)})
+                jvm = spark.createDataFrame([(s,) for s in shingles], "s string").select(
+                    "s", shingle_hash(F.col("s"), params.hash_family).alias("h")
+                )
+                hash_of = dict(map(tuple, jvm.collect())).__getitem__
+            for i, text in enumerate(texts):
+                assert got[i] == py_signature(text, params, hash_of), (params, text)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+
+    # Spark hands the kernel whole batches; sliced batches and null
+    # hashes reach it only through the Arrow API, so check those here
+    a, b = (np.asarray(c) for c in perm_coeffs(PARAMS.num_perm, PARAMS.seed))
+    hashed = [
+        None if t is None else [py_portable_hash(s) % MERSENNE31 for s in py_shingles(t, PARAMS)]
+        for t in texts
+    ]
+    want = [py_signature(t) for t in texts]
+    hashed.insert(1, [None, *hashed[0], None])
+    want.insert(1, want[0])
+    batch = pa.array(hashed, type=pa.list_(pa.int64()))
+    for start in range(0, len(batch), 5):
+        got = minhash.sign_batch(batch.slice(start, 9), a, b).to_pylist()
+        assert got == want[start : start + 9], start
 
 
 def test_signature_bit_stable(docs):

@@ -348,9 +348,7 @@ def test_ivfpq_hkm_encode_search_and_store(spark, tmp_path):
 
     emb = _emb(spark).cache()
     n = emb.count()
-    tree = ann.hkm_train_df(
-        emb, n_leaves=16, branch=4, seed=43, sample_size=4096, n_rows=n
-    )
+    tree = ann.hkm_train_df(emb, n_leaves=16, branch=4, seed=43, sample_size=4096)
     books = ann.random_codebooks(DIM, M, CODES, seed=44)
     rows = {
         r["vec_id"]: (r["cell"], list(r["codes"]))
@@ -395,10 +393,7 @@ def test_ivfpq_topk_batch_matches_point_path(spark):
     books = ann.random_codebooks(DIM, M, CODES, seed=44)
     for quant in (
         ann.random_centroids(DIM, 16, seed=43),
-        ann.hkm_train_df(
-            emb, n_leaves=16, branch=4, seed=43, sample_size=4096,
-            n_rows=emb.count(),
-        ),
+        ann.hkm_train_df(emb, n_leaves=16, branch=4, seed=43, sample_size=4096),
     ):
         batch = ann.ivfpq_topk_batch(
             emb, qs, k=10, n_probe=4, centroids=quant, codebooks=books

@@ -4,9 +4,11 @@ exported serving index."""
 
 from __future__ import annotations
 
+import gc
 import json
 import urllib.error
 import urllib.request
+import weakref
 
 import pytest
 from pyspark.sql import functions as F
@@ -97,6 +99,30 @@ def test_health_and_404(endpoint):
     with pytest.raises(urllib.error.HTTPError) as ei:
         urllib.request.urlopen(url + "/nope")
     assert ei.value.code == 404
+
+
+def test_closed_server_frees_its_index(spark, sf_dir):
+    """A stopped replica lets go of its index at close, without waiting
+    for a cyclic garbage collection to find it."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
+    sigs = minhash.signatures(docs, PARAMS).cache()
+    index = ServingIndex.from_dataframes(sigs, lsh.bands_table(sigs, PARAMS), PARAMS)
+    sigs.unpersist()
+    alive = weakref.ref(index)
+    gc.disable()
+    try:
+        server, thread = serving_http.start_server(index)
+        del index
+        host, port = server.server_address
+        with urllib.request.urlopen(f"http://{host}:{port}/health") as resp:
+            assert json.loads(resp.read())["status"] == "ok"
+        server.shutdown()
+        server.server_close()
+        thread.join(timeout=10)
+        assert not thread.is_alive()
+        assert alive() is None
+    finally:
+        gc.enable()
 
 
 def test_reload_is_mutually_exclusive(spark, sf_dir):
