@@ -248,6 +248,31 @@ def score_candidates_vectorized(
     )
 
 
+def _collect_sig_matrix(sigs: DataFrame, id_col: str = "doc_id", max_rows: int | None = None):
+    """One Arrow read of ``sigs`` into ``(ids, matrix)``, sorted by id.
+
+    Null signatures are dropped: they score null against everything,
+    so no pair or top-k row can involve them. With ``max_rows`` the
+    read is capped at ``max_rows + 1`` rows and None comes back when
+    the table holds more, so one bounded read both decides the
+    driver-fit gate and feeds the matrix.
+    """
+    import numpy as np
+
+    q = sigs.select(id_col, "sig")
+    if max_rows is not None:
+        q = q.limit(max_rows + 1)
+    pdf = q.toPandas()
+    if max_rows is not None and len(pdf) > max_rows:
+        return None
+    pdf = pdf[pdf["sig"].notna()]
+    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    order = np.argsort(ids)
+    if len(order) == 0:
+        return ids, np.empty((0, 0), dtype=np.int64)
+    return ids[order], np.vstack(pdf["sig"].to_numpy()[order])
+
+
 def broadcast_sig_matrix(sigs: DataFrame, id_col: str = "doc_id"):
     """Collect a signature table into a broadcast (ids, matrix) pair,
     sorted by id, for the matrix pair scorer.
@@ -259,13 +284,7 @@ def broadcast_sig_matrix(sigs: DataFrame, id_col: str = "doc_id"):
     :data:`VECTORIZE_MAX_SIGS` regime); beyond that, use the join
     scorers, which never materialize the corpus on the driver.
     """
-    import numpy as np
-
-    rows = sigs.select(id_col, "sig").collect()
-    order = sorted(range(len(rows)), key=lambda i: rows[i][id_col])
-    ids = np.array([rows[i][id_col] for i in order], dtype=np.int64)
-    mat = np.array([rows[i]["sig"] for i in order], dtype=np.int64)
-    return sigs.sparkSession.sparkContext.broadcast((ids, mat))
+    return sigs.sparkSession.sparkContext.broadcast(_collect_sig_matrix(sigs, id_col))
 
 
 def score_topk_candidates_matrix(
@@ -464,7 +483,6 @@ def band_pair_candidates(
     bands: DataFrame,
     min_bands: int = 1,
     id_col: str = "doc_id",
-    explode_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from a band-bucket self-match: (doc_a, doc_b)
     with doc_a < doc_b sharing >= ``min_bands`` (band_id, band_hash)
@@ -478,10 +496,9 @@ def band_pair_candidates(
     O(sum |bucket|^2) explosion would otherwise run nearly
     single-threaded (measured 14.1s -> 2.7s at sf0.1, 36.9M generated
     rows). Shuffling bucket rows is cheap (one row per bucket); the
-    explosion then spreads across ``explode_partitions`` tasks
-    (default 8x defaultParallelism).
+    explosion then spreads across 8x defaultParallelism tasks.
     """
-    n = explode_partitions or bands.sparkSession.sparkContext.defaultParallelism * 8
+    n = bands.sparkSession.sparkContext.defaultParallelism * 8
     memb = (
         bands.groupBy("band_id", "band_hash")
         .agg(F.sort_array(F.collect_list(id_col)).alias("__m"))
@@ -519,61 +536,107 @@ def _score_pairs_fold(
     )
 
 
-def _score_pairs_vectorized(
-    pairs: DataFrame,
-    sigs: DataFrame,
+#: Above this many distinct signatures the band kernel is skipped
+#: (matrix no longer driver/executor-friendly) and the join+fold runs.
+VECTORIZE_MAX_SIGS = 200_000
+
+#: Within-bucket pairs the band kernel takes per numpy step. Bounds a
+#: task's working set (id gathers, band and signature compares) however
+#: large the biggest bucket is.
+PAIR_CHUNK = 1 << 14
+
+
+def _band_hash_matrix(bands: DataFrame, ids, n_bands: int):
+    """(N, bands) band-hash matrix aligned with the signature-matrix
+    rows ``ids``, plus a presence mask: False where a bucket cap
+    dropped the doc from that band's bucket, or the doc has no row in
+    the matrix."""
+    import numpy as np
+
+    pdf = bands.select("doc_id", "band_id", "band_hash").toPandas()
+    doc = pdf["doc_id"].to_numpy(dtype=np.int64)
+    band = pdf["band_id"].to_numpy(dtype=np.int64)
+    bhash = pdf["band_hash"].to_numpy(dtype=np.int64)
+    del pdf
+    row = np.searchsorted(ids, doc)
+    ok = row < len(ids)
+    ok[ok] = ids[row[ok]] == doc[ok]
+    hashes = np.zeros((len(ids), n_bands), dtype=np.int64)
+    present = np.zeros((len(ids), n_bands), dtype=bool)
+    hashes[row[ok], band[ok]] = bhash[ok]
+    present[row[ok], band[ok]] = True
+    return hashes, present
+
+
+def _band_kernel_pairs(
+    bands: DataFrame,
+    sig_matrix: tuple,
     params: MinHashParams,
     threshold: float,
-    rows: list | None = None,
 ) -> DataFrame:
-    """Score pairs against a broadcast signature matrix (numpy).
+    """The broadcast-regime self-join as ONE narrow Arrow stage.
 
-    The fold path ships BOTH 1 KB signatures through two joins per
-    pair (4.6 GB through the scoring stage for 2.3M pairs at sf0.1);
-    here only int64 ids shuffle, each doc's candidate list is scored
-    with one numpy broadcast-compare, and the signature matrix crosses
-    the cluster once as a broadcast. Match counts are integer sums, so
-    scores are bit-identical to the fold at any order — oracle-safe.
-    Caller guarantees the sig table fits on the driver (see
-    self_join_pairs' vectorize gate).
+    Each task takes whole bands (``spark.range`` over band ids: no
+    Exchange). Per band it sorts the bucket keys, enumerates the
+    within-bucket pairs with numpy, and keeps a pair only at the
+    LOWEST band where it shares a bucket and only if it shares
+    >= :func:`min_matching_bands` buckets: the band-collision count
+    happens where the buckets are (C2Net, ICDE 2019), so the output is
+    distinct with no pair shuffle. Survivors are scored against the
+    broadcast signature matrix and filtered at the threshold. Match
+    counts are integer sums, so scores are bit-identical to the JVM
+    fold — oracle-safe.
     """
     import numpy as np
     import pandas as pd
 
-    spark = pairs.sparkSession
-    num_perm = params.num_perm
-    if rows is None:
-        rows = sigs.select("doc_id", "sig").collect()
-    order = sorted(range(len(rows)), key=lambda i: rows[i]["doc_id"])
-    ids = np.array([rows[i]["doc_id"] for i in order], dtype=np.int64)
-    mat = np.array([rows[i]["sig"] for i in order], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    sc = bands.sparkSession.sparkContext
+    n_bands, num_perm = params.bands, params.num_perm
+    min_bands = min_matching_bands(threshold, params)
+    chunk = PAIR_CHUNK
+    sig_bc = sc.broadcast(sig_matrix)
+    band_bc = sc.broadcast(_band_hash_matrix(bands, sig_matrix[0], n_bands))
 
-    def score_iter(batches):
-        ids_l, mat_l = bc.value
+    def band_pairs(band, ids, mat, hashes, present):
+        rows = np.flatnonzero(present[:, band])
+        keys = hashes[rows, band]
+        order = np.argsort(keys, kind="stable")
+        # stable sort of ascending rows: bucket members stay id-ordered
+        rows, keys = rows[order], keys[order]
+        starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+        sizes = np.diff(np.r_[starts, len(keys)])
+        # partners after each position within its bucket
+        after = np.repeat(starts + sizes, sizes) - np.arange(len(keys)) - 1
+        pos = np.flatnonzero(after)
+        after = after[pos]
+        first = np.cumsum(after) - after
+        total = int(after.sum())
+        for k0 in range(0, total, chunk):
+            k = np.arange(k0, min(k0 + chunk, total))
+            i = np.searchsorted(first, k, side="right") - 1
+            ra = rows[pos[i]]
+            rb = rows[pos[i] + 1 + k - first[i]]
+            shared = (hashes[ra] == hashes[rb]) & present[ra] & present[rb]
+            keep = (shared.argmax(axis=1) == band) & (shared.sum(axis=1) >= min_bands)
+            ra, rb = ra[keep], rb[keep]
+            score = (mat[ra] == mat[rb]).sum(axis=1) / num_perm
+            hit = score >= threshold
+            if hit.any():
+                yield pd.DataFrame(
+                    {"doc_a": ids[ra[hit]], "doc_b": ids[rb[hit]], "score": score[hit]}
+                )
+
+    def pairs_iter(batches):
+        ids, mat = sig_bc.value
+        hashes, present = band_bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ia = np.searchsorted(ids_l, pdf["doc_a"].values.astype(np.int64))
-            ib = np.searchsorted(ids_l, pdf["doc_b"].values.astype(np.int64))
-            scores = (mat_l[ia] == mat_l[ib]).sum(axis=1) / num_perm
-            yield pd.DataFrame(
-                {
-                    "doc_a": pdf["doc_a"].values,
-                    "doc_b": pdf["doc_b"].values,
-                    "score": scores,
-                }
-            )
+            for band in pdf["id"].to_numpy():
+                yield from band_pairs(int(band), ids, mat, hashes, present)
 
-    return (
-        pairs.mapInPandas(score_iter, "doc_a long, doc_b long, score double")
-        .filter(F.col("score") >= threshold)
+    n_tasks = max(1, min(n_bands, sc.defaultParallelism))
+    return bands.sparkSession.range(0, n_bands, 1, n_tasks).mapInPandas(
+        pairs_iter, "doc_a long, doc_b long, score double"
     )
-
-
-#: Above this many distinct signatures the broadcast scorer is skipped
-#: (matrix no longer driver/executor-friendly) and the join+fold runs.
-VECTORIZE_MAX_SIGS = 200_000
 
 
 def _self_join_pairs_raw(
@@ -584,19 +647,12 @@ def _self_join_pairs_raw(
     n_docs: int | None = None,
 ) -> DataFrame:
     """The uncompressed band-bucket self-match (see self_join_pairs)."""
+    if n_docs is None or n_docs <= VECTORIZE_MAX_SIGS:
+        # one bounded read decides the gate and IS the matrix input
+        sig_matrix = _collect_sig_matrix(sigs, max_rows=VECTORIZE_MAX_SIGS)
+        if sig_matrix is not None:
+            return _band_kernel_pairs(bands, sig_matrix, params, threshold)
     pairs = band_pair_candidates(bands, min_matching_bands(threshold, params))
-    rows = None
-    if n_docs is None:
-        # one limited collect replaces the old count probe + the
-        # scorer's own collect: if everything fit under the gate these
-        # rows ARE the matrix input; past the gate they're discarded
-        # (a bounded, early-terminating read either way).
-        rows = sigs.select("doc_id", "sig").limit(VECTORIZE_MAX_SIGS + 1).collect()
-        n_docs = len(rows)
-        if n_docs > VECTORIZE_MAX_SIGS:
-            rows = None
-    if n_docs <= VECTORIZE_MAX_SIGS:
-        return _score_pairs_vectorized(pairs, sigs, params, threshold, rows=rows)
     return _score_pairs_fold(pairs, sigs, params, threshold)
 
 
@@ -621,11 +677,13 @@ def self_join_pairs(
 
     Returns (doc_a, doc_b, score) with doc_a < doc_b, distinct pairs.
 
-    Scale notes: the band-bucket self-join is the classic LSH dedup
-    shape — shuffle on (band_id, band_hash); the pair dedup is a
-    groupBy that *counts matching bands*, and :func:`min_matching_bands`
-    prunes pairs that cannot reach the threshold before any signature
-    is fetched.
+    Scale notes: up to :data:`VECTORIZE_MAX_SIGS` signatures the
+    signature and band-hash matrices are broadcast and one band-parallel
+    kernel enumerates, dedups and scores the pairs with no shuffle
+    (:func:`_band_kernel_pairs`). Beyond it the classic LSH dedup shape
+    runs: shuffle on (band_id, band_hash); the pair dedup is a groupBy
+    that *counts matching bands*. Both regimes prune with
+    :func:`min_matching_bands` before any signature is compared.
 
     ``compress_identical`` (default on) runs the quadratic part on one
     representative per DISTINCT signature and expands groups back at

@@ -12,6 +12,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Driver heap ceiling: room for 32 concurrent local task threads.
+MAX_DRIVER_MEMORY_MB = 24 * 1024
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``$SPARK_DRIVER_MEMORY`` when set; otherwise half the host's
+    ``MemTotal``, capped at 24g (the cap alone when ``meminfo`` is
+    unreadable). A heap sized past the host's memory lets a long
+    session grow the JVM until the kernel kills it."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{max(1024, min(MAX_DRIVER_MEMORY_MB, total_kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "fshdi-spark",
     master: str | None = None,
@@ -57,8 +78,13 @@ def get_spark(
         .config("spark.sql.ui.explainMode", "formatted")
         .config("spark.ui.showConsoleProgress", "false")
         # local[N] runs executors inside the driver JVM; size the heap
-        # for N concurrent task threads (32 threads at 8g thrash GC).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # for N concurrent task threads (32 threads at 8g thrash GC),
+        # but never past half the host's memory.
+        .config("spark.driver.memory", driver_memory())
+        # Python workers start through this package's daemon, which stops
+        # every task from re-reading each zip archive on sys.path
+        # (pyspark.zip included); see worker_daemon.
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -38,10 +38,13 @@ def _scan_splits_estimate(spark: SparkSession, path: str, cap: int) -> int:
     """Estimated scan split count from file METADATA (one FS listing —
     no plan->RDD conversion, which cost ~40 ms per fresh DataFrame and
     re-planned the scan on every load_table call). Mirrors Spark's
-    FilePartition packing: each file is charged openCostInBytes and
-    sizes bin-pack into maxPartitionBytes bins. Returns early once
-    ``cap`` splits are accounted for (a big table never pays a full
-    walk)."""
+    FilePartition sizing: every data file, at any depth (partitioned
+    layouts nest them under ``key=value`` directories), is charged its
+    length plus openCostInBytes, and the bin size is
+    ``min(maxPartitionBytes, max(openCost, total / defaultParallelism))``.
+    The split count only grows with the bytes charged, so the walk
+    returns early once ``cap`` splits are accounted for (a big table
+    never pays a full walk). 0 means no data files were found."""
     jvm = spark._jvm
     as_bytes = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
     max_pb = as_bytes(
@@ -50,19 +53,29 @@ def _scan_splits_estimate(spark: SparkSession, path: str, cap: int) -> int:
     open_cost = as_bytes(
         spark.conf.get("spark.sql.files.openCostInBytes", "4m")
     )
+    cores = max(1, spark.sparkContext.defaultParallelism)
+
+    def splits(total: int) -> int:
+        # ceil(total / bin), written so it visibly never decreases
+        return max(-(-total // max_pb), min(-(-total // open_cost), cores))
+
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     charged = 0
-    it = fs.listStatusIterator(jpath)
-    while it.hasNext():
-        st = it.next()
-        base = st.getPath().getName()
-        if not st.isFile() or base.startswith(("_", ".")):
-            continue
-        charged += st.getLen() + open_cost
-        if charged >= cap * max_pb:
-            return cap
-    return max(1, -(-charged // max_pb))
+    pending = [jpath]
+    while pending:
+        it = fs.listStatusIterator(pending.pop())
+        while it.hasNext():
+            st = it.next()
+            if st.getPath().getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                pending.append(st.getPath())
+                continue
+            charged += st.getLen() + open_cost
+            if splits(charged) >= cap:
+                return cap
+    return splits(charged)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -105,7 +118,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # from file metadata, not df.rdd (which converted the plan to
         # an RDD on every call).
         target = spark.sparkContext.defaultParallelism
-        if _scan_splits_estimate(spark, path, target) < target:
+        if 0 < _scan_splits_estimate(spark, path, target) < target:
             df = df.repartition(target)
     return df
 

@@ -132,15 +132,33 @@ def test_dedup_pairs_band_join_shuffles_on_compact_key_only(spark, index):
     sigs, bands = index
     # raw path: the compressed variant adds ONE deliberate groupBy on
     # the sig column (the distinct-signature build), which would muddy
-    # this audit of the band join itself
+    # this audit of the band join itself. A hint past the broadcast
+    # gate selects the fold regime, the one that shuffles.
     pairs = lsh.self_join_pairs(
-        bands, sigs, PARAMS, 0.8, n_docs=500, compress_identical=False
+        bands,
+        sigs,
+        PARAMS,
+        0.8,
+        n_docs=lsh.VECTORIZE_MAX_SIGS + 1,
+        compress_identical=False,
     )
     plan = _plan(pairs)
     # the quadratic stage groups bucket members: the shuffle key is the
     # compact (band_id, band_hash) pair, never signature payloads
     assert "Exchange hashpartitioning(band_id" in plan
     assert "Exchange hashpartitioning(sig" not in plan
+
+
+def test_dedup_pairs_broadcast_regime_never_shuffles(spark, index):
+    sigs, bands = index
+    pairs = lsh.self_join_pairs(
+        bands, sigs, PARAMS, 0.8, n_docs=500, compress_identical=False
+    )
+    plan = _plan(pairs)
+    # one narrow kernel stage over a band-id range: nothing to shuffle,
+    # nothing for AQE to coalesce
+    assert "MapInPandas" in plan and "Range" in plan
+    assert "Exchange" not in plan
 
 
 def _count_jobs(spark, group: str, fn) -> int:
