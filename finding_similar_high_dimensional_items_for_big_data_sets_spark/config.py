@@ -16,7 +16,7 @@ Parameters mirror the reference's shipped ``data/minhash_meta.pkl``:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -71,9 +71,6 @@ class MinHashParams:
     @property
     def rows_per_band(self) -> int:
         return self.num_perm // self.bands
-
-    def with_family(self, family: str) -> "MinHashParams":
-        return replace(self, hash_family=family)
 
 
 def perm_coeffs(num_perm: int = 128, seed: int = 42) -> tuple[list[int], list[int]]:

@@ -26,6 +26,9 @@ are broadcast joins (zero shuffle); batch probes shuffle on
 
 from __future__ import annotations
 
+from dataclasses import replace
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -86,8 +89,11 @@ def cap_buckets(bands: DataFrame, cap: int, id_col: str = "doc_id") -> DataFrame
 
 
 def query_bands(query_sigs: DataFrame, params: MinHashParams, id_col: str = "query_id") -> DataFrame:
-    """Band rows for a set of query signatures (same banding as the corpus)."""
-    return bands_table(query_sigs, params.with_family(params.hash_family), id_col)
+    """Band rows for a set of query signatures (same banding as the
+    corpus). Never capped: the bucket cap bounds the corpus side, and
+    capping queries would drop every query past the cap that shares a
+    bucket with the others."""
+    return bands_table(query_sigs, replace(params, max_bucket_size=None), id_col)
 
 
 def candidates(
@@ -248,34 +254,103 @@ def score_candidates_vectorized(
     )
 
 
-def _collect_sig_matrix(sigs: DataFrame, id_col: str = "doc_id", max_rows: int | None = None):
-    """One Arrow read of ``sigs`` into ``(ids, matrix)``, sorted by id.
-
-    Null signatures are dropped: they score null against everything,
-    so no pair or top-k row can involve them. With ``max_rows`` the
-    read is capped at ``max_rows + 1`` rows and None comes back when
-    the table holds more, so one bounded read both decides the
-    driver-fit gate and feeds the matrix.
+def _read_sigs(sigs: DataFrame, id_col: str = "doc_id", max_rows: int | None = None):
+    """One Arrow read of ``sigs`` -> ``(ids, valid, matrix)``: every id
+    ascending, a mask of the ids whose signature is not null, and the
+    matrix of those signatures in id order. With ``max_rows`` the read
+    is capped at ``max_rows + 1`` rows and None comes back when the
+    table holds more, so one bounded read both decides the driver-fit
+    gate and feeds the matrix.
     """
     import numpy as np
 
     q = sigs.select(id_col, "sig")
     if max_rows is not None:
         q = q.limit(max_rows + 1)
-    pdf = q.toPandas()
-    if max_rows is not None and len(pdf) > max_rows:
+    t = q.toArrow()
+    if max_rows is not None and t.num_rows > max_rows:
         return None
-    pdf = pdf[pdf["sig"].notna()]
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    order = np.argsort(ids)
-    if len(order) == 0:
-        return ids, np.empty((0, 0), dtype=np.int64)
-    return ids[order], np.vstack(pdf["sig"].to_numpy()[order])
+    ids = t.column(id_col).to_numpy()
+    order = np.argsort(ids, kind="stable")
+    valid = t.column("sig").is_valid().to_numpy()[order]
+    rows = t.column("sig").to_numpy()[order][valid]
+    mat = np.vstack(rows) if len(rows) else np.empty((0, 0), dtype=np.int64)
+    return ids[order], valid, mat
+
+
+class IndexExport(NamedTuple):
+    """The in-memory LSH index: the sigs/bands tables stacked into
+    matrices, as each reference worker stacks its shard into one local
+    banding index (``app/src/worker_tasks.py:84-117``)."""
+
+    ids: object  # (N,) int64, ascending
+    sigs: object  # (N, num_perm) int64, row i <-> ids[i]
+    hashes: object  # (N, bands) int64 band keys
+    present: object  # (N, bands) bool: False where the bucket cap removed the pair
+
+
+def export_index(
+    sigs: DataFrame, bands: DataFrame, n_bands: int, max_rows: int | None = None
+) -> IndexExport | None:
+    """Export the sigs/bands tables to one :class:`IndexExport`.
+
+    One Arrow read of each table. Null signatures score null against
+    everything, so they are dropped together with their band rows. A
+    band row whose doc_id has no signature row at all (the
+    append_to_index crash window) raises: mapping it anyway would put
+    another document's row into the bucket. A (doc, band) pair that the
+    bucket cap removed is absent (``present`` False). ``max_rows`` is
+    :func:`_read_sigs`' bounded read; None comes back past it, before
+    the bands are read.
+    """
+    import numpy as np
+
+    read = _read_sigs(sigs, max_rows=max_rows)
+    if read is None:
+        return None
+    ids, valid, mat = read
+    t = bands.select("doc_id", "band_id", "band_hash").toArrow()
+    doc = t.column("doc_id").to_numpy()
+    row = np.searchsorted(ids, doc)
+    orphan = row >= len(ids)
+    orphan[~orphan] = ids[row[~orphan]] != doc[~orphan]
+    if orphan.any():
+        raise ValueError(
+            f"banded doc_ids {np.unique(doc[orphan])[:5].tolist()} "
+            "have no signature row — partial append? run "
+            "sources.tables.validate_index and repair before export"
+        )
+    keep = valid[row]
+    row = (np.cumsum(valid) - 1)[row[keep]]
+    band = t.column("band_id").to_numpy()[keep]
+    hashes = np.zeros((len(mat), n_bands), dtype=np.int64)
+    present = np.zeros((len(mat), n_bands), dtype=bool)
+    hashes[row, band] = t.column("band_hash").to_numpy()[keep]
+    present[row, band] = True
+    return IndexExport(ids[valid], mat, hashes, present)
+
+
+def band_buckets(hashes, present, band: int):
+    """One band's buckets: ``(rows, keys, starts, sizes)``, the band's
+    present rows stably sorted by key (so each bucket's members stay in
+    ascending id order), and each bucket's start and size in that
+    order. The one grouping the self-join kernel and the serving export
+    share."""
+    import numpy as np
+
+    rows = np.flatnonzero(present[:, band])
+    keys = hashes[rows, band]
+    order = np.argsort(keys, kind="stable")
+    rows, keys = rows[order], keys[order]
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]][: len(keys)])
+    sizes = np.diff(np.r_[starts, len(keys)])
+    return rows, keys, starts, sizes
 
 
 def broadcast_sig_matrix(sigs: DataFrame, id_col: str = "doc_id"):
     """Collect a signature table into a broadcast (ids, matrix) pair,
-    sorted by id, for the matrix pair scorer.
+    sorted by id, for the matrix pair scorer. Null signatures are
+    dropped.
 
     Part of the PREBUILT index (reference analog: the in-memory numpy
     index its 6.1 ms/query figure assumes, built once at startup,
@@ -284,7 +359,8 @@ def broadcast_sig_matrix(sigs: DataFrame, id_col: str = "doc_id"):
     :data:`VECTORIZE_MAX_SIGS` regime); beyond that, use the join
     scorers, which never materialize the corpus on the driver.
     """
-    return sigs.sparkSession.sparkContext.broadcast(_collect_sig_matrix(sigs, id_col))
+    ids, valid, mat = _read_sigs(sigs, id_col)
+    return sigs.sparkSession.sparkContext.broadcast((ids[valid], mat))
 
 
 def score_topk_candidates_matrix(
@@ -546,67 +622,35 @@ VECTORIZE_MAX_SIGS = 200_000
 PAIR_CHUNK = 1 << 14
 
 
-def _band_hash_matrix(bands: DataFrame, ids, n_bands: int):
-    """(N, bands) band-hash matrix aligned with the signature-matrix
-    rows ``ids``, plus a presence mask: False where a bucket cap
-    dropped the doc from that band's bucket, or the doc has no row in
-    the matrix."""
-    import numpy as np
-
-    pdf = bands.select("doc_id", "band_id", "band_hash").toPandas()
-    doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-    band = pdf["band_id"].to_numpy(dtype=np.int64)
-    bhash = pdf["band_hash"].to_numpy(dtype=np.int64)
-    del pdf
-    row = np.searchsorted(ids, doc)
-    ok = row < len(ids)
-    ok[ok] = ids[row[ok]] == doc[ok]
-    hashes = np.zeros((len(ids), n_bands), dtype=np.int64)
-    present = np.zeros((len(ids), n_bands), dtype=bool)
-    hashes[row[ok], band[ok]] = bhash[ok]
-    present[row[ok], band[ok]] = True
-    return hashes, present
-
-
 def _band_kernel_pairs(
-    bands: DataFrame,
-    sig_matrix: tuple,
-    params: MinHashParams,
-    threshold: float,
+    spark, index: IndexExport, params: MinHashParams, threshold: float
 ) -> DataFrame:
     """The broadcast-regime self-join as ONE narrow Arrow stage.
 
     Each task takes whole bands (``spark.range`` over band ids: no
-    Exchange). Per band it sorts the bucket keys, enumerates the
-    within-bucket pairs with numpy, and keeps a pair only at the
-    LOWEST band where it shares a bucket and only if it shares
-    >= :func:`min_matching_bands` buckets: the band-collision count
-    happens where the buckets are (C2Net, ICDE 2019), so the output is
-    distinct with no pair shuffle. Survivors are scored against the
-    broadcast signature matrix and filtered at the threshold. Match
-    counts are integer sums, so scores are bit-identical to the JVM
-    fold — oracle-safe.
+    Exchange). Per band it groups the buckets (:func:`band_buckets`),
+    enumerates the within-bucket pairs with numpy, and keeps a pair
+    only at the LOWEST band where it shares a bucket and only if it
+    shares >= :func:`min_matching_bands` buckets: the band-collision
+    count happens where the buckets are (C2Net, ICDE 2019), so the
+    output is distinct with no pair shuffle. Survivors are scored
+    against the broadcast signature matrix and filtered at the
+    threshold. Match counts are integer sums, so scores are
+    bit-identical to the JVM fold — oracle-safe.
     """
     import numpy as np
     import pandas as pd
 
-    sc = bands.sparkSession.sparkContext
+    sc = spark.sparkContext
     n_bands, num_perm = params.bands, params.num_perm
     min_bands = min_matching_bands(threshold, params)
     chunk = PAIR_CHUNK
-    sig_bc = sc.broadcast(sig_matrix)
-    band_bc = sc.broadcast(_band_hash_matrix(bands, sig_matrix[0], n_bands))
+    index_bc = sc.broadcast(index)
 
     def band_pairs(band, ids, mat, hashes, present):
-        rows = np.flatnonzero(present[:, band])
-        keys = hashes[rows, band]
-        order = np.argsort(keys, kind="stable")
-        # stable sort of ascending rows: bucket members stay id-ordered
-        rows, keys = rows[order], keys[order]
-        starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-        sizes = np.diff(np.r_[starts, len(keys)])
+        rows, _keys, starts, sizes = band_buckets(hashes, present, band)
         # partners after each position within its bucket
-        after = np.repeat(starts + sizes, sizes) - np.arange(len(keys)) - 1
+        after = np.repeat(starts + sizes, sizes) - np.arange(len(rows)) - 1
         pos = np.flatnonzero(after)
         after = after[pos]
         first = np.cumsum(after) - after
@@ -627,14 +671,13 @@ def _band_kernel_pairs(
                 )
 
     def pairs_iter(batches):
-        ids, mat = sig_bc.value
-        hashes, present = band_bc.value
+        local = index_bc.value
         for pdf in batches:
             for band in pdf["id"].to_numpy():
-                yield from band_pairs(int(band), ids, mat, hashes, present)
+                yield from band_pairs(int(band), *local)
 
     n_tasks = max(1, min(n_bands, sc.defaultParallelism))
-    return bands.sparkSession.range(0, n_bands, 1, n_tasks).mapInPandas(
+    return spark.range(0, n_bands, 1, n_tasks).mapInPandas(
         pairs_iter, "doc_a long, doc_b long, score double"
     )
 
@@ -649,9 +692,9 @@ def _self_join_pairs_raw(
     """The uncompressed band-bucket self-match (see self_join_pairs)."""
     if n_docs is None or n_docs <= VECTORIZE_MAX_SIGS:
         # one bounded read decides the gate and IS the matrix input
-        sig_matrix = _collect_sig_matrix(sigs, max_rows=VECTORIZE_MAX_SIGS)
-        if sig_matrix is not None:
-            return _band_kernel_pairs(bands, sig_matrix, params, threshold)
+        index = export_index(sigs, bands, params.bands, max_rows=VECTORIZE_MAX_SIGS)
+        if index is not None:
+            return _band_kernel_pairs(sigs.sparkSession, index, params, threshold)
     pairs = band_pair_candidates(bands, min_matching_bands(threshold, params))
     return _score_pairs_fold(pairs, sigs, params, threshold)
 
@@ -716,9 +759,10 @@ def self_join_pairs(
     # bounded collect, BOTH sides of the cross expansion, and the
     # intra-group pairs) — at corpus scale each replan is a full
     # signature-table aggregation (guide §3.3; per-invocation, see
-    # functions.materialize).
+    # functions.materialize). Null signatures are left out, as the
+    # export drops them: grouped, they would pair at score 1.0.
     groups = materialize(
-        sigs.groupBy("sig").agg(
+        sigs.filter(F.col("sig").isNotNull()).groupBy("sig").agg(
             F.min("doc_id").alias("doc_id"),
             F.sort_array(F.collect_list("doc_id")).alias("members"),
         )

@@ -36,6 +36,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import MinHashParams
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import lsh
 
 
 def _lsh_fingerprint(spark, sigs_path: str, bands_table: str) -> list:
@@ -71,52 +72,19 @@ class ServingIndex:
         cls, sigs_df: DataFrame, bands_df: DataFrame, params: MinHashParams
     ) -> "ServingIndex":
         """One-time export (the offline half; excluded from query
-        latency like the reference's startup build). Collects through
-        Arrow; at 100 TB you'd load one bucketed bands shard per
-        replica instead of the whole table."""
-        pdf = sigs_df.select("doc_id", "sig").toPandas().sort_values("doc_id")
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        sig_mat = np.array(pdf["sig"].tolist(), dtype=np.int64)
-
-        bpdf = bands_df.select("doc_id", "band_id", "band_hash").toPandas()
-        buckets: list[dict[int, np.ndarray]] = [dict() for _ in range(params.bands)]
-        if len(bpdf):
-            # vectorized bucket build: id -> row via one searchsorted,
-            # one lexsort by (band, hash, row), then boundary slicing —
-            # no per-member Python work (a pandas-groupby loop cost
-            # O(rows) interpreter time at export)
-            band_docs = bpdf["doc_id"].to_numpy(dtype=np.int64)
-            # loud on bands-without-sigs (the append_to_index crash
-            # window): a silent searchsorted mismap would put another
-            # document's row into the bucket
-            if doc_ids.size == 0:
-                raise ValueError(
-                    "bands table is non-empty but the signature table is "
-                    "empty — run sources.tables.validate_index and repair "
-                    "before export"
-                )
-            rows = np.searchsorted(doc_ids, band_docs)
-            bad = (rows >= doc_ids.shape[0]) | (
-                doc_ids[np.clip(rows, 0, doc_ids.shape[0] - 1)] != band_docs
-            )
-            if bad.any():
-                raise ValueError(
-                    f"banded doc_ids {np.unique(band_docs[bad])[:5].tolist()} "
-                    "have no signature row — partial append? run "
-                    "sources.tables.validate_index and repair before export"
-                )
-            band = bpdf["band_id"].to_numpy(dtype=np.int64)
-            bh = bpdf["band_hash"].to_numpy(dtype=np.int64)
-            order = np.lexsort((rows, bh, band))
-            band, bh, rows = band[order], bh[order], rows[order]
-            change = (
-                np.flatnonzero((band[1:] != band[:-1]) | (bh[1:] != bh[:-1])) + 1
-            )
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(rows)]))
-            for s, e in zip(starts, ends):
-                buckets[int(band[s])][int(bh[s])] = rows[s:e]
-        return cls(params=params, doc_ids=doc_ids, sigs=sig_mat, buckets=buckets)
+        latency like the reference's startup build) through
+        :func:`lsh.export_index`, under its rules: the same in-memory
+        index the dedup band kernel broadcasts, with each band's
+        buckets grouped by :func:`lsh.band_buckets`. At 100 TB you'd
+        load one bucketed bands shard per replica instead of the whole
+        table."""
+        index = lsh.export_index(sigs_df, bands_df, params.bands)
+        buckets = []
+        for band in range(params.bands):
+            rows, keys, starts, sizes = lsh.band_buckets(index.hashes, index.present, band)
+            bounds = zip(keys[starts].tolist(), starts.tolist(), (starts + sizes).tolist())
+            buckets.append({key: rows[s:e] for key, s, e in bounds})
+        return cls(params=params, doc_ids=index.ids, sigs=index.sigs, buckets=buckets)
 
     @classmethod
     def from_paths(

@@ -187,3 +187,26 @@ def test_serving_from_persisted_index(spark, sf_dir, tmp_path):
         assert idx.query(svec, k=7) == mem.query(svec, k=7)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_srv_idx")
+
+
+def test_serving_matches_lsh_topk_under_bucket_cap(spark, sf_dir):
+    """Under a bucket cap both paths probe the capped corpus buckets
+    with uncapped query bands: two identical queries in one batch both
+    get an answer, and it equals the serving index's."""
+    params = MinHashParams(max_bucket_size=1)
+    docs = load_table(spark, sf_dir, "documents")
+    sigs = minhash.signatures(docs, params).cache()
+    bands = lsh.bands_table(sigs, params).cache()
+    idx = ServingIndex.from_dataframes(sigs, bands, params)
+
+    rows = sigs.filter(F.col("doc_id") < 5).collect()
+    queries = [(r["doc_id"], list(r["sig"])) for r in rows]
+    queries += [(101, queries[0][1]), (102, queries[0][1])]
+    qs = spark.createDataFrame(queries, "query_id long, sig array<bigint>")
+    dist: dict = {}
+    for r in lsh.lsh_topk(sigs, bands, qs, params, k=5, n_queries=len(queries)).collect():
+        dist.setdefault(r["query_id"], []).append((r["doc_id"], round(r["score"], 9), r["rank"]))
+    for qid, vec in queries:
+        local = [(d, round(s, 9), r) for d, s, r in idx.query(vec, k=5)]
+        assert local, qid
+        assert local == sorted(dist.get(qid, []), key=lambda t: t[2]), qid
