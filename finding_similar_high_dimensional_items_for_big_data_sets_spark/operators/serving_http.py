@@ -9,12 +9,17 @@ request semantics already live in library code:
 
 - envelope: ``{"vector": List[int], "k": int = 10}`` with the same
   validation rules as :func:`sources.query_source.validate_envelopes`
-  (non-null vector of exactly ``num_perm`` integers, ``k`` floored at
-  1, default 10);
+  (non-null vector of exactly ``num_perm`` integers, each within
+  int64, ``k`` floored at 1, default 10);
 - response: ``{"candidates": [{"id", "score", "vector_preview"}]}``
   matching ``sources.sinks.topk_response`` / reference
   ``query_service.py:196``, preview = first 10 signature values
   (reference ``worker_tasks.py:164``).
+
+Every tier (LSH, vector, lexical, hybrid) and the router go through
+one request path: one HTTP handler, one set of envelope rules (each
+broken rule is a 400 with its own message), one replica starter and,
+at the router, one parallel sweep.
 
 Scale note: one process serves one exported index (or one shard via
 ``serving.shard_dataframes`` + ``serving.merge_topk`` at a router
@@ -25,48 +30,138 @@ offline build / online probe split.
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
+import urllib.error
+import urllib.request
+from concurrent.futures import ThreadPoolExecutor
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import numpy as np
 
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving import (
-    ServingIndex,
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import (
+    retrieval,
+    serving,
+    serving_vector,
 )
 
 DEFAULT_K = 10
 PREVIEW_N = 10
 
 
+# ---------------------------------------------------------------------------
+# Envelope rules, shared by every service and router endpoint.
+# ---------------------------------------------------------------------------
+
+
+class _Reject(ValueError):
+    """A request body broke an envelope rule; the message is the 400
+    reply's error text."""
+
+
+def _rejects(error):
+    """Endpoint decorator: ``error`` raised inside the endpoint becomes
+    the 400 reply ``{"error": <message>}``. Replica services pass
+    ``ValueError``, so an index's own argument check (say, a shortlist
+    without retained vectors) is a 400 too; the router passes
+    :class:`_Reject`, its own rules only."""
+
+    def decorate(handle):
+        @functools.wraps(handle)
+        def handle_or_400(self, payload):
+            try:
+                return handle(self, payload)
+            except error as e:
+                return 400, {"error": str(e)}
+
+        return handle_or_400
+
+    return decorate
+
+
+def _is_int(value) -> bool:
+    return isinstance(value, int) and not isinstance(value, bool)
+
+
+def _object(payload) -> dict:
+    if not isinstance(payload, dict):
+        raise _Reject("body must be a JSON object")
+    return payload
+
+
+def _integer(payload: dict, key: str, default, error: str) -> int:
+    value = payload.get(key, default)
+    if not _is_int(value):
+        raise _Reject(error)
+    return value
+
+
+def _k(payload: dict) -> int:
+    """``k``: an integer, default 10, floored at 1."""
+    return max(1, _integer(payload, "k", DEFAULT_K, "k must be an integer"))
+
+
+def _positive(payload: dict, key: str, default: int) -> int:
+    value = payload.get(key, default)
+    if not _is_int(value) or value < 1:
+        raise _Reject(f"{key} must be a positive integer")
+    return value
+
+
+def _text(payload: dict) -> str:
+    query = payload.get("query")
+    if not isinstance(query, str):
+        raise _Reject("query must be a string")
+    return query
+
+
+# vector element dtype -> (JSON types it accepts, their name in a 400)
+_ELEMENTS = {np.int64: ((int,), "integers"), np.float64: ((int, float), "numbers")}
+
+
+def _vector(payload: dict, width: int, width_name: str, dtype) -> np.ndarray:
+    """``vector``: a list of exactly ``width`` integers (``dtype``
+    int64, a MinHash signature) or numbers (float64, an embedding),
+    each of which must fit ``dtype``: an element outside it is a 400,
+    not an error inside the index that drops the connection."""
+    vector = payload.get("vector")
+    kinds, noun = _ELEMENTS[dtype]
+    if not isinstance(vector, list) or any(
+        not isinstance(v, kinds) or isinstance(v, bool) for v in vector
+    ):
+        raise _Reject(f"vector must be a list of {noun}")
+    if len(vector) != width:
+        raise _Reject(f"vector width {len(vector)} != {width_name} {width}")
+    try:
+        return np.asarray(vector, dtype=dtype)
+    except OverflowError:
+        raise _Reject(f"vector elements must fit in {np.dtype(dtype).name}") from None
+
+
+def _candidates(hits, fields: tuple[str, ...]) -> dict:
+    """The 200 reply: one candidate object per hit tuple."""
+    return {"candidates": [dict(zip(fields, hit)) for hit in hits]}
+
+
+# ---------------------------------------------------------------------------
+# Replica services: dict in, (status, dict) out.
+# ---------------------------------------------------------------------------
+
+
 class QueryService:
     """Transport-free request handler: dict in, (status, dict) out.
     The HTTP layer below is a socket binding for exactly this."""
 
-    def __init__(self, index: ServingIndex, preview_n: int = PREVIEW_N):
+    def __init__(self, index: serving.ServingIndex, preview_n: int = PREVIEW_N):
         self.index = index
         self.preview_n = preview_n
 
+    @_rejects(ValueError)
     def handle_query(self, payload) -> tuple[int, dict]:
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        vector = payload.get("vector")
-        if not isinstance(vector, list) or any(
-            not isinstance(v, int) or isinstance(v, bool) for v in vector
-        ):
-            return 400, {"error": "vector must be a list of integers"}
-        if len(vector) != self.index.params.num_perm:
-            return 400, {
-                "error": (
-                    f"vector width {len(vector)} != num_perm "
-                    f"{self.index.params.num_perm}"
-                )
-            }
-        k = payload.get("k", DEFAULT_K)
-        if not isinstance(k, int) or isinstance(k, bool):
-            return 400, {"error": "k must be an integer"}
-        k = max(1, k)
-        hits = self.index.query(vector, k=k)
+        payload = _object(payload)
+        vector = _vector(payload, self.index.params.num_perm, "num_perm", np.int64)
+        hits = self.index.query(vector, k=_k(payload))
         return 200, {
             "candidates": [
                 {
@@ -83,15 +178,90 @@ class QueryService:
         return [int(v) for v in self.index.sigs[row, : self.preview_n]]
 
 
+class VectorQueryService:
+    """Embedding-index twin of :class:`QueryService`: dict in,
+    (status, dict) out, backed by an in-process
+    :class:`~.serving_vector.ServingVectorIndex` (IVF-PQ ADC point
+    queries, optional exact rerank). Envelope:
+    ``{"vector": List[float], "k": int = 10, "n_probe": int = 4,
+    "shortlist": int | null}``."""
+
+    def __init__(self, index):
+        self.index = index
+
+    @_rejects(ValueError)
+    def handle_query(self, payload) -> tuple[int, dict]:
+        payload = _object(payload)
+        vector = _vector(payload, self.index.dim, "dim", np.float64)
+        k = _k(payload)
+        n_probe = _positive(payload, "n_probe", 4)
+        shortlist = payload.get("shortlist")
+        if shortlist is not None and not _is_int(shortlist):
+            raise _Reject("shortlist must be an integer or null")
+        hits = self.index.query(vector, k=k, n_probe=n_probe, shortlist=shortlist)
+        return 200, _candidates(hits, ("id", "dist", "rank"))
+
+
+class LexicalQueryService:
+    """Keyword twin of :class:`VectorQueryService`, backed by an
+    in-process :class:`~.retrieval.ServingLexicalIndex`. Envelope:
+    ``{"query": str, "k": int = 10}``."""
+
+    def __init__(self, index):
+        self.index = index
+
+    @_rejects(ValueError)
+    def handle_query(self, payload) -> tuple[int, dict]:
+        payload = _object(payload)
+        hits = self.index.query(_text(payload), k=_k(payload))
+        return 200, _candidates(hits, ("id", "score", "rank"))
+
+
+class HybridQueryService:
+    """Hybrid point service: BM25 + vector lists fused in-process by
+    the contract RRF rule (``retrieval.hybrid_rrf_point``). Envelope:
+    ``{"query": str, "vector": List[float], "k": int = 10,
+    "n_probe": int = 4, "c": int = 60}``.
+
+    The lexical index is read through ``lexical`` (the
+    :class:`LexicalQueryService` of the same server) on every request,
+    so swapping ``lexical.index`` swaps it for both endpoints; the
+    vector index is ``vec_index``."""
+
+    def __init__(self, lexical: LexicalQueryService, vec_index):
+        self.lexical = lexical
+        self.vec_index = vec_index
+
+    @_rejects(ValueError)
+    def handle_query(self, payload) -> tuple[int, dict]:
+        payload = _object(payload)
+        query = _text(payload)
+        vector = _vector(payload, self.vec_index.dim, "dim", np.float64)
+        k = _k(payload)
+        n_probe = _positive(payload, "n_probe", 4)
+        c = _positive(payload, "c", 60)
+        hits = retrieval.hybrid_rrf_point(
+            self.lexical.index, self.vec_index, query, vector,
+            k=k, c=c, n_probe=n_probe,
+        )
+        return 200, _candidates(hits, ("id", "rrf", "rank"))
+
+
+# ---------------------------------------------------------------------------
+# Hot swap: POST /reload and the staleness half of GET /health.
+# ---------------------------------------------------------------------------
+
+
 def _handle_reload(spark, holders, payload, lock) -> tuple[int, dict]:
     """Shared ``POST /reload`` law for every replica tier: for each
     served index, check staleness against its persisted artifacts and
     re-snapshot when stale (or when the body says ``{"force": true}``).
     The swap is one attribute assignment — in-flight queries finish on
     the old snapshot, the socket never drops. ``holders``: (name,
-    get_index, set_index) triples; an index without persisted
-    provenance (built from DataFrames) is reported ``tracked: false``
-    and left alone. Requires the server to have been started with a
+    owner, attribute) triples, the index served under ``name`` being
+    ``owner.<attribute>``; an index without persisted provenance
+    (built from DataFrames) is reported ``tracked: false`` and left
+    alone. Requires the server to have been started with a
     SparkSession (the export runs Spark jobs).
 
     ``lock``: the server's per-instance reload mutex. ThreadingHTTPServer
@@ -125,8 +295,8 @@ def _staleness(spark, holders) -> dict:
     unknown, never to a 500 (round-11 — lets an operator see a
     pending reload from the router without probing each replica)."""
     out = {}
-    for name, get_index, _set_index in holders:
-        index = get_index()
+    for name, owner, attr in holders:
+        index = getattr(owner, attr)
         if spark is None or getattr(index, "source", None) is None:
             out[name] = None
             continue
@@ -141,8 +311,8 @@ def _reload_locked(spark, holders, payload) -> tuple[int, dict]:
     force = isinstance(payload, dict) and bool(payload.get("force", False))
     report = {}
     failed = False
-    for name, get_index, set_index in holders:
-        index = get_index()
+    for name, owner, attr in holders:
+        index = getattr(owner, attr)
         # untracked is a PROPERTY (no persisted provenance), not an
         # exception: a ValueError out of is_stale on a tracked index
         # is a real staleness-probe failure and must surface below,
@@ -154,7 +324,7 @@ def _reload_locked(spark, holders, payload) -> tuple[int, dict]:
             stale = index.is_stale(spark)
             reloaded = stale or force
             if reloaded:
-                set_index(index.reload(spark))
+                setattr(owner, attr, index.reload(spark))
         except Exception as e:  # noqa: BLE001 — a probe/reload failure
             # (store mid-swap, broken table, export error) must become
             # an HTTP error the operator can read and retry, never a
@@ -170,12 +340,19 @@ def _reload_locked(spark, holders, payload) -> tuple[int, dict]:
     return (500 if failed else 200), {"indexes": report}
 
 
+# ---------------------------------------------------------------------------
+# HTTP binding and the replica starters.
+# ---------------------------------------------------------------------------
+
+
 class _Handler(BaseHTTPRequestHandler):
     """ONE HTTP handler for every server in this module, so the body
     parsing, dispatch, reply, and logging behavior cannot diverge
     between tiers. It reads its server's ``routes`` (path -> ``payload
     -> (status, body)`` for POST) and ``health`` (``() -> (status,
-    body)`` for ``GET /health``)."""
+    body)`` for ``GET /health``). A ``Content-Length`` that is not a
+    non-negative integer is answered 400 at once: a negative one would
+    otherwise read until the client gives up."""
 
     def do_POST(self):  # noqa: N802 (http.server API)
         handle = self.server.routes.get(self.path.rstrip("/"))
@@ -184,6 +361,8 @@ class _Handler(BaseHTTPRequestHandler):
             return
         try:
             length = int(self.headers.get("Content-Length", 0))
+            if length < 0:
+                raise ValueError(f"negative Content-Length {length}")
             payload = json.loads(self.rfile.read(length) or b"null")
         except (ValueError, json.JSONDecodeError):
             self._reply(400, {"error": "invalid JSON body"})
@@ -234,8 +413,36 @@ def _serve(routes: dict, health, host: str, port: int):
     return server, thread
 
 
+def _start_replica(holders: list, routes: dict, health, host, port, spark):
+    """Serve one replica: ``routes`` plus ``POST /reload`` over the
+    hot-swap ``holders`` (see :func:`_handle_reload`), and ``GET
+    /health`` answering ``status``, the fields ``health()`` returns and
+    per-index ``stale``. ``server.service`` is the first holder's
+    owner.
+
+    Hot-swap hook: after a store rewrite (compaction / retention),
+    ``server.service.index = server.service.index.reload(spark)``
+    re-snapshots without dropping the socket (``POST /reload`` does the
+    same over the wire). Hold ``server.reload_lock`` around a manual
+    swap so it cannot race a concurrent ``POST /reload``."""
+    lock = threading.Lock()
+    routes["/reload"] = lambda p: _handle_reload(spark, holders, p, lock)
+    server, thread = _serve(
+        routes,
+        lambda: (
+            200,
+            {"status": "ok", **health(), "stale": _staleness(spark, holders)},
+        ),
+        host,
+        port,
+    )
+    server.service = holders[0][1]
+    server.reload_lock = lock
+    return server, thread
+
+
 def start_server(
-    index: ServingIndex, host: str = "127.0.0.1", port: int = 0, spark=None
+    index: serving.ServingIndex, host: str = "127.0.0.1", port: int = 0, spark=None
 ) -> tuple[ThreadingHTTPServer, threading.Thread]:
     """Bind the query service to a socket (``port=0`` = ephemeral).
     Returns (server, daemon thread); call ``server.shutdown()`` then
@@ -243,86 +450,12 @@ def start_server(
     /reload`` re-snapshots a store-loaded index after a rewrite
     (compaction / retention) without dropping the socket."""
     service = QueryService(index)
-
-    def _set_index(idx):
-        service.index = idx
-
-    holders = [("lsh", lambda: service.index, _set_index)]
-    reload_lock = threading.Lock()
-    server, thread = _serve(
-        {
-            "/query": service.handle_query,
-            "/reload": lambda p: _handle_reload(
-                spark, holders, p, reload_lock
-            ),
-        },
-        lambda: (
-            200,
-            {
-                "status": "ok",
-                "n_docs": int(service.index.doc_ids.size),
-                "stale": _staleness(spark, holders),
-            },
-        ),
-        host,
-        port,
+    return _start_replica(
+        [("lsh", service, "index")],
+        {"/query": service.handle_query},
+        lambda: {"n_docs": int(service.index.doc_ids.size)},
+        host, port, spark,
     )
-    # hot-swap hook: after a store rewrite (compaction / retention),
-    # `server.service.index = server.service.index.reload(spark)`
-    # re-snapshots without dropping the socket (POST /reload does the
-    # same over the wire). Hold server.reload_lock around a manual swap
-    # so it cannot race a concurrent POST /reload's check-and-swap.
-    server.service = service
-    server.reload_lock = reload_lock
-    return server, thread
-
-
-class VectorQueryService:
-    """Embedding-index twin of :class:`QueryService`: dict in,
-    (status, dict) out, backed by an in-process
-    :class:`~.serving_vector.ServingVectorIndex` (IVF-PQ ADC point
-    queries, optional exact rerank). Envelope:
-    ``{"vector": List[float], "k": int = 10, "n_probe": int = 4,
-    "shortlist": int | null}``."""
-
-    def __init__(self, index):
-        self.index = index
-
-    def handle_query(self, payload) -> tuple[int, dict]:
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        vector = payload.get("vector")
-        if not isinstance(vector, list) or any(
-            not isinstance(v, (int, float)) or isinstance(v, bool) for v in vector
-        ):
-            return 400, {"error": "vector must be a list of numbers"}
-        if len(vector) != self.index.dim:
-            return 400, {
-                "error": f"vector width {len(vector)} != dim {self.index.dim}"
-            }
-        k = payload.get("k", DEFAULT_K)
-        if not isinstance(k, int) or isinstance(k, bool):
-            return 400, {"error": "k must be an integer"}
-        n_probe = payload.get("n_probe", 4)
-        if not isinstance(n_probe, int) or isinstance(n_probe, bool) or n_probe < 1:
-            return 400, {"error": "n_probe must be a positive integer"}
-        shortlist = payload.get("shortlist")
-        if shortlist is not None and (
-            not isinstance(shortlist, int) or isinstance(shortlist, bool)
-        ):
-            return 400, {"error": "shortlist must be an integer or null"}
-        try:
-            hits = self.index.query(
-                vector, k=max(1, k), n_probe=n_probe, shortlist=shortlist
-            )
-        except ValueError as e:
-            return 400, {"error": str(e)}
-        return 200, {
-            "candidates": [
-                {"id": vec_id, "dist": dist, "rank": rank}
-                for (vec_id, dist, rank) in hits
-            ]
-        }
 
 
 def start_vector_server(
@@ -333,115 +466,12 @@ def start_vector_server(
     count, and (with ``spark``) ``POST /reload`` — the IVF-PQ twin of
     :func:`start_server`."""
     service = VectorQueryService(index)
-
-    def _set_index(idx):
-        service.index = idx
-
-    holders = [("vector", lambda: service.index, _set_index)]
-    reload_lock = threading.Lock()
-    server, thread = _serve(
-        {
-            "/query": service.handle_query,
-            "/reload": lambda p: _handle_reload(
-                spark, holders, p, reload_lock
-            ),
-        },
-        lambda: (
-            200,
-            {
-                "status": "ok",
-                "n_vecs": int(service.index.vec_ids.size),
-                "stale": _staleness(spark, holders),
-            },
-        ),
-        host,
-        port,
+    return _start_replica(
+        [("vector", service, "index")],
+        {"/query": service.handle_query},
+        lambda: {"n_vecs": int(service.index.vec_ids.size)},
+        host, port, spark,
     )
-    server.service = service  # hot-swap hook (see start_server)
-    server.reload_lock = reload_lock
-    return server, thread
-
-
-class LexicalQueryService:
-    """Keyword twin of :class:`VectorQueryService`, backed by an
-    in-process :class:`~.retrieval.ServingLexicalIndex`. Envelope:
-    ``{"query": str, "k": int = 10}``."""
-
-    def __init__(self, index):
-        self.index = index
-
-    def handle_query(self, payload) -> tuple[int, dict]:
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        query = payload.get("query")
-        if not isinstance(query, str):
-            return 400, {"error": "query must be a string"}
-        k = payload.get("k", DEFAULT_K)
-        if not isinstance(k, int) or isinstance(k, bool):
-            return 400, {"error": "k must be an integer"}
-        try:
-            hits = self.index.query(query, k=max(1, k))
-        except ValueError as e:
-            return 400, {"error": str(e)}
-        return 200, {
-            "candidates": [
-                {"id": int(doc_id), "score": score, "rank": rank}
-                for (doc_id, score, rank) in hits
-            ]
-        }
-
-
-class HybridQueryService:
-    """Hybrid point service: BM25 + vector lists fused in-process by
-    the contract RRF rule (``retrieval.hybrid_rrf_point``). Envelope:
-    ``{"query": str, "vector": List[float], "k": int = 10,
-    "n_probe": int = 4, "c": int = 60}``."""
-
-    def __init__(self, lex_index, vec_index):
-        self.lex_index = lex_index
-        self.vec_index = vec_index
-
-    def handle_query(self, payload) -> tuple[int, dict]:
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.retrieval import (
-            hybrid_rrf_point,
-        )
-
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        query = payload.get("query")
-        if not isinstance(query, str):
-            return 400, {"error": "query must be a string"}
-        vector = payload.get("vector")
-        if not isinstance(vector, list) or any(
-            not isinstance(v, (int, float)) or isinstance(v, bool) for v in vector
-        ):
-            return 400, {"error": "vector must be a list of numbers"}
-        if len(vector) != self.vec_index.dim:
-            return 400, {
-                "error": f"vector width {len(vector)} != dim {self.vec_index.dim}"
-            }
-        k = payload.get("k", DEFAULT_K)
-        if not isinstance(k, int) or isinstance(k, bool):
-            return 400, {"error": "k must be an integer"}
-        n_probe = payload.get("n_probe", 4)
-        if not isinstance(n_probe, int) or isinstance(n_probe, bool) or n_probe < 1:
-            return 400, {"error": "n_probe must be a positive integer"}
-        c = payload.get("c", 60)
-        if not isinstance(c, int) or isinstance(c, bool) or c < 1:
-            return 400, {"error": "c must be a positive integer"}
-        try:
-            hits = hybrid_rrf_point(
-                self.lex_index, self.vec_index, query, vector,
-                k=max(1, k), c=c, n_probe=n_probe,
-            )
-        except ValueError as e:
-            return 400, {"error": str(e)}
-        return 200, {
-            "candidates": [
-                {"id": int(doc_id), "rrf": score, "rank": rank}
-                for (doc_id, score, rank) in hits
-            ]
-        }
 
 
 def start_lexical_server(
@@ -451,52 +481,24 @@ def start_lexical_server(
     """Bind the keyword (and, with ``vec_index``, the hybrid) service:
     ``POST /query`` with the keyword envelope, ``POST /hybrid`` with
     the hybrid envelope, ``GET /health``, and (with ``spark``)
-    ``POST /reload`` re-snapshotting BOTH served indexes."""
-    lex_service = LexicalQueryService(lex_index)
-    hybrid_service = (
-        HybridQueryService(lex_index, vec_index) if vec_index is not None else None
-    )
-
-    def _set_lex(idx):
-        # the hybrid service shares the lexical index object: swap both
-        lex_service.index = idx
-        if hybrid_service is not None:
-            hybrid_service.lex_index = idx
-
-    def _set_vec(idx):
-        hybrid_service.vec_index = idx
-
-    holders = [("lexical", lambda: lex_service.index, _set_lex)]
-    if hybrid_service is not None:
-        holders.append(
-            ("vector", lambda: hybrid_service.vec_index, _set_vec)
-        )
-    reload_lock = threading.Lock()
-    routes = {
-        "/query": lex_service.handle_query,
-        "/reload": lambda p: _handle_reload(spark, holders, p, reload_lock),
-    }
-    if hybrid_service is not None:
-        routes["/hybrid"] = hybrid_service.handle_query
-    server, thread = _serve(
+    ``POST /reload`` re-snapshotting BOTH served indexes. Hot-swap
+    hooks: ``server.service.index`` (the lexical index, read by both
+    endpoints) and ``server.hybrid_service.vec_index``."""
+    lexical = LexicalQueryService(lex_index)
+    holders = [("lexical", lexical, "index")]
+    routes = {"/query": lexical.handle_query}
+    hybrid = None
+    if vec_index is not None:
+        hybrid = HybridQueryService(lexical, vec_index)
+        holders.append(("vector", hybrid, "vec_index"))
+        routes["/hybrid"] = hybrid.handle_query
+    server, thread = _start_replica(
+        holders,
         routes,
-        lambda: (
-            200,
-            {
-                "status": "ok",
-                "n_docs": int(lex_service.index.n_docs),
-                "hybrid": hybrid_service is not None,
-                "stale": _staleness(spark, holders),
-            },
-        ),
-        host,
-        port,
+        lambda: {"n_docs": int(lexical.index.n_docs), "hybrid": hybrid is not None},
+        host, port, spark,
     )
-    # hot-swap hooks (see start_server): the hybrid service shares the
-    # lexical service's index objects, so swap BOTH attributes together
-    server.service = lex_service
-    server.hybrid_service = hybrid_service
-    server.reload_lock = reload_lock
+    server.hybrid_service = hybrid
     return server, thread
 
 
@@ -511,6 +513,16 @@ def start_lexical_server(
 # retrieval.merge_topk_scores) — so N replicas answer identically to
 # one full index.
 # ---------------------------------------------------------------------------
+
+
+def _sweep(call, items: list) -> list:
+    """``[call(item) for item in items]`` on up to 16 threads: the
+    router's one way to reach its replicas, for the point, batch,
+    health and reload fan-outs alike. Each call is bounded by the
+    per-replica timeout, so a hung replica costs one timeout per
+    sweep, not one per replica queued behind it."""
+    with ThreadPoolExecutor(max_workers=min(16, len(items))) as ex:
+        return list(ex.map(call, items))
 
 
 class RouterService:
@@ -577,9 +589,6 @@ class RouterService:
         return body
 
     def _post(self, url: str, payload: dict) -> tuple[int, dict]:
-        import urllib.error
-        import urllib.request
-
         req = urllib.request.Request(
             url,
             data=json.dumps(payload).encode("utf-8"),
@@ -595,12 +604,7 @@ class RouterService:
             return 503, {"error": f"replica unreachable: {e}"}
 
     def _fan(self, urls: list[str], payload: dict):
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(urls))) as ex:
-            return list(
-                ex.map(lambda u: self._post(u + "/query", payload), urls)
-            )
+        return _sweep(lambda u: self._post(u + "/query", payload), urls)
 
     @staticmethod
     def _check_cover(urls: list[str], results):
@@ -638,35 +642,19 @@ class RouterService:
         """(error_response | None, per-replica candidate lists)."""
         return self._check_cover(urls, self._fan(urls, payload))
 
-    # -- endpoints ----------------------------------------------------------
-    def handle_query(self, payload) -> tuple[int, dict]:
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        k = payload.get("k", DEFAULT_K)
-        if not isinstance(k, int) or isinstance(k, bool):
-            return 400, {"error": "k must be an integer"}
-        k = max(1, k)
-        err, cand_lists = self._gather(self.replicas, payload)
-        if err is not None:
-            return err
-        return 200, {"candidates": self._merge_tier(cand_lists, k)}
-
-    def _merge_tier(self, cand_lists, k: int) -> list[dict]:
-        """Merge per-replica candidate lists under THIS tier's exact
-        law, in the tier's own response shape — one implementation for
-        the point and batch endpoints, so a batch entry's answer is
+    @staticmethod
+    def _merge_tier(tier: str, cand_lists, k: int) -> list[dict]:
+        """Merge per-replica candidate lists under ``tier``'s exact law,
+        in the tier's own response shape — one implementation for the
+        point, batch and hybrid endpoints, so a batch entry's answer is
         identical to posting that query alone."""
-        if self.tier == "lsh":
-            from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving import (
-                merge_topk,
-            )
-
+        if tier == "lsh":
             previews = {
                 int(c["id"]): c["vector_preview"]
                 for cands in cand_lists
                 for c in cands
             }
-            merged = merge_topk(
+            merged = serving.merge_topk(
                 [
                     [(int(c["id"]), c["score"], i + 1) for i, c in enumerate(cands)]
                     for cands in cand_lists
@@ -674,43 +662,33 @@ class RouterService:
                 k=k,
             )
             return [
-                {
-                    "id": d,
-                    "score": s,
-                    "vector_preview": previews[d],
-                }
+                {"id": d, "score": s, "vector_preview": previews[d]}
                 for (d, s, _r) in merged
             ]
-        if self.tier == "vector":
-            from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
-                merge_topk_dist,
-            )
-
-            merged = merge_topk_dist(
-                [
-                    [(int(c["id"]), c["dist"], c["rank"]) for c in cands]
-                    for cands in cand_lists
-                ],
-                k=k,
-            )
-            return [
-                {"id": v, "dist": d, "rank": r} for (v, d, r) in merged
-            ]
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.retrieval import (
-            merge_topk_scores,
+        field, merge = (
+            ("dist", serving_vector.merge_topk_dist)
+            if tier == "vector"
+            else ("score", retrieval.merge_topk_scores)
         )
-
-        merged = merge_topk_scores(
+        merged = merge(
             [
-                [(int(c["id"]), c["score"], c["rank"]) for c in cands]
+                [(int(c["id"]), c[field], c["rank"]) for c in cands]
                 for cands in cand_lists
             ],
             k=k,
         )
-        return [
-            {"id": d, "score": s, "rank": r} for (d, s, r) in merged
-        ]
+        return [dict(zip(("id", field, "rank"), hit)) for hit in merged]
 
+    # -- endpoints ----------------------------------------------------------
+    @_rejects(_Reject)
+    def handle_query(self, payload) -> tuple[int, dict]:
+        k = _k(_object(payload))
+        err, cand_lists = self._gather(self.replicas, payload)
+        if err is not None:
+            return err
+        return 200, {"candidates": self._merge_tier(self.tier, cand_lists, k)}
+
+    @_rejects(_Reject)
     def handle_query_batch(self, payload) -> tuple[int, dict]:
         """``POST /query_batch``: fan a query SET across the replica
         cover and merge PER QUERY with the tier's exact law —
@@ -722,10 +700,10 @@ class RouterService:
         ``k``. Answer: ``{"results": [{"candidates": [...]}, ...]}``
         in query order.
 
-        Scale shape: ONE thread-pool sweep over all (query, replica)
-        pairs — a Q-query batch against R replicas costs
-        ceil(Q*R/pool) round-trip times, not Q sequential fan-outs;
-        per-replica timeouts apply to every pair independently.
+        Scale shape: ONE sweep over all (query, replica) pairs — a
+        Q-query batch against R replicas costs ceil(Q*R/pool)
+        round-trip times, not Q sequential fan-outs; per-replica
+        timeouts apply to every pair independently.
 
         Failure law: the batch is all-or-nothing, like the point
         endpoint's complete-cover rule — any replica failure on any
@@ -733,35 +711,20 @@ class RouterService:
         surfaces the replica's own 400 with the offending query index
         (serving a batch with silently-missing entries would read as
         complete)."""
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        queries = payload.get("queries")
+        queries = _object(payload).get("queries")
         if not isinstance(queries, list) or not queries:
-            return 400, {"error": "queries must be a non-empty list"}
-        batch_k = payload.get("k", DEFAULT_K)
-        if not isinstance(batch_k, int) or isinstance(batch_k, bool):
-            return 400, {"error": "k must be an integer"}
+            raise _Reject("queries must be a non-empty list")
+        batch_k = _k(payload)
         prepared = []
         for i, q in enumerate(queries):
             if not isinstance(q, dict):
-                return 400, {"error": f"queries[{i}] must be a JSON object"}
-            q = dict(q)
-            q.setdefault("k", batch_k)
-            if not isinstance(q["k"], int) or isinstance(q["k"], bool):
-                return 400, {"error": f"queries[{i}].k must be an integer"}
-            prepared.append(q)
-        from concurrent.futures import ThreadPoolExecutor
-
-        pairs = [
-            (qi, url) for qi in range(len(prepared)) for url in self.replicas
-        ]
-        with ThreadPoolExecutor(max_workers=min(16, len(pairs))) as ex:
-            flat = list(
-                ex.map(
-                    lambda p: self._post(p[1] + "/query", prepared[p[0]]),
-                    pairs,
-                )
-            )
+                raise _Reject(f"queries[{i}] must be a JSON object")
+            k = _integer(q, "k", batch_k, f"queries[{i}].k must be an integer")
+            prepared.append({**q, "k": k})
+        flat = _sweep(
+            lambda pair: self._post(pair[1] + "/query", pair[0]),
+            [(q, url) for q in prepared for url in self.replicas],
+        )
         n_rep = len(self.replicas)
         results = []
         for qi, q in enumerate(prepared):
@@ -771,64 +734,37 @@ class RouterService:
             if err is not None:
                 status, body = err
                 return status, {**body, "query_index": qi}
-            results.append(
-                {"candidates": self._merge_tier(cand_lists, max(1, q["k"]))}
-            )
+            merged = self._merge_tier(self.tier, cand_lists, max(1, q["k"]))
+            results.append({"candidates": merged})
         return 200, {"results": results}
 
+    @_rejects(_Reject)
     def handle_hybrid(self, payload) -> tuple[int, dict]:
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.retrieval import (
-            merge_topk_scores,
-            rrf_fuse_lists,
-        )
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
-            merge_topk_dist,
-        )
-
         if not self.vector_replicas:
             return 404, {"error": "router has no vector replicas"}
-        if not isinstance(payload, dict):
-            return 400, {"error": "body must be a JSON object"}
-        k = payload.get("k", DEFAULT_K)
-        if not isinstance(k, int) or isinstance(k, bool):
-            return 400, {"error": "k must be an integer"}
-        k = max(1, k)
-        c = payload.get("c", 60)
-        if not isinstance(c, int) or isinstance(c, bool) or c < 1:
-            return 400, {"error": "c must be a positive integer"}
-        lex_payload = {"query": payload.get("query"), "k": k}
+        k = _k(_object(payload))
+        c = _positive(payload, "c", 60)
         vec_payload = {
             key: payload[key]
             for key in ("vector", "n_probe", "shortlist")
             if key in payload
         }
-        vec_payload["k"] = k
-        err, lex_lists = self._gather(self.replicas, lex_payload)
-        if err is not None:
-            return err
-        err, vec_lists = self._gather(self.vector_replicas, vec_payload)
-        if err is not None:
-            return err
-        lex_hits = merge_topk_scores(
-            [
-                [(int(x["id"]), x["score"], x["rank"]) for x in cands]
-                for cands in lex_lists
-            ],
-            k=k,
+        lists = []
+        for urls, sub in (
+            (self.replicas, {"query": payload.get("query"), "k": k}),
+            (self.vector_replicas, {**vec_payload, "k": k}),
+        ):
+            err, cand_lists = self._gather(urls, sub)
+            if err is not None:
+                return err
+            lists.append(cand_lists)
+        # each tier merged exactly first, as (id, score | dist, rank)
+        lex_hits, vec_hits = (
+            [tuple(c.values()) for c in self._merge_tier(tier, cands, k)]
+            for tier, cands in zip(("lexical", "vector"), lists)
         )
-        vec_hits = merge_topk_dist(
-            [
-                [(int(x["id"]), x["dist"], x["rank"]) for x in cands]
-                for cands in vec_lists
-            ],
-            k=k,
-        )
-        fused = rrf_fuse_lists(lex_hits, vec_hits, k=k, c=c)
-        return 200, {
-            "candidates": [
-                {"id": d, "rrf": s, "rank": r} for (d, s, r) in fused
-            ]
-        }
+        fused = retrieval.rrf_fuse_lists(lex_hits, vec_hits, k=k, c=c)
+        return 200, _candidates(fused, ("id", "rrf", "rank"))
 
     def handle_health(self) -> tuple[int, dict]:
         """Aggregate replica liveness AND staleness in one parallel
@@ -840,9 +776,6 @@ class RouterService:
         no index trackable). Liveness alone decides the status code —
         a stale replica still serves a consistent (pre-delete)
         snapshot, so it is a reload prompt, not an outage."""
-        import urllib.error
-        import urllib.request
-        from concurrent.futures import ThreadPoolExecutor
 
         def ping(url):
             try:
@@ -868,11 +801,8 @@ class RouterService:
                 return True, False
             return True, None
 
-        # pinged in PARALLEL: a hung replica costs one timeout for the
-        # whole sweep, not one per replica behind it in the list
         urls = self.replicas + self.vector_replicas
-        with ThreadPoolExecutor(max_workers=min(16, len(urls))) as ex:
-            results = dict(zip(urls, ex.map(ping, urls)))
+        results = dict(zip(urls, _sweep(ping, urls)))
         ok = {url: alive for url, (alive, _s) in results.items()}
         status = 200 if all(ok.values()) else 503
         return status, {
@@ -890,14 +820,9 @@ class RouterService:
         502 tells the operator to re-issue — the merge law is
         unaffected either way (every replica always serves a complete
         answer for its shard, just possibly a pre-delete one)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         body = payload if isinstance(payload, dict) else {}
         urls = self.replicas + self.vector_replicas
-        with ThreadPoolExecutor(max_workers=min(16, len(urls))) as ex:
-            results = list(
-                ex.map(lambda u: self._post(u + "/reload", body), urls)
-            )
+        results = _sweep(lambda u: self._post(u + "/reload", body), urls)
         report = {
             url: resp for url, (_status, resp) in zip(urls, results)
         }
@@ -925,7 +850,7 @@ def start_router_server(
     (after a compaction or retention delete). Same start/stop contract
     as :func:`start_server`."""
     service = RouterService(tier, replicas, vector_replicas, timeout)
-    server, thread = _serve(
+    return _serve(
         {
             "/query": service.handle_query,
             "/query_batch": service.handle_query_batch,
@@ -936,4 +861,3 @@ def start_router_server(
         host,
         port,
     )
-    return server, thread

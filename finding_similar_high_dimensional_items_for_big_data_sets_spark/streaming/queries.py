@@ -121,7 +121,9 @@ def streaming_lsh_probe(
     """Stream-static join version of the online query path (§3.1).
 
     query_sigs_stream(query_id, sig) — e.g. parsed from a Kafka/file
-    source — is banded (stateless per-row transform), joined against
+    source — is banded (stateless per-row transform, never capped:
+    ``lsh.query_bands``; the bucket cap bounds the static corpus side,
+    and on a stream it would need a ranking window), joined against
     the STATIC bands index (stream-static equi-join: no state store
     needed), deduped per micro-batch, scored against static signatures,
     and filtered by similarity threshold.
@@ -132,7 +134,7 @@ def streaming_lsh_probe(
     foreachBatch) can rank. At scale the static side is the persisted
     bands table, partitioned by band_hash.
     """
-    q_bands = lsh.bands_table(query_sigs_stream, params, id_col="query_id")
+    q_bands = lsh.query_bands(query_sigs_stream, params)
     cand = (
         bands_static.join(q_bands, ["band_id", "band_hash"])
         .select("query_id", "doc_id")

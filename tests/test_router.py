@@ -314,6 +314,13 @@ def test_router_failure_law_and_guards(spark, corpus):
             _post(_url(router), "/query", {"vector": [1, 2, 3], "k": 5})
         assert ei.value.code == 400
         assert "num_perm" in json.loads(ei.value.read())["error"]
+        # a replica's 400 for elements outside int64 passes through too
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _post(_url(router), "/query", {"vector": [2**70] * len(qsig)})
+        assert ei.value.code == 400
+        assert json.loads(ei.value.read()) == {
+            "error": "vector elements must fit in int64"
+        }
         # hybrid on a router without vector replicas
         with pytest.raises(urllib.error.HTTPError) as ei:
             _post(_url(router), "/hybrid", {"query": "x", "vector": [0.0]})

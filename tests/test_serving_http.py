@@ -14,10 +14,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import MinHashParams
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import lsh, minhash
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import (
+    ann,
+    lsh,
+    minhash,
+    retrieval,
+    serving_http,
+    serving_vector,
+)
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving import ServingIndex
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import serving_http
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import load_table
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
+    load_table,
+    write_ivfpq_index,
+)
 
 PARAMS = MinHashParams()
 
@@ -76,14 +85,46 @@ def test_invalid_envelopes_are_400(endpoint):
         {"vector": ["x"] * len(qsig)},  # non-integer elements
         {"vector": qsig, "k": "five"},
         [1, 2, 3],  # not an object
+        {"vector": [2**70] * len(qsig)},  # elements outside int64
     ):
         with pytest.raises(urllib.error.HTTPError) as ei:
             _post(url, bad)
         assert ei.value.code == 400
         assert "error" in json.loads(ei.value.read())
     with pytest.raises(urllib.error.HTTPError) as ei:
+        _post(url, {"vector": [-(2**63) - 1] + qsig[1:]})
+    assert json.loads(ei.value.read()) == {
+        "error": "vector elements must fit in int64"
+    }
+    with pytest.raises(urllib.error.HTTPError) as ei:
         _post(url, "{not json")
     assert ei.value.code == 400
+
+
+def test_negative_content_length_is_400(endpoint):
+    """A negative Content-Length is answered at once, by the handler
+    every server and the router share, not read until the client gives
+    up."""
+    import socket
+    from urllib.parse import urlsplit
+
+    url, _qsig, _index = endpoint
+    replica = urlsplit(url)
+    router, _thread = serving_http.start_router_server("lsh", [url])
+    try:
+        for address in ((replica.hostname, replica.port), router.server_address):
+            with socket.create_connection(address, timeout=5) as sock:
+                sock.sendall(
+                    b"POST /query HTTP/1.1\r\nHost: x\r\n"
+                    b"Content-Length: -1\r\n\r\n"
+                )
+                reply = sock.makefile("rb").read()
+            head, _sep, body = reply.partition(b"\r\n\r\n")
+            assert head.split(b"\r\n")[0].split()[1] == b"400"
+            assert json.loads(body) == {"error": "invalid JSON body"}
+    finally:
+        router.shutdown()
+        router.server_close()
 
 
 def test_health_and_404(endpoint):
@@ -246,3 +287,165 @@ def test_sharded_replicas_from_persisted_index_scatter_gather(
                 server.server_close()
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+NO_SPARK = (
+    "server started without a SparkSession — pass spark= to start_* to "
+    "enable /reload"
+)
+OBJECT = {"error": "body must be a JSON object"}
+K_INT = {"error": "k must be an integer"}
+NOT_FOUND = {"error": "not found"}
+SIG_W = PARAMS.num_perm
+DIM = 64  # the sf0.001 embeddings
+
+
+def _error_table(sig, qv):
+    """(server, method, path, body, status, reply) for every 400 and 404
+    the replicas and the router answer; ``body`` is JSON-encoded unless
+    it is a str (sent as is)."""
+    ints = {"error": "vector must be a list of integers"}
+    nums = {"error": "vector must be a list of numbers"}
+    sig_w3 = {"error": f"vector width 3 != num_perm {SIG_W}"}
+    dim_w1 = {"error": f"vector width 1 != dim {DIM}"}
+    n_probe = {"error": "n_probe must be a positive integer"}
+    c_pos = {"error": "c must be a positive integer"}
+    text = {"error": "query must be a string"}
+    no_terms = {"error": "query has no terms"}
+    post = "POST"
+    return [
+        ("lsh", post, "/query", [1, 2, 3], 400, OBJECT),
+        ("lsh", post, "/query", "{not json", 400, {"error": "invalid JSON body"}),
+        ("lsh", post, "/query", {"vector": None}, 400, ints),
+        ("lsh", post, "/query", {"k": "x"}, 400, ints),
+        ("lsh", post, "/query", {"vector": ["x"] * SIG_W}, 400, ints),
+        ("lsh", post, "/query", {"vector": [True] * SIG_W}, 400, ints),
+        ("lsh", post, "/query", {"vector": [1.5] * SIG_W}, 400, ints),
+        ("lsh", post, "/query", {"vector": [1, 2, 3], "k": "x"}, 400, sig_w3),
+        ("lsh", post, "/query", {"vector": sig, "k": "five"}, 400, K_INT),
+        ("lsh", post, "/query", {"vector": sig, "k": False}, 400, K_INT),
+        ("lsh", post, "/reload", {}, 400, {"error": NO_SPARK}),
+        ("lsh", post, "/nope", {}, 404, NOT_FOUND),
+        ("lsh", "GET", "/nope", None, 404, NOT_FOUND),
+        ("vector", post, "/query", [1], 400, OBJECT),
+        ("vector", post, "/query", {"vector": "nope"}, 400, nums),
+        ("vector", post, "/query", {"vector": [None] * DIM}, 400, nums),
+        ("vector", post, "/query", {"vector": [0.0], "k": "x"}, 400, dim_w1),
+        ("vector", post, "/query", {"vector": qv, "k": 1.0}, 400, K_INT),
+        ("vector", post, "/query", {"vector": qv, "k": "x", "n_probe": 0}, 400,
+         K_INT),
+        ("vector", post, "/query", {"vector": qv, "n_probe": 0}, 400, n_probe),
+        ("vector", post, "/query", {"vector": qv, "n_probe": 2.5}, 400, n_probe),
+        ("vector", post, "/query", {"vector": qv, "shortlist": "5"}, 400,
+         {"error": "shortlist must be an integer or null"}),
+        ("vector", post, "/query", {"vector": qv, "shortlist": 5}, 400,
+         {"error": "shortlist rerank needs vectors retained at export "
+                   "(pass embeddings to from_store)"}),
+        ("vector", post, "/reload", {}, 400, {"error": NO_SPARK}),
+        ("vector", post, "/hybrid", {}, 404, NOT_FOUND),
+        ("vector", "GET", "/nope", None, 404, NOT_FOUND),
+        ("lexical", post, "/query", '"x"', 400, OBJECT),
+        ("lexical", post, "/query", {"query": 7}, 400, text),
+        ("lexical", post, "/query", {"query": "a", "k": "x"}, 400, K_INT),
+        ("lexical", post, "/query", {"query": "  "}, 400, no_terms),
+        ("lexical", post, "/reload", {}, 400, {"error": NO_SPARK}),
+        ("lexical", post, "/nope", {}, 404, NOT_FOUND),
+        ("lexical", post, "/hybrid", [1], 400, OBJECT),
+        ("lexical", post, "/hybrid", {"query": 7, "vector": [0.0]}, 400, text),
+        ("lexical", post, "/hybrid", {"query": "a", "vector": "x"}, 400, nums),
+        ("lexical", post, "/hybrid", {"query": "a", "vector": [0.0]}, 400, dim_w1),
+        ("lexical", post, "/hybrid", {"query": "a", "vector": qv, "k": "x",
+                                      "c": 0}, 400, K_INT),
+        ("lexical", post, "/hybrid", {"query": "a", "vector": qv, "n_probe": 0,
+                                      "c": 0}, 400, n_probe),
+        ("lexical", post, "/hybrid", {"query": "a", "vector": qv, "c": 0}, 400,
+         c_pos),
+        ("lexical", post, "/hybrid", {"query": " ", "vector": qv}, 400, no_terms),
+        ("router", post, "/query", [1], 400, OBJECT),
+        ("router", post, "/query", {"vector": [1, 2, 3], "k": "x"}, 400, K_INT),
+        ("router", post, "/query", {"vector": [1, 2, 3]}, 400, sig_w3),
+        ("router", post, "/query", {"vector": sig, "k": True}, 400, K_INT),
+        ("router", post, "/query_batch", "7", 400, OBJECT),
+        ("router", post, "/query_batch", {"queries": []}, 400,
+         {"error": "queries must be a non-empty list"}),
+        ("router", post, "/query_batch", {"queries": {"vector": sig}}, 400,
+         {"error": "queries must be a non-empty list"}),
+        ("router", post, "/query_batch", {"queries": [7], "k": "x"}, 400, K_INT),
+        ("router", post, "/query_batch", {"queries": [{"vector": sig}, 7]}, 400,
+         {"error": "queries[1] must be a JSON object"}),
+        ("router", post, "/query_batch",
+         {"queries": [{"vector": sig}, {"vector": sig, "k": "x"}]}, 400,
+         {"error": "queries[1].k must be an integer"}),
+        ("router", post, "/query_batch",
+         {"queries": [{"vector": sig}, {"vector": [1, 2, 3]}]}, 400,
+         {**sig_w3, "query_index": 1}),
+        ("router", post, "/hybrid", [1], 404,
+         {"error": "router has no vector replicas"}),
+        ("router", post, "/nope", {}, 404, NOT_FOUND),
+        ("router", "GET", "/nope", None, 404, NOT_FOUND),
+        ("hybrid_router", post, "/hybrid", [1], 400, OBJECT),
+        ("hybrid_router", post, "/hybrid", {"query": "a", "k": "x", "c": 0}, 400,
+         K_INT),
+        ("hybrid_router", post, "/hybrid", {"query": "a", "vector": qv, "c": 0},
+         400, c_pos),
+        ("hybrid_router", post, "/hybrid", {"query": 7, "vector": qv}, 400, text),
+        ("hybrid_router", post, "/hybrid", {"query": " ", "vector": qv}, 400,
+         no_terms),
+        ("hybrid_router", post, "/hybrid", {"query": "a", "vector": [0.0]}, 400,
+         dim_w1),
+        ("hybrid_router", post, "/hybrid",
+         {"query": "a", "vector": qv, "n_probe": 0}, 400, n_probe),
+        ("hybrid_router", post, "/query", {"query": 7}, 400, text),
+        ("hybrid_router", post, "/query_batch",
+         {"queries": [{"query": "a"}, {"query": None}]}, 400,
+         {**text, "query_index": 1}),
+    ]
+
+
+def test_every_error_reply_is_pinned(endpoint, spark, sf_dir, tmp_path):
+    """Exact status and JSON body of every 400 and 404 of the LSH,
+    vector, lexical and hybrid replicas and of the router's /query,
+    /query_batch and /hybrid, including which rule wins when a body
+    breaks several."""
+    lsh_url, sig, _index = endpoint
+    emb = load_table(spark, sf_dir, "embeddings")
+    store = str(tmp_path / "ivfpq")
+    write_ivfpq_index(
+        emb, store, ann.random_centroids(DIM, 8, seed=43),
+        ann.random_codebooks(DIM, 8, 16, seed=44),
+    )
+    vec_index = serving_vector.ServingVectorIndex.from_store(spark, store)
+    qv = [float(v) for v in emb.first()["embedding"]]
+    lex_index = retrieval.ServingLexicalIndex.from_dataframe(
+        load_table(spark, sf_dir, "documents")
+    )
+
+    def _url(server):
+        host, port = server.server_address
+        return f"http://{host}:{port}"
+
+    vec, _t = serving_http.start_vector_server(vec_index)
+    lex, _t = serving_http.start_lexical_server(lex_index, vec_index)
+    router, _t = serving_http.start_router_server("lsh", [lsh_url])
+    hybrid, _t = serving_http.start_router_server("lexical", [_url(lex)], [_url(vec)])
+    servers = {
+        "lsh": lsh_url,
+        "vector": _url(vec),
+        "lexical": _url(lex),
+        "router": _url(router),
+        "hybrid_router": _url(hybrid),
+    }
+    try:
+        for name, method, path, body, status, reply in _error_table(sig, qv):
+            data = None
+            if method == "POST":
+                data = (body if isinstance(body, str) else json.dumps(body)).encode()
+            req = urllib.request.Request(servers[name] + path, data=data, method=method)
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(req, timeout=30)
+            got = (ei.value.code, json.loads(ei.value.read()))
+            assert got == (status, reply), (name, method, path, body)
+    finally:
+        for server in (vec, lex, router, hybrid):
+            server.shutdown()
+            server.server_close()

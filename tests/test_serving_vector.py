@@ -190,6 +190,9 @@ def test_vector_http_endpoint(spark, store):
         assert post({"vector": [1.0, 2.0]})[0] == 400
         assert post({"vector": "nope"})[0] == 400
         assert post({"vector": qv, "k": "x"})[0] == 400
+        assert post({"vector": [10**400] * len(qv)}) == (
+            400, {"error": "vector elements must fit in float64"}
+        )
         assert post({"vector": qv, "shortlist": 5})[0] == 400  # no vectors kept
     finally:
         server.shutdown()

@@ -93,31 +93,39 @@ def test_session_window_gap_merges(spark):
 
 
 def test_streaming_lsh_probe_stream_static(spark, sf_dir, tmp_path):
-    params = MinHashParams()
+    """Stream-static probe, uncapped and under a bucket cap: the cap
+    bounds the static corpus bands only, so the query stream is banded
+    without it (a capped stream would need a ranking window, which
+    streaming rejects)."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash.signatures(docs, params).cache()
-    bands = lsh.bands_table(sigs, params).cache()
-    # query stream: two query docs streamed from parquet
-    qsigs = sigs.filter(F.col("doc_id").isin([3, 13])).select(
-        F.col("doc_id").alias("query_id"), "sig"
-    )
-    src = str(tmp_path / "qstream")
-    qsigs.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(qsigs.schema).parquet(src)
-    out = SQ.streaming_lsh_probe(stream, bands, sigs, params, threshold=0.9)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("lsh_stream_result")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql("select * from lsh_stream_result").collect()
-    # each query matches at least itself with score 1.0
-    self_hits = {(r["query_id"], r["doc_id"]) for r in got if r["score"] == 1.0}
-    assert (3, 3) in self_hits and (13, 13) in self_hits
+    for run, params in enumerate(
+        (MinHashParams(), MinHashParams(max_bucket_size=1000))
+    ):
+        sigs = minhash.signatures(docs, params).cache()
+        bands = lsh.bands_table(sigs, params).cache()
+        # query stream: two query docs streamed from parquet
+        qsigs = sigs.filter(F.col("doc_id").isin([3, 13])).select(
+            F.col("doc_id").alias("query_id"), "sig"
+        )
+        src = str(tmp_path / f"qstream{run}")
+        qsigs.write.mode("overwrite").parquet(src)
+        stream = spark.readStream.schema(qsigs.schema).parquet(src)
+        out = SQ.streaming_lsh_probe(stream, bands, sigs, params, threshold=0.9)
+        q = (
+            out.writeStream.format("memory")
+            .queryName(f"lsh_stream_result{run}")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / f"ckpt2_{run}"))
+            .start()
+        )
+        q.awaitTermination(180)
+        got = spark.sql(f"select * from lsh_stream_result{run}").collect()
+        # each query matches at least itself with score 1.0
+        self_hits = {
+            (r["query_id"], r["doc_id"]) for r in got if r["score"] == 1.0
+        }
+        assert (3, 3) in self_hits and (13, 13) in self_hits
 
 
 def test_multimodal_features_plumbing(spark):
