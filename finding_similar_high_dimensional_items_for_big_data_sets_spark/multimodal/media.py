@@ -170,20 +170,3 @@ def sample_frames(
             )
 
     return media.mapInPandas(run, FRAMES_SCHEMA)
-
-
-def resize_image(media: DataFrame, width: int, height: int, real: bool = False) -> DataFrame:
-    """Image resize plumbing: passes payload through the stub transform
-    and rewrites the metadata columns (real path: PIL resize)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if real:
-                raise NotImplementedError("real image resize unavailable")
-            out = pdf.copy()
-            mask = out["kind"] == "image"
-            out.loc[mask, "width"] = width
-            out.loc[mask, "height"] = height
-            yield out
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)

@@ -424,75 +424,6 @@ def ann_lsh_topk_batch(
     )
 
 
-def ann_lsh_topk_batch_target_recall(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_planes: int | None = 8,
-    seed: int = 42,
-    target_recall: float = 0.9,
-    target_cos: float = 0.9,
-    max_probe: int = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Batch twin of :func:`ann_lsh_topk_target_recall`: ONE Spark job
-    for the whole query set, with each query's probe budget chosen
-    individually by :func:`probe_plan_for_recall` — queries sitting
-    near their hyperplanes probe more buckets, confident ones fewer,
-    and the (query_id, bucket) table that the batch join broadcasts is
-    simply the union of the per-query plans. Per query the answer
-    equals :func:`ann_lsh_topk_target_recall` at the same config."""
-    if n_planes is None:
-        n_planes = auto_n_planes(
-            n_rows if n_rows is not None else embeddings.count()
-        )
-    spark = embeddings.sparkSession
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
-    dim = len(qrows[0][query_vec_col])
-    probe_rows = []
-    for r in qrows:
-        qv = [float(v) for v in r[query_vec_col]]
-        # the plan IS the scan set: probe_plan_for_recall enumerates
-        # with probe_buckets' own raw-margin heap, so no re-derivation
-        plan, _est = probe_plan_for_recall(
-            qv, n_planes, seed, target_recall, target_cos, max_probe
-        )
-        for b in plan:
-            probe_rows.append((int(r[query_id_col]), int(b)))
-    probe_df = spark.createDataFrame(
-        probe_rows, f"{query_id_col} long, bucket int"
-    )
-    bucketed = with_hyperplane_bucket(embeddings, dim, n_planes, seed, vec_col)
-    qv_df = queries.select(query_id_col, query_vec_col)
-    scored = (
-        bucketed.join(F.broadcast(probe_df), "bucket")
-        .join(F.broadcast(qv_df), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col(query_vec_col)), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
-    )
-
-
 def ann_lsh_topk_store(
     spark,
     path: str,

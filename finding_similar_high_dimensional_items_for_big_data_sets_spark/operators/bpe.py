@@ -1,30 +1,19 @@
-"""BPE tokenizer training over the corpus (Sennrich et al. 2016,
-"Neural Machine Translation of Rare Words with Subword Units") —
-the tokenizer-building step of a pretraining data pipeline.
+"""BPE word and symbol-pair statistics over the corpus (Sennrich et
+al. 2016, "Neural Machine Translation of Rare Words with Subword
+Units") — the statistics a BPE tokenizer's merge loop runs on.
 
-Scale split mirrors how production BPE trainers work: ONE distributed
-pass reduces the corpus to the word-frequency table (bounded by
-|vocab|, not corpus size — a 100 TB corpus still has ~10^7 distinct
-words), and the merge loop then runs over that table driver-side with
-plain Python — iterating distributed over data the driver holds
-trivially would add a full shuffle per merge for nothing. Encoding
-with the learned merges runs executor-side as an Arrow-batched pandas
-UDF (per-row greedy merge-by-rank, no shuffle).
-
-The symbol-pair statistics are also exposed as a DataFrame
-(:func:`pair_counts`) so the first merge decision is oracle-checkable
-in SQL; training consistency is tested against it (the first learned
-merge must equal the top oracle-checked pair).
+ONE distributed pass reduces the corpus to the word-frequency table
+(:func:`word_counts`, bounded by |vocab|, not corpus size — a 100 TB
+corpus still has ~10^7 distinct words). :func:`pair_counts` turns that
+table into the weighted symbol-pair frequencies over the initial
+character vocabulary, the statistic BPE's first merge maximizes, as a
+DataFrame so it is oracle-checkable in SQL.
 """
 
 from __future__ import annotations
 
-from collections import Counter
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.text import tokenize
 
@@ -74,97 +63,3 @@ def pair_counts(wc: DataFrame) -> DataFrame:
         .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
         .agg(F.sum("cnt").alias("cnt"))
     )
-
-
-def _merge_word(sym: tuple, pair: tuple) -> tuple:
-    out = []
-    i = 0
-    while i < len(sym):
-        if i + 1 < len(sym) and (sym[i], sym[i + 1]) == pair:
-            out.append(sym[i] + sym[i + 1])
-            i += 2
-        else:
-            out.append(sym[i])
-            i += 1
-    return tuple(out)
-
-
-def train_bpe(wc: dict[str, int] | DataFrame, n_merges: int) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merges from word counts (a dict, or the
-    :func:`word_counts` DataFrame — collected once; it is vocab-sized).
-
-    Deterministic: ties on pair count break lexicographically, so the
-    merge list is a pure function of the counts. Stops early when no
-    pair occurs twice.
-    """
-    if isinstance(wc, DataFrame):
-        wc = {r["word"]: r["cnt"] for r in wc.collect()}
-    vocab: dict[tuple, int] = {}
-    for w, c in wc.items():
-        sym = tuple(w) + (EOW,)
-        vocab[sym] = vocab.get(sym, 0) + int(c)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs: Counter = Counter()
-        for sym, c in vocab.items():
-            for a, b in zip(sym, sym[1:]):
-                pairs[(a, b)] += c
-        if not pairs:
-            break
-        best, best_cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best_cnt < 2:
-            break
-        merges.append(best)
-        vocab = {
-            _merge_word(sym, best): c for sym, c in vocab.items()
-        }
-    return merges
-
-
-def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
-    """Greedy lowest-rank merging of one word (the standard BPE
-    encoder): repeatedly merge the present pair with the smallest
-    training rank until none applies."""
-    sym = list(word) + [EOW]
-    while len(sym) > 1:
-        best_i, best_rank = -1, None
-        for i in range(len(sym) - 1):
-            r = ranks.get((sym[i], sym[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_i, best_rank = i, r
-        if best_rank is None:
-            break
-        sym[best_i : best_i + 2] = [sym[best_i] + sym[best_i + 1]]
-    return sym
-
-
-def apply_bpe(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
-    """Encode every document with the learned merges — adds a
-    ``bpe_tokens array<string>`` column. Executor-side Arrow pandas
-    UDF with a per-batch word cache (natural-language corpora repeat
-    words heavily), merge table broadcast via closure; shuffle-free.
-    """
-    ranks = {p: i for i, p in enumerate(merges)}
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _encode(texts: pd.Series) -> pd.Series:
-        cache: dict[str, list[str]] = {}
-
-        def enc(t):
-            out = []
-            for w in (t or "").split(" "):
-                if not w:
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    got = cache[w] = encode_word(w, ranks)
-                out.extend(got)
-            return out
-
-        return texts.map(enc)
-
-    return docs.withColumn("bpe_tokens", _encode(F.col(text_col)))

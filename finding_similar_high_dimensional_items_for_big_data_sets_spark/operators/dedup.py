@@ -612,10 +612,13 @@ def _cosine_pairs_blocked(
     ``with_block(df, vec_colname)`` adds a ``bucket`` blocking-key
     column (an expression OR an Arrow stage), then self-join within
     blocks, verify with the exact (rounded-6) cosine fold, and
-    optionally clone-compress identical vectors first. Both
-    :func:`embedding_cosine_duplicates` (hyperplane-sign blocks) and
-    :func:`semantic_duplicates` (nearest-centroid cells) route here,
-    so their outputs differ ONLY in the candidate blocking.
+    optionally clone-compress identical vectors first.
+    :func:`embedding_cosine_duplicates` (hyperplane-sign blocks),
+    :func:`embedding_cosine_duplicates_multiprobe` (exploded probe
+    buckets) and :func:`semantic_duplicates` (nearest-centroid cells)
+    all route here, so their outputs differ ONLY in the candidate
+    blocking. A row may carry several ``bucket`` values (one row per
+    value); the final ``distinct`` keeps each pair once.
 
     ``scorer="join"`` verifies candidates with the per-pair fold
     expression (oracle bit-parity); ``scorer="arrow"`` replaces the
@@ -865,125 +868,15 @@ def embedding_cosine_duplicates_multiprobe(
         n_planes = auto_n_planes(
             n_rows if n_rows is not None else embeddings.count()
         )
-    if compress_identical:
-        # Clone skew: identical vectors emit identical probe sets, so a
-        # clone mega-cluster would go quadratic inside EVERY probed
-        # bucket. Same lossless compression as the single-bucket
-        # operator: probe + join on one representative per distinct
-        # vector value, expand members afterwards.
-        groups = embeddings.groupBy(F.col(vec_col).alias("vec")).agg(
-            F.min(id_col).alias("rep"),
-            F.sort_array(F.collect_list(id_col)).alias("members"),
-        )
-        # Materialize the probed side once (the self-join plans the
-        # probe-emission expression twice otherwise — guide §3.3) and
-        # carry the per-rep norm so verification folds only the dot
-        # (same sub-expressions as cosine_similarity, bit-identical).
-        probed = groups.select(
-            F.col("rep"),
-            F.col("vec").alias("__v"),
-            "members",
-            l2_norm(F.col("vec")).alias("__n"),
-            F.explode(
-                _probe_array("vec", dim, n_planes, seed, probe_margin)
-            ).alias("__pb"),
-        ).transform(materialize)
-        la = probed.select(
-            F.col("rep").alias("rep_a"),
-            F.col("__v").alias("__va"),
-            F.col("members").alias("members_a"),
-            F.col("__n").alias("__na"),
-            "__pb",
-        )
-        lb = probed.select(
-            F.col("rep").alias("rep_b"),
-            F.col("__v").alias("__vb"),
-            F.col("members").alias("members_b"),
-            F.col("__n").alias("__nb"),
-            "__pb",
-        )
-        cross = (
-            la.join(lb, "__pb")
-            .filter(F.col("rep_a") < F.col("rep_b"))
-            .select(
-                "members_a",
-                "members_b",
-                F.round(
-                    F.try_divide(
-                        dot_product(F.col("__va"), F.col("__vb")),
-                        F.col("__na") * F.col("__nb"),
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= threshold)
-            .select(F.explode("members_a").alias("ma"), "members_b", "cos_sim")
-            .select("ma", F.explode("members_b").alias("mb"), "cos_sim")
-            .select(
-                F.least("ma", "mb").alias("vec_a"),
-                F.greatest("ma", "mb").alias("vec_b"),
-                "cos_sim",
-            )
-        )
-        within = (
-            groups.filter(F.size("members") > 1)
-            .select(
-                "members",
-                F.round(
-                    cosine_similarity(F.col("vec"), F.col("vec")), 6
-                ).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= threshold)
-            .select(F.posexplode("members").alias("__i", "ma"), "members", "cos_sim")
-            .select(
-                "ma",
-                F.explode(
-                    F.slice("members", F.col("__i") + 2, F.size("members"))
-                ).alias("mb"),
-                "cos_sim",
-            )
-            .select(
-                F.col("ma").alias("vec_a"), F.col("mb").alias("vec_b"), "cos_sim"
-            )
-        )
-        return cross.unionByName(within).distinct()
 
-    probed = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        l2_norm(F.col(vec_col)).alias("__n"),
-        F.explode(
-            _probe_array(vec_col, dim, n_planes, seed, probe_margin)
-        ).alias("__pb"),
-    ).transform(materialize)
-    left = probed.select(
-        F.col(id_col).alias("vec_a"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-        "__pb",
-    )
-    right = probed.select(
-        F.col(id_col).alias("vec_b"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        "__pb",
-    )
-    return (
-        left.join(right, "__pb")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                F.try_divide(
-                    dot_product(F.col("__va"), F.col("__vb")),
-                    F.col("__na") * F.col("__nb"),
-                ),
-                6,
-            ).alias("cos_sim"),
+    def with_block(df: DataFrame, col: str) -> DataFrame:
+        return df.withColumn(
+            "bucket",
+            F.explode(_probe_array(col, dim, n_planes, seed, probe_margin)),
         )
-        .filter(F.col("cos_sim") >= threshold)
-        .distinct()
+
+    return _cosine_pairs_blocked(
+        embeddings, with_block, threshold, id_col, vec_col, compress_identical
     )
 
 
@@ -1204,44 +1097,36 @@ def semantic_outliers(
         # scoring, same O(branch * log n_cells) per-row class as
         # semantic_duplicates' HKM path; ``assign`` is ignored.
         proto = _proto_scores_hkm(embeddings, centroids, id_col, vec_col)
-        q = 1.0 - float(drop_frac)
-        cuts = proto.groupBy("cell").agg(
-            F.expr(f"percentile(proto_score, {q!r}D)").alias("cut")
-        )
-        return proto.join(F.broadcast(cuts), "cell").select(
-            id_col,
-            "cell",
-            "proto_score",
-            F.coalesce(F.col("proto_score") <= F.col("cut"), F.lit(True)).alias(
-                "keep"
-            ),
-        )
-    if assign == "auto":
-        assign = "arrow" if len(centroids) > 64 else "expr"
-    q = 1.0 - float(drop_frac)
-    if assign == "expr":
-        vec = F.col(vec_col)
-        cos_all = F.array(
-            *[
-                F.round(
-                    cosine_similarity(vec, F.array(*[F.lit(float(x)) for x in c])), 6
-                )
-                for c in centroids
-            ]
-        )
-        proto = embeddings.select(
-            F.col(id_col),
-            nearest_cell(vec, centroids).alias("cell"),
-            cos_all.alias("cos_all"),
-        ).select(
-            id_col,
-            "cell",
-            F.element_at("cos_all", F.col("cell") + 1).alias("proto_score"),
-        )
-    elif assign == "arrow":
-        proto = _proto_scores_arrow(embeddings, centroids, id_col, vec_col)
     else:
-        raise ValueError(f"assign must be 'auto', 'expr', or 'arrow', got {assign!r}")
+        if assign == "auto":
+            assign = "arrow" if len(centroids) > 64 else "expr"
+        if assign == "expr":
+            vec = F.col(vec_col)
+            cos_all = F.array(
+                *[
+                    F.round(
+                        cosine_similarity(vec, F.array(*[F.lit(float(x)) for x in c])),
+                        6,
+                    )
+                    for c in centroids
+                ]
+            )
+            proto = embeddings.select(
+                F.col(id_col),
+                nearest_cell(vec, centroids).alias("cell"),
+                cos_all.alias("cos_all"),
+            ).select(
+                id_col,
+                "cell",
+                F.element_at("cos_all", F.col("cell") + 1).alias("proto_score"),
+            )
+        elif assign == "arrow":
+            proto = _proto_scores_arrow(embeddings, centroids, id_col, vec_col)
+        else:
+            raise ValueError(
+                f"assign must be 'auto', 'expr', or 'arrow', got {assign!r}"
+            )
+    q = 1.0 - float(drop_frac)
     cuts = proto.groupBy("cell").agg(
         F.expr(f"percentile(proto_score, {q!r}D)").alias("cut")
     )

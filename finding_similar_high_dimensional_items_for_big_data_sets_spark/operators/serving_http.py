@@ -352,7 +352,15 @@ class _Handler(BaseHTTPRequestHandler):
     -> (status, body)`` for POST) and ``health`` (``() -> (status,
     body)`` for ``GET /health``). A ``Content-Length`` that is not a
     non-negative integer is answered 400 at once: a negative one would
-    otherwise read until the client gives up."""
+    otherwise read until the client gives up.
+
+    ``timeout`` bounds every socket read (seconds, the router's
+    per-replica default): a body shorter than its ``Content-Length``
+    is answered 408 and the connection closed, so a slow or stalled
+    client cannot hold a handler thread — the server starts one per
+    connection."""
+
+    timeout = 10.0
 
     def do_POST(self):  # noqa: N802 (http.server API)
         handle = self.server.routes.get(self.path.rstrip("/"))
@@ -364,6 +372,10 @@ class _Handler(BaseHTTPRequestHandler):
             if length < 0:
                 raise ValueError(f"negative Content-Length {length}")
             payload = json.loads(self.rfile.read(length) or b"null")
+        except TimeoutError:
+            self.close_connection = True
+            self._reply(408, {"error": "request timed out"})
+            return
         except (ValueError, json.JSONDecodeError):
             self._reply(400, {"error": "invalid JSON body"})
             return
@@ -515,6 +527,35 @@ def start_lexical_server(
 # ---------------------------------------------------------------------------
 
 
+#: The fields of one candidate entry in each tier's ``/query`` reply:
+#: ``(id, score field, third field)``. The router's merge reads these
+#: and its cover check refuses a replica entry that lacks one.
+_TIER_FIELDS = {
+    "lsh": ("id", "score", "vector_preview"),
+    "vector": ("id", "dist", "rank"),
+    "lexical": ("id", "score", "rank"),
+}
+
+
+def _bad_entry(tier: str, cand) -> str | None:
+    """Why a replica's candidate entry cannot be merged under
+    ``tier``, or None when it can: a JSON object with every field of
+    the tier, an integer ``id`` (and ``rank``), a numeric score."""
+    if not isinstance(cand, dict):
+        return "candidate entry is not a JSON object"
+    for field in _TIER_FIELDS[tier]:
+        if field not in cand:
+            return f"candidate entry without {field!r}"
+    _, score, third = _TIER_FIELDS[tier]
+    if not _is_int(cand["id"]):
+        return "candidate 'id' is not an integer"
+    if third == "rank" and not _is_int(cand["rank"]):
+        return "candidate 'rank' is not an integer"
+    if isinstance(cand[score], bool) or not isinstance(cand[score], (int, float)):
+        return f"candidate {score!r} is not a number"
+    return None
+
+
 def _sweep(call, items: list) -> list:
     """``[call(item) for item in items]`` on up to 16 threads: the
     router's one way to reach its replicas, for the point, batch,
@@ -607,83 +648,82 @@ class RouterService:
         return _sweep(lambda u: self._post(u + "/query", payload), urls)
 
     @staticmethod
-    def _check_cover(urls: list[str], results):
+    def _check_cover(tier: str, urls: list[str], results):
         """(error_response | None, per-replica candidate lists) from one
         query's fan-out results — one pass, replica order: envelope
-        rejection, replica error, or a 200 without a candidate list (a
-        replica failure too — 502 like any other incomplete cover,
-        never a KeyError that drops the connection). Bodies are dicts
-        by _parse_body. ONE implementation for the point and batch
-        endpoints so the failure law cannot diverge between them."""
+        rejection, replica error, or a 200 whose candidates are not a
+        list of entries :meth:`_merge_tier` can merge under ``tier``
+        (a replica failure too — 502 like any other incomplete cover,
+        never an exception that drops the connection). Bodies are
+        dicts by _parse_body. ONE implementation for the point, batch
+        and hybrid endpoints so the failure law cannot diverge between
+        them."""
         for url, (status, body) in zip(urls, results):
             if status == 400:
                 # envelope rejection — every replica validates alike;
                 # surface the replica's own message to the caller
                 return (400, body), None
-            if status != 200 or not isinstance(
-                body.get("candidates"), list
-            ):
-                return (
-                    502,
-                    {
-                        "error": "replica failed; partial answers are not "
-                        "served (merge is only exact over a complete cover)",
-                        "replica": url,
-                        "detail": (
-                            body.get("error")
-                            if status != 200
-                            else "200 response without a candidates list"
-                        ),
-                    },
-                ), None
+            cands = body.get("candidates")
+            if status != 200:
+                detail = body.get("error")
+            elif not isinstance(cands, list):
+                detail = "200 response without a candidates list"
+            else:
+                detail = next(
+                    filter(None, (_bad_entry(tier, c) for c in cands)), None
+                )
+                if detail is None:
+                    continue
+            return (
+                502,
+                {
+                    "error": "replica failed; partial answers are not "
+                    "served (merge is only exact over a complete cover)",
+                    "replica": url,
+                    "detail": detail,
+                },
+            ), None
         return None, [body["candidates"] for _s, body in results]
 
-    def _gather(self, urls: list[str], payload: dict):
+    def _gather(self, tier: str, urls: list[str], payload: dict):
         """(error_response | None, per-replica candidate lists)."""
-        return self._check_cover(urls, self._fan(urls, payload))
+        return self._check_cover(tier, urls, self._fan(urls, payload))
 
     @staticmethod
     def _merge_tier(tier: str, cand_lists, k: int) -> list[dict]:
         """Merge per-replica candidate lists under ``tier``'s exact law,
         in the tier's own response shape — one implementation for the
         point, batch and hybrid endpoints, so a batch entry's answer is
-        identical to posting that query alone."""
+        identical to posting that query alone. Entries carry
+        ``_TIER_FIELDS[tier]``, as :meth:`_check_cover` made sure."""
+        fields = _TIER_FIELDS[tier]
+        _, score, third = fields
         if tier == "lsh":
-            previews = {
-                int(c["id"]): c["vector_preview"]
-                for cands in cand_lists
-                for c in cands
-            }
+            previews = {c["id"]: c[third] for cands in cand_lists for c in cands}
             merged = serving.merge_topk(
                 [
-                    [(int(c["id"]), c["score"], i + 1) for i, c in enumerate(cands)]
+                    [(c["id"], c[score], i + 1) for i, c in enumerate(cands)]
                     for cands in cand_lists
                 ],
                 k=k,
             )
-            return [
-                {"id": d, "score": s, "vector_preview": previews[d]}
-                for (d, s, _r) in merged
-            ]
-        field, merge = (
-            ("dist", serving_vector.merge_topk_dist)
+            return [dict(zip(fields, (d, s, previews[d]))) for (d, s, _r) in merged]
+        merge = (
+            serving_vector.merge_topk_dist
             if tier == "vector"
-            else ("score", retrieval.merge_topk_scores)
+            else retrieval.merge_topk_scores
         )
         merged = merge(
-            [
-                [(int(c["id"]), c[field], c["rank"]) for c in cands]
-                for cands in cand_lists
-            ],
+            [[(c["id"], c[score], c[third]) for c in cands] for cands in cand_lists],
             k=k,
         )
-        return [dict(zip(("id", field, "rank"), hit)) for hit in merged]
+        return [dict(zip(fields, hit)) for hit in merged]
 
     # -- endpoints ----------------------------------------------------------
     @_rejects(_Reject)
     def handle_query(self, payload) -> tuple[int, dict]:
         k = _k(_object(payload))
-        err, cand_lists = self._gather(self.replicas, payload)
+        err, cand_lists = self._gather(self.tier, self.replicas, payload)
         if err is not None:
             return err
         return 200, {"candidates": self._merge_tier(self.tier, cand_lists, k)}
@@ -729,7 +769,7 @@ class RouterService:
         results = []
         for qi, q in enumerate(prepared):
             err, cand_lists = self._check_cover(
-                self.replicas, flat[qi * n_rep : (qi + 1) * n_rep]
+                self.tier, self.replicas, flat[qi * n_rep : (qi + 1) * n_rep]
             )
             if err is not None:
                 status, body = err
@@ -750,11 +790,11 @@ class RouterService:
             if key in payload
         }
         lists = []
-        for urls, sub in (
-            (self.replicas, {"query": payload.get("query"), "k": k}),
-            (self.vector_replicas, {**vec_payload, "k": k}),
+        for tier, urls, sub in (
+            ("lexical", self.replicas, {"query": payload.get("query"), "k": k}),
+            ("vector", self.vector_replicas, {**vec_payload, "k": k}),
         ):
-            err, cand_lists = self._gather(urls, sub)
+            err, cand_lists = self._gather(tier, urls, sub)
             if err is not None:
                 return err
             lists.append(cand_lists)

@@ -3,10 +3,11 @@
 The reference ingests queries as HTTP JSON ``{"vector": List[int],
 "k": int = 10}`` validated by Pydantic (reference
 ``app/src/query_service.py:34-46``). The Spark-first analog is a
-DataFrame of query rows — from a JSON-lines file (batch), from a
-directory watched by Structured Streaming (continuous ingest feeding
+DataFrame of query rows — from a directory of JSON-lines files
+watched by Structured Streaming (continuous ingest feeding
 ``streaming.streaming_lsh_probe`` / ``streaming.running_topk``), or
-from literal vectors on the driver.
+from any DataFrame of raw envelopes passed to
+:func:`validate_envelopes`.
 
 Validation mirrors the reference's envelope: ``vector`` must be a
 non-null array of the configured signature width, ``k`` defaults to
@@ -38,14 +39,6 @@ ENVELOPE_SCHEMA = StructType(
 )
 
 DEFAULT_K = 10  # reference QueryRequest.k default (query_service.py:46)
-
-
-def queries_from_json(
-    spark: SparkSession, path: str, params: MinHashParams | None = None
-) -> DataFrame:
-    """Batch: JSON-lines envelopes -> (query_id, sig, k), validated."""
-    raw = spark.read.schema(ENVELOPE_SCHEMA).json(path)
-    return validate_envelopes(raw, params)
 
 
 def queries_from_json_stream(

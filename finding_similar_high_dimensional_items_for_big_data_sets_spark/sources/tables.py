@@ -14,25 +14,6 @@ from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.ma
     materialize,
 )
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 def _scan_splits_estimate(spark: SparkSession, path: str, cap: int) -> int:
     """Estimated scan split count from file METADATA (one FS listing —
@@ -123,31 +104,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def write_sharded(df: DataFrame, path: str, num_shards: int, key: str = "doc_id") -> None:
     """S3 shard sink: contiguous key-range shards, as the reference's
     ``index_builder.split_and_save`` (``app/src/index_builder.py:22-36``)
     but expressed as range partitioning (deterministic per key, not per
     insertion order)."""
     df.repartitionByRange(num_shards, key).write.mode("overwrite").parquet(path)
-
-
-def write_bands(bands: DataFrame, path: str, num_buckets: int = 64) -> None:
-    """Persist the LSH index table partition-hashed on band_hash.
-
-    Plain parquet carries no bucketing metadata, so a re-read does NOT
-    avoid the probe-join shuffle — this sink is for layout/size
-    control only. Use :func:`write_bands_bucketed` for a shuffle-free
-    batch-probe index."""
-    bands.repartition(num_buckets, "band_hash").write.mode("overwrite").parquet(path)
 
 
 #: ingest_batch value for data written at initial build / compaction

@@ -5,7 +5,7 @@ request/response HTTP (``app/src/query_service.py:139-196``). These
 operators give the engine the streaming story a large-scale pipeline
 needs, entirely on Structured Streaming built-ins:
 
-- event-time tumbling / sliding / session window aggregations with
+- event-time sliding / session window aggregations with
   watermarks (late-data handling)
 - stream-static LSH probe: a stream of query signatures joined against
   the static bands index — the streaming version of ``POST /query``
@@ -37,33 +37,6 @@ def _watermarked(events: DataFrame, watermark: str) -> DataFrame:
     if dict(events.dtypes).get("ts") == "timestamp_ntz":
         events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return events.withWatermark("ts", watermark)
-
-
-def hourly_event_stats(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling 1-hour window per event_type: count + exact total.
-
-    With a streaming input, the watermark bounds state and drops
-    late-beyond-watermark rows; on batch input it's a plain window agg.
-    """
-    src = _watermarked(events, watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "total_value"
-            ),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def sliding_event_rate(

@@ -1,68 +1,25 @@
 """Custom stateful streaming operators (``applyInPandasWithState``).
 
-The reference has no streaming runtime at all (SURVEY §2.9); these give
-the engine the stateful pieces a continuously-ingesting training-data
-pipeline needs. The flagship op is **streaming first-seen dedup**: keep
-only the first occurrence of each content key *across micro-batches* —
-the streaming counterpart of the batch ``dedup.exact_duplicates``
-family. State per key is a single flag row, so state-store size is
-O(distinct keys), independent of stream length per key.
+The reference has no streaming runtime at all (SURVEY §2.9); this gives
+the engine the stateful piece a continuously-ingesting similarity
+pipeline needs: a **running per-query top-k** over a stream of scored
+candidates, the streaming completion of ``streaming_lsh_probe``.
 
 Scale notes: ``applyInPandasWithState`` shuffles by the group key into
 the state store — the same hash partitioning a batch groupBy would do —
 and processes each group's rows as Arrow batches. A skewed key's rows
 do cross to Python (chunked Arrow iteration, never one giant frame),
-but its STATE stays one flag row / one k-list however many rows arrive,
-so the state store cannot be skewed.
+but its STATE stays one k-list however many rows arrive, so the state
+store cannot be skewed.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def first_seen(
-    df: DataFrame,
-    key_cols: Iterable[str] = ("content_hash",),
-    order_col: str = "doc_id",
-) -> DataFrame:
-    """Emit only the FIRST row seen per key, across micro-batches.
-
-    Determinism: within a micro-batch, ties collapse to the row with
-    the smallest ``order_col`` (SURVEY §4.4's smallest-id rule); across
-    batches, arrival order decides — that is the semantic of a
-    first-seen stream filter. Output schema == input schema.
-    """
-    key_cols = list(key_cols)
-    out_schema = df.schema
-
-    def emit_first(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            for _ in pdfs:  # drain; key already emitted in a prior batch
-                pass
-            return
-        best: pd.DataFrame | None = None
-        for pdf in pdfs:
-            head = pdf.nsmallest(1, order_col)
-            if best is None or head[order_col].iloc[0] < best[order_col].iloc[0]:
-                best = head
-        state.update((1,))
-        if best is not None:
-            yield best
-
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        emit_first,
-        outputStructType=out_schema,
-        stateStructType="seen integer",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def running_topk(

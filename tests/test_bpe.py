@@ -1,88 +1,21 @@
-"""BPE tokenizer training: hand-checked merges, consistency with the
-oracle-checked pair statistics, and encoder round-trip properties."""
+"""BPE word and symbol-pair statistics: the exact word table and pair
+multiset of a tiny corpus, with no empty symbols."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import bpe
-
-
-def test_train_bpe_hand_checked_merges():
-    # "ab" appears 5x (3 in 'abc', 2 in 'abd'): first merge is (a, b).
-    wc = {"abc": 3, "abd": 2, "xy": 1}
-    merges = bpe.train_bpe(wc, 3)
-    assert merges[0] == ("a", "b")
-    # after (a,b): pairs are (ab,c):3, (ab,d):2, (c,</w>):3, (d,</w>):2,
-    # (x,y):1, (y,</w>):1 -> tie between (ab,c) and (c,</w>) at 3 breaks
-    # lexicographically: ("ab","c") < ("c","</w>")
-    assert merges[1] == ("ab", "c")
-    assert len(merges) == 3
-
-
-def test_train_bpe_stops_when_no_repeats():
-    merges = bpe.train_bpe({"ab": 1, "cd": 1}, 10)
-    assert merges == []  # every pair occurs once; nothing worth merging
-
-
-def test_first_merge_matches_pair_counts_statistic(spark):
-    docs = spark.createDataFrame(
-        [(i, "ababab cdcd ab") for i in range(3)] + [(10, "zz qq")],
-        "doc_id long, text string",
-    )
-    wc = bpe.word_counts(docs)
-    top = (
-        bpe.pair_counts(wc)
-        .orderBy(F.col("cnt").desc(), F.col("left").asc(), F.col("right").asc())
-        .first()
-    )
-    merges = bpe.train_bpe(wc, 1)
-    assert merges[0] == (top["left"], top["right"])
-
-
-def test_apply_bpe_round_trip_and_compression(spark):
-    docs = spark.createDataFrame(
-        [(0, "hello hello world"), (1, "hello help"), (2, "")],
-        "doc_id long, text string",
-    )
-    wc = bpe.word_counts(docs)
-    merges = bpe.train_bpe(wc, 8)
-    out = {r["doc_id"]: r["bpe_tokens"] for r in bpe.apply_bpe(docs, merges).collect()}
-    # round trip: stripping the EOW sentinel and re-joining reproduces
-    # the original words in order
-    for i, text in [(0, "hello hello world"), (1, "hello help"), (2, "")]:
-        toks = out[i]
-        words, cur = [], ""
-        for t in toks:
-            if t.endswith(bpe.EOW):
-                words.append(cur + t[: -len(bpe.EOW)])
-                cur = ""
-            else:
-                cur += t
-        assert cur == "" and words == [w for w in text.split(" ") if w], (i, toks)
-    # compression: more merges never increase the token count
-    n0 = sum(len(v) for v in {r["doc_id"]: r["bpe_tokens"] for r in bpe.apply_bpe(docs, []).collect()}.values())
-    n8 = sum(len(v) for v in out.values())
-    assert n8 < n0
-    # "hello" (3x in corpus) fully merges into one EOW-terminated symbol
-    assert out[0][0] == "hello" + bpe.EOW
-
-
-def test_encode_word_greedy_rank_order():
-    # ranks force (l,o) before (h,e): greedy must pick by RANK, not
-    # left-to-right position
-    merges = [("l", "o"), ("h", "e")]
-    ranks = {p: i for i, p in enumerate(merges)}
-    assert bpe.encode_word("helo", ranks) == ["he", "lo", bpe.EOW]
 
 
 def test_char_pairs_emit_no_empty_symbols(spark):
     # F.split(word, "") trailing-empty behavior differs across engine
     # versions; _char_pairs must never emit an empty symbol on either
     # side of a pair (the round-4 red bpe_pair_counts hypothesis).
-    wc = spark.createDataFrame(
-        [("a", 1), ("ab", 2), ("xyz", 3)], "word string, cnt long"
+    # the word table comes from the corpus pass: a x1, ab x2, xyz x3
+    docs = spark.createDataFrame(
+        [(0, "xyz ab  a xyz"), (1, "ab xyz"), (2, "")], "doc_id long, text string"
     )
+    wc = bpe.word_counts(docs)
+    assert sorted(map(tuple, wc.collect())) == [("a", 1), ("ab", 2), ("xyz", 3)]
     rows = bpe.pair_counts(wc).collect()
     for r in rows:
         assert r["left"] != "", rows

@@ -372,27 +372,6 @@ def test_cross_corpus_decontamination_flags_planted_contamination(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, got2))
 
 
-def test_batch_target_recall_matches_per_query_loop(emb):
-    from pyspark.sql import functions as F
-
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    batch = ann.ann_lsh_topk_batch_target_recall(
-        emb, qs, k=3, n_planes=4, target_recall=0.7, target_cos=0.9
-    )
-    got = sorted(map(tuple, batch.collect()))
-    expect = []
-    for r in qs.collect():
-        qvec = [float(v) for v in r["query_vec"]]
-        rows = ann.ann_lsh_topk_target_recall(
-            emb, qvec, k=3, n_planes=4, target_recall=0.7, target_cos=0.9
-        ).collect()
-        for row in rows:
-            expect.append((r["query_id"], row["vec_id"], row["cos_sim"], row["rank"]))
-    assert got == sorted(expect) and len(got) > 0
-
-
 def test_exhaustive_multiprobe_equals_exact_cosine(emb):
     """Probing every bucket (n_probe = 2^n_planes) is a full scan: the
     ANN answer must equal the exact cosine top-k."""

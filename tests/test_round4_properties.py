@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the round-4 pure-Python
-primitives: Bloom position math, BPE encode/merge invariants, and
-parameter selection monotonicity. No SparkSession — these run fast and
+primitives: Bloom position math and parameter selection
+monotonicity. No SparkSession — these run fast and
 explore the input space the example tests cannot."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions import bloom
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import bpe
 
 keys = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 
@@ -52,32 +51,3 @@ def test_bloom_optimal_params_sane(n, fp):
     # tighter fp never shrinks the filter
     n_bits2, _ = bloom.optimal_params(n, fp / 2)
     assert n_bits2 >= n_bits
-
-
-words = st.text(alphabet=st.characters(min_codepoint=33, max_codepoint=126), min_size=1, max_size=8)
-
-
-@given(st.dictionaries(words, st.integers(1, 20), min_size=1, max_size=20), st.integers(0, 10))
-@settings(max_examples=100, deadline=None)
-def test_bpe_encode_round_trips_any_vocab(wc, n_merges):
-    merges = bpe.train_bpe(wc, n_merges)
-    assert len(merges) <= n_merges
-    ranks = {p: i for i, p in enumerate(merges)}
-    for w in wc:
-        toks = bpe.encode_word(w, ranks)
-        assert toks[-1].endswith(bpe.EOW)
-        assert "".join(toks) == w + bpe.EOW  # lossless
-        # more merges never increase the token count for this word
-        toks0 = bpe.encode_word(w, {})
-        assert len(toks) <= len(toks0)
-
-
-@given(st.lists(st.sampled_from("ab"), min_size=2, max_size=30))
-@settings(max_examples=100, deadline=None)
-def test_bpe_merge_word_preserves_content(sym_list):
-    sym = tuple(sym_list) + (bpe.EOW,)
-    merged = bpe._merge_word(sym, ("a", "b"))
-    assert "".join(merged) == "".join(sym)
-    # no adjacent (a, b) pair survives a merge pass over fresh symbols
-    for x, y in zip(merged, merged[1:]):
-        assert not (x == "a" and y == "b")

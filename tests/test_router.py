@@ -8,8 +8,10 @@ each tier exactly first and fuses at the router."""
 from __future__ import annotations
 
 import json
+import threading
 import urllib.error
 import urllib.request
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,6 +66,29 @@ def _stop(pairs):
     for server, _t in pairs:
         server.shutdown()
         server.server_close()
+
+
+def _stub_replica(body: bytes):
+    """A replica that answers every POST 200 with ``server.body`` (set
+    it between requests to change the reply)."""
+
+    class StubHandler(BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802
+            data = self.server.body
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+        def log_message(self, fmt, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), StubHandler)
+    server.body = body
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    return server, thread
 
 
 def test_lsh_router_identical_to_full_index(spark, corpus):
@@ -389,31 +414,13 @@ def test_router_rejects_malformed_200_body(spark, corpus):
     """A replica answering 200 with a body that has no candidates list
     is an incomplete cover like any other failure: 502, not a dropped
     connection (round-8 guard in RouterService._gather)."""
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    import threading
-
     docs, _ = corpus
     sigs = minhash.signatures(docs.filter(F.col("doc_id") < 50), PARAMS).cache()
     bands = lsh.bands_table(sigs, PARAMS)
     idx = ServingIndex.from_dataframes(sigs, bands, PARAMS)
     server, st = serving_http.start_server(idx)
-
-    class BadHandler(BaseHTTPRequestHandler):
-        def do_POST(self):  # noqa: N802
-            data = json.dumps({"status": "ok, but wrong shape"}).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def log_message(self, fmt, *args):
-            pass
-
-    bad = ThreadingHTTPServer(("127.0.0.1", 0), BadHandler)
-    bt = threading.Thread(target=bad.serve_forever, daemon=True)
-    bt.start()
-    bad_url = f"http://{bad.server_address[0]}:{bad.server_address[1]}"
+    bad, bt = _stub_replica(json.dumps({"status": "ok, but wrong shape"}).encode())
+    bad_url = _url(bad)
 
     router, rt = serving_http.start_router_server(
         "lsh", [_url(server), bad_url]
@@ -430,36 +437,55 @@ def test_router_rejects_malformed_200_body(spark, corpus):
         _stop([(router, rt), (server, st), (bad, bt)])
 
 
+def test_router_rejects_malformed_candidate_entries():
+    """A 200 whose candidates list holds an entry the tier's merge
+    cannot read (not an object, a field missing, a non-integer id or
+    rank, a non-numeric score) is a 502 with a detail, on the point
+    and the batch endpoints alike, never a dropped connection."""
+    stub, st = _stub_replica(b"")
+    cases = [
+        ("lsh", [{"id": 1}], "without 'score'"),
+        ("lsh", [{"id": 1, "score": 0.5}], "without 'vector_preview'"),
+        ("lsh", [{"id": "1", "score": 0.5, "vector_preview": []}], "'id'"),
+        ("lsh", [[1, 0.5, []]], "not a JSON object"),
+        ("vector", [{"id": 1, "dist": "far", "rank": 1}], "'dist'"),
+        ("vector", [{"id": 1, "dist": 0.5}], "without 'rank'"),
+        ("lexical", [{"id": 1, "score": 1.0, "rank": 1.5}], "'rank'"),
+        ("lexical", [{"id": 1, "score": True, "rank": 1}], "'score'"),
+    ]
+    try:
+        for tier, cands, why in cases:
+            stub.body = json.dumps({"candidates": cands}).encode()
+            router, rt = serving_http.start_router_server(tier, [_url(stub)])
+            try:
+                for path, body in (
+                    ("/query", {"k": 5}),
+                    ("/query_batch", {"queries": [{"k": 5}]}),
+                ):
+                    with pytest.raises(urllib.error.HTTPError) as ei:
+                        _post(_url(router), path, body)
+                    assert ei.value.code == 502, (tier, cands, path)
+                    reply = json.loads(ei.value.read())
+                    assert reply["replica"] == _url(stub)
+                    assert why in reply["detail"], (tier, cands, reply)
+            finally:
+                _stop([(router, rt)])
+    finally:
+        _stop([(stub, st)])
+
+
 def test_router_rejects_unparseable_200_body(spark, corpus):
     """A replica (or a proxy in front of it) answering 200 with a
     NON-JSON body must route to the same 502 — json parsing happens
     inside _post's normalizer, never as an exception that drops the
     client connection."""
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    import threading
-
     docs, _ = corpus
     sigs = minhash.signatures(docs.filter(F.col("doc_id") < 50), PARAMS).cache()
     bands = lsh.bands_table(sigs, PARAMS)
     idx = ServingIndex.from_dataframes(sigs, bands, PARAMS)
     server, st = serving_http.start_server(idx)
-
-    class HtmlHandler(BaseHTTPRequestHandler):
-        def do_POST(self):  # noqa: N802
-            data = b"<html>gateway speaking html</html>"
-            self.send_response(200)
-            self.send_header("Content-Type", "text/html")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def log_message(self, fmt, *args):
-            pass
-
-    bad = ThreadingHTTPServer(("127.0.0.1", 0), HtmlHandler)
-    bt = threading.Thread(target=bad.serve_forever, daemon=True)
-    bt.start()
-    bad_url = f"http://{bad.server_address[0]}:{bad.server_address[1]}"
+    bad, bt = _stub_replica(b"<html>gateway speaking html</html>")
+    bad_url = _url(bad)
 
     router, rt = serving_http.start_router_server(
         "lsh", [_url(server), bad_url]

@@ -127,6 +127,37 @@ def test_negative_content_length_is_400(endpoint):
         router.server_close()
 
 
+def test_short_body_times_out_with_408(endpoint, monkeypatch):
+    """A body shorter than its Content-Length is answered 408 once the
+    handler's read timeout passes, by every server and the router,
+    instead of holding the handler thread until the client leaves."""
+    import socket
+    import time
+    from urllib.parse import urlsplit
+
+    monkeypatch.setattr(serving_http._Handler, "timeout", 0.5)
+    url, _qsig, _index = endpoint
+    replica = urlsplit(url)
+    router, _thread = serving_http.start_router_server("lsh", [url])
+    try:
+        for address in ((replica.hostname, replica.port), router.server_address):
+            with socket.create_connection(address, timeout=5) as sock:
+                t0 = time.monotonic()
+                sock.sendall(
+                    b"POST /query HTTP/1.1\r\nHost: x\r\n"
+                    b"Content-Length: 10\r\n\r\n{}"
+                )
+                reply = sock.makefile("rb").read()
+                elapsed = time.monotonic() - t0
+            head, _sep, body = reply.partition(b"\r\n\r\n")
+            assert head.split(b"\r\n")[0].split()[1] == b"408"
+            assert json.loads(body) == {"error": "request timed out"}
+            assert elapsed < 4.0
+    finally:
+        router.shutdown()
+        router.server_close()
+
+
 def test_health_and_404(endpoint):
     url, _, index = endpoint
     with urllib.request.urlopen(url + "/health") as resp:

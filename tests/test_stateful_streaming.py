@@ -7,18 +7,8 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import stateful
-
-SCHEMA = "doc_id long, content_hash string, text string"
-
-
-def _write_batch(spark, path, rows, name):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, name))
-
 
 @pytest.fixture()
 def stream_dirs(tmp_path):
@@ -26,44 +16,6 @@ def stream_dirs(tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(src)
     return src, ckpt
-
-
-def test_first_seen_dedup_across_microbatches(spark, stream_dirs):
-    src, ckpt = stream_dirs
-    # batch 1: key A twice (docs 2, 1 -> keep 1), key B once
-    _write_batch(
-        spark,
-        src,
-        [(2, "A", "a-copy"), (1, "A", "a-orig"), (10, "B", "b")],
-        "b1",
-    )
-    stream = spark.readStream.schema(SCHEMA).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src + "/*")
-    q = (
-        stateful.first_seen(stream, ["content_hash"], "doc_id")
-        .writeStream.format("memory")
-        .queryName("first_seen_t")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["content_hash"]: r["doc_id"]
-            for r in spark.sql("select * from first_seen_t").collect()
-        }
-        assert got == {"A": 1, "B": 10}
-
-        # batch 2: A again (must NOT re-emit), new key C
-        _write_batch(spark, src, [(99, "A", "a-late"), (7, "C", "c")], "b2")
-        q.processAllAvailable()
-        rows = spark.sql("select * from first_seen_t").collect()
-        got = [(r["content_hash"], r["doc_id"]) for r in rows]
-        assert sorted(got) == [("A", 1), ("B", 10), ("C", 7)]  # A once, batch-1 row
-    finally:
-        q.stop()
 
 
 def test_running_topk_improves_across_microbatches(spark, stream_dirs):
@@ -105,20 +57,3 @@ def test_running_topk_improves_across_microbatches(spark, stream_dirs):
         assert {r["rank"]: r["doc_id"] for r in rows[-2:]} == {1: 103, 2: 101}
     finally:
         q.stop()
-
-
-def test_first_seen_batch_parity_with_exact_dedup(spark):
-    """The stateful op's one-batch semantics == deterministic batch
-    first-seen (min doc_id per key)."""
-    df = spark.createDataFrame(
-        [(5, "X", "x1"), (3, "X", "x2"), (9, "Y", "y")], SCHEMA
-    )
-    batch_first = (
-        df.groupBy("content_hash")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .collect()
-    )
-    assert {(r["content_hash"], r["doc_id"]) for r in batch_first} == {
-        ("X", 3),
-        ("Y", 9),
-    }

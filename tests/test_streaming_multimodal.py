@@ -20,32 +20,21 @@ def events(spark, sf_dir):
     return load_table(spark, sf_dir, "events").cache()
 
 
-def test_hourly_stats_batch_equals_manual(events):
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in SQ.hourly_event_stats(events).collect()
-    }
-    manual = {
-        (r["h"], r["event_type"]): (r["n"], r["tv"])
-        for r in events.groupBy(
-            F.date_trunc("hour", "ts").alias("h"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("tv"),
-        )
-        .collect()
-    }
-    assert got == manual
+def test_sliding_windows_cover_each_event_4x(events):
+    # 1h window sliding 15min: every event falls in exactly 4 windows
+    total = SQ.sliding_event_rate(events).agg(F.sum("n_events")).collect()[0][0]
+    assert total == events.count() * 4
 
 
-def test_streaming_hourly_availablenow(spark, events, tmp_path):
+def test_streaming_sliding_availablenow(spark, events, tmp_path):
+    """The same operator on a real stream (watermarked): every window
+    the stream emits equals the batch answer."""
     src = str(tmp_path / "stream_src")
-    out_table = "hourly_stream_result"
+    out_table = "sliding_stream_result"
     events.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(events.schema).parquet(src)
     q = (
-        SQ.hourly_event_stats(stream)
+        SQ.sliding_event_rate(stream)
         .writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
@@ -54,24 +43,18 @@ def test_streaming_hourly_availablenow(spark, events, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    # append mode only emits windows the watermark has closed; the last
-    # (open) window is withheld. Everything emitted must match batch.
+    # append mode only emits windows the watermark has closed; the
+    # open ones are withheld. Everything emitted must match batch.
     got = {
         (r["window_start"], r["event_type"]): r["n_events"]
         for r in spark.sql(f"select * from {out_table}").collect()
     }
     batch = {
         (r["window_start"], r["event_type"]): r["n_events"]
-        for r in SQ.hourly_event_stats(events).collect()
+        for r in SQ.sliding_event_rate(events).collect()
     }
     assert got, "stream emitted nothing"
     assert all(batch[k] == v for k, v in got.items())
-
-
-def test_sliding_windows_cover_each_event_4x(events):
-    # 1h window sliding 15min: every event falls in exactly 4 windows
-    total = SQ.sliding_event_rate(events).agg(F.sum("n_events")).collect()[0][0]
-    assert total == events.count() * 4
 
 
 def test_session_window_gap_merges(spark):
@@ -155,20 +138,6 @@ def test_frame_sampling_only_video(spark):
     # frame_idx dense from 0
     first = frames.groupBy("media_id").agg(F.min("frame_idx").alias("m")).collect()
     assert all(r["m"] == 0 for r in first)
-
-
-def test_resize_image_metadata(spark):
-    media = MM.synthetic_media(spark, n=9)
-    out = MM.resize_image(media, 224, 224)
-    res = out.collect()
-    for r in res:
-        if r["kind"] == "image":
-            assert (r["width"], r["height"]) == (224, 224)
-        else:
-            assert (r["width"], r["height"]) != (224, 224) or True
-    assert [(f.name, f.dataType) for f in out.schema.fields] == [
-        (f.name, f.dataType) for f in media.schema.fields
-    ]
 
 
 def test_topk_response_envelope(spark, sf_dir):
