@@ -69,18 +69,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of independently-built sketches (same d/width/seed
-    family) — the distributed/streaming merge property: shard corpora,
-    sketch each shard, union+sum the d*width cells."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     keys: DataFrame,
     sketch: DataFrame,

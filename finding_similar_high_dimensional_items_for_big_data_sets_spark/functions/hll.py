@@ -89,18 +89,6 @@ def hll_registers(
     return rows.groupBy(*g, "register").agg(F.max("rank").alias("m_j"))
 
 
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Register-wise max of independently-built sketches (same p and
-    hash) — the shard/stream merge property."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    g = [c for c in u.columns if c not in ("m_j",)]
-    return u.groupBy(*g).agg(F.max("m_j").alias("m_j"))
-
-
 def hll_estimate(
     registers: DataFrame,
     group_cols: list[str] | None = None,

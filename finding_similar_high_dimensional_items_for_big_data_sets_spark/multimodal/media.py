@@ -36,17 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-    ]
-)
-
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = StructType(

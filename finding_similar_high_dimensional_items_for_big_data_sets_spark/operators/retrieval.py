@@ -494,7 +494,7 @@ class ServingLexicalIndex:
         self.global_df = global_df
         # loader provenance + store fingerprint (from_store only):
         # is_stale()/reload() detect a store swapped underneath this
-        # snapshot by compaction / delete / cross-store retention
+        # snapshot by compaction / delete
         self.source = source
 
     @classmethod
@@ -598,7 +598,7 @@ class ServingLexicalIndex:
 
     def is_stale(self, spark) -> bool:
         """True iff the postings store was SWAPPED since this export
-        (compaction, delete_from_postings_index, cross-store retention)
+        (compaction, delete_from_postings_index)
         — the snapshot would keep answering with forgotten doc_ids (and
         stale corpus statistics) until :meth:`reload`. O(1 stat call).
         Raises for a from_dataframe index (no persisted identity)."""

@@ -63,7 +63,7 @@ class ServingIndex:
     # loader provenance + artifact fingerprints, recorded by from_paths /
     # from_sharded so is_stale()/reload() can tell when the persisted
     # index was swapped underneath this in-process snapshot (compaction,
-    # delete_from_index, cross-store retention). None when built from
+    # delete_from_index). None when built from
     # DataFrames (no persisted identity to compare against).
     source: dict | None = None
 
@@ -154,8 +154,8 @@ class ServingIndex:
 
     def is_stale(self, spark) -> bool:
         """True iff the persisted artifacts this snapshot was exported
-        from have been SWAPPED since (compaction, delete_from_index,
-        cross-store retention): an in-process index keeps answering
+        from have been SWAPPED since (compaction, delete_from_index):
+        an in-process index keeps answering
         with a forgotten doc_id until reloaded, so the serving loop
         should poll this (O(2 stat calls), no data read) and
         :meth:`reload` when it fires. Raises when the index was built

@@ -432,7 +432,7 @@ def _start_replica(holders: list, routes: dict, health, host, port, spark):
     per-index ``stale``. ``server.service`` is the first holder's
     owner.
 
-    Hot-swap hook: after a store rewrite (compaction / retention),
+    Hot-swap hook: after a store rewrite (compaction / delete),
     ``server.service.index = server.service.index.reload(spark)``
     re-snapshots without dropping the socket (``POST /reload`` does the
     same over the wire). Hold ``server.reload_lock`` around a manual
@@ -460,7 +460,7 @@ def start_server(
     Returns (server, daemon thread); call ``server.shutdown()`` then
     ``server.server_close()`` to stop. With ``spark`` given, ``POST
     /reload`` re-snapshots a store-loaded index after a rewrite
-    (compaction / retention) without dropping the socket."""
+    (compaction / delete) without dropping the socket."""
     service = QueryService(index)
     return _start_replica(
         [("lsh", service, "index")],
@@ -887,7 +887,7 @@ def start_router_server(
     law; a lexical router with ``vector_replicas`` also serves ``POST
     /hybrid``; ``GET /health`` aggregates replica health; ``POST
     /reload`` fans the staleness-checked re-snapshot to every replica
-    (after a compaction or retention delete). Same start/stop contract
+    (after a compaction or a delete). Same start/stop contract
     as :func:`start_server`."""
     service = RouterService(tier, replicas, vector_replicas, timeout)
     return _serve(

@@ -103,7 +103,7 @@ class ServingVectorIndex:
     rotation: list | None = None
     # loader provenance + store fingerprint (from_store only): lets
     # is_stale()/reload() detect a store swapped underneath this
-    # snapshot by compaction / delete / cross-store retention.
+    # snapshot by compaction / delete.
     source: dict | None = None
 
     @classmethod
@@ -217,7 +217,7 @@ class ServingVectorIndex:
 
     def is_stale(self, spark) -> bool:
         """True iff the codes store was SWAPPED since this export
-        (compaction, delete_from_ivfpq_index, cross-store retention) —
+        (compaction, delete_from_ivfpq_index) —
         the snapshot would keep answering with forgotten vec_ids until
         :meth:`reload`. O(1 stat call), no data read."""
         if self.source is None:

@@ -5,7 +5,7 @@ The reference ingests queries as HTTP JSON ``{"vector": List[int],
 ``app/src/query_service.py:34-46``). The Spark-first analog is a
 DataFrame of query rows — from a directory of JSON-lines files
 watched by Structured Streaming (continuous ingest feeding
-``streaming.streaming_lsh_probe`` / ``streaming.running_topk``), or
+``streaming.queries.streaming_lsh_probe``), or
 from any DataFrame of raw envelopes passed to
 :func:`validate_envelopes`.
 

@@ -112,19 +112,7 @@ def write_sharded(df: DataFrame, path: str, num_shards: int, key: str = "doc_id"
     df.repartitionByRange(num_shards, key).write.mode("overwrite").parquet(path)
 
 
-#: ingest_batch value for data written at initial build / compaction
-#: time in batch-partitioned index layouts. Streaming micro-batch ids
-#: are >= 0, so the base partition can never collide with (and be
-#: clobbered by) a replayed epoch's dynamic partition overwrite.
-BASE_INGEST_BATCH = -1
-
-
-def write_bands_bucketed(
-    bands: DataFrame,
-    table: str,
-    num_buckets: int = 64,
-    batch_partitioned: bool = False,
-) -> None:
+def write_bands_bucketed(bands: DataFrame, table: str, num_buckets: int = 64) -> None:
     """Persist the LSH index as a BUCKETED table on the probe-join key
     (band_id, band_hash), sorted within buckets.
 
@@ -134,24 +122,10 @@ def write_bands_bucketed(
     probe batch and a one-time shuffle at index-build. The reference's
     analogue is its shard layout + per-worker hash tables
     (``app/src/index_builder.py:22-36``, ``worker_tasks.py:84-113``);
-    a bucketed table is the immutable Spark equivalent.
-
-    ``batch_partitioned=True`` additionally partitions the table by an
-    ``ingest_batch`` column (initial data lands in the
-    :data:`BASE_INGEST_BATCH` partition). That layout is what
-    :func:`append_to_index_exactly_once` requires: each micro-batch
-    owns one partition directory, so a replayed epoch OVERWRITES its
-    own partition instead of appending duplicates. Bucketing is
-    per-partition-consistent, so probe joins stay shuffle-free on the
-    index side either way."""
-    writer = bands
-    if batch_partitioned:
-        writer = bands.withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-    writer = writer.write.mode("overwrite")
-    if batch_partitioned:
-        writer = writer.partitionBy("ingest_batch")
+    a bucketed table is the immutable Spark equivalent."""
     (
-        writer.bucketBy(num_buckets, "band_id", "band_hash")
+        bands.write.mode("overwrite")
+        .bucketBy(num_buckets, "band_id", "band_hash")
         .sortBy("band_id", "band_hash")
         .format("parquet")
         .saveAsTable(table)
@@ -189,9 +163,10 @@ def append_to_index(
     candidate ids") instead of probes silently missing documents the
     sigs-first order would cause. Recovery: :func:`validate_index`
     reports the orphaned doc_ids; re-append exactly their signature
-    rows (re-running the sigs half of the failed call). For streaming
-    / at-least-once callers use :func:`append_to_index_exactly_once`,
-    which is replay-idempotent by construction.
+    rows (re-running the sigs half of the failed call). Appends are
+    blind: a caller that retries a whole call after a failure
+    duplicates its rows, which :func:`compact_index`'s uniqueness check
+    and :func:`validate_index` report.
     """
     if params.max_bucket_size is not None:
         raise ValueError(
@@ -256,123 +231,6 @@ def validate_index(
             f"in {bands_table}: probes will silently miss them — "
             "re-append their band rows"
         )
-
-
-def append_to_index_exactly_once(
-    new_docs: DataFrame,
-    batch_id: int,
-    params,
-    sigs_path: str,
-    bands_table: str,
-) -> None:
-    """Replay-idempotent incremental index maintenance for
-    at-least-once callers (Structured Streaming ``foreachBatch``
-    replays an epoch after failure; a blind append would then
-    duplicate every doc in the replayed batch).
-
-    Mechanism: both index halves are PARTITIONED by ``ingest_batch``
-    and each micro-batch writes with dynamic partition OVERWRITE into
-    its own ``ingest_batch=<batch_id>`` partition — a replayed epoch
-    rewrites that partition instead of appending next to its previous
-    attempt, whatever point the previous attempt crashed at. The
-    signature half is a batch-partitioned parquet directory; the bands
-    half is the batch-partitioned BUCKETED table
-    (:func:`write_bands_bucketed` with ``batch_partitioned=True``) —
-    bucketing is per-partition-consistent, so probe joins stay
-    shuffle-free while each partition stays independently
-    overwritable. Requires ``batch_id >= 0`` (the base build owns the
-    :data:`BASE_INGEST_BATCH` partition).
-
-    Same uncapped-index and new-doc_ids contract as
-    :func:`append_to_index`.
-    """
-    if params.max_bucket_size is not None:
-        raise ValueError(
-            "append_to_index_exactly_once requires an uncapped index "
-            "(see append_to_index)"
-        )
-    if batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}); "
-            f"{BASE_INGEST_BATCH} is reserved for the base build"
-        )
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import (
-        lsh,
-        minhash,
-    )
-
-    spark = new_docs.sparkSession
-    # catalog metadata, not spark.table(...): resolving the relation
-    # would pin a pre-append file listing in this session's relation
-    # cache (see stream_index_maintenance).
-    table_cols = [c.name for c in spark.catalog.listColumns(bands_table)]
-    if "ingest_batch" not in table_cols:
-        raise ValueError(
-            f"{bands_table} is not batch-partitioned; build it with "
-            "write_bands_bucketed(..., batch_partitioned=True) for "
-            "exactly-once appends (plain append_to_index is "
-            "at-least-once under replay)"
-        )
-    # the sigs side must be batch-partitioned too: writing an
-    # ingest_batch=N subdirectory next to FLAT part-files makes every
-    # later read of the directory fail on a mixed layout — reject the
-    # mismatch instead of corrupting the store
-    from pyspark.errors import AnalysisException
-
-    try:
-        sig_cols = spark.read.parquet(sigs_path).columns
-    except AnalysisException as ex:
-        # ONLY a missing path means "first write creates it" — an
-        # unreadable store (e.g. already-corrupt mixed layout) must
-        # surface, not be appended into
-        msg = str(ex)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-            raise
-        sig_cols = None
-    if sig_cols is not None and "ingest_batch" not in sig_cols:
-        raise ValueError(
-            f"{sigs_path} is a flat signature store; rebuild it with "
-            "write_sigs_batch_partitioned for exactly-once appends — a "
-            "partitioned write into a flat directory leaves a mixed "
-            "layout that no reader can scan"
-        )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        sigs = minhash.signatures(new_docs, params).withColumn(
-            "ingest_batch", F.lit(batch_id)
-        )
-        bands = lsh.bands_table(
-            sigs.select("doc_id", "sig"), params
-        ).withColumn("ingest_batch", F.lit(batch_id))
-        # bands first: see append_to_index's ordering rationale — under
-        # replay either order converges, this one also fails loud if a
-        # NON-replayed crash is probed in between. insertInto matches
-        # by position, so restate the table's own column order.
-        bands.select(*table_cols).write.mode("overwrite").insertInto(bands_table)
-        (
-            sigs.write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(sigs_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-
-def write_sigs_batch_partitioned(sigs: DataFrame, path: str) -> None:
-    """Base build of the BATCH-PARTITIONED signature store that
-    :func:`append_to_index_exactly_once` maintains: initial rows land
-    in the ``ingest_batch=BASE_INGEST_BATCH`` partition so later
-    micro-batches each own an overwritable partition directory. (A
-    flat parquet dir cannot be upgraded in place: Spark's partition
-    discovery rejects mixed flat/partitioned layouts.) Readers select
-    (doc_id, sig) as usual — the partition column is bookkeeping."""
-    (
-        sigs.withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(path)
-    )
 
 
 def _write_store_meta(path: str, meta: dict) -> None:
@@ -667,15 +525,14 @@ def synthetic_documents(
 # Shared store-swap core: ONE implementation of the crash-safe
 # rename-aside / rename-in / drop-old protocol (and its recovery) for every
 # persisted index family — LSH (bands table + signature directory), IVF-PQ,
-# IVF-OPQ, lexical postings, flat PQ/OPQ codes, and the CMS/HLL sketch
-# stores. The protocol is parameterized by its four primitives (exists /
-# rename / drop / sync), instantiated once for directory stores
-# (os.rename + shutil.rmtree; sync is a no-op) and once for the bucketed
-# catalog table (ALTER TABLE RENAME + partition-metadata sync), so the
-# crash-window semantics every maintenance test pins cannot diverge
-# between families. Prepare (build the complete sibling copy) and commit
-# (swap it in) are separate phases so a multi-store transaction can
-# prepare every store before swapping any (retention.delete_docs_everywhere).
+# IVF-OPQ, lexical postings and flat PQ/OPQ codes. The protocol is
+# parameterized by its four primitives (exists / rename / drop / sync),
+# instantiated once for directory stores (os.rename + shutil.rmtree; sync is
+# a no-op) and once for the bucketed catalog table (ALTER TABLE RENAME +
+# partition-metadata sync), so the crash-window semantics every maintenance
+# test pins cannot diverge between families. A directory rewrite writes the
+# complete replacement into the sibling tmp (:func:`_prepare_dir_swap`),
+# then swaps it in (:func:`_commit_dir_swap`).
 # ---------------------------------------------------------------------------
 
 
@@ -763,10 +620,10 @@ def _swap_recover_protocol(
 
 
 def _prepare_dir_swap(path: str, suffix: str = "__compact") -> str:
-    """Phase 1 for a directory store: clear stale leftovers and return
-    the sibling tmp path the caller writes the COMPLETE replacement
-    store into (data + sidecars + watermark). Phase 2 is
-    :func:`_commit_dir_swap`."""
+    """Clear a directory store's stale swap leftovers and return the
+    sibling tmp path the caller writes the COMPLETE replacement store
+    into (data first, sidecars after); :func:`_commit_dir_swap` swaps
+    it in."""
     import shutil
 
     tmp, old = _swap_names(path, suffix)
@@ -776,10 +633,10 @@ def _prepare_dir_swap(path: str, suffix: str = "__compact") -> str:
 
 
 def _commit_dir_swap(path: str, suffix: str = "__compact") -> None:
-    """Phase 2 for a directory store: swap the prepared tmp in via the
-    shared protocol (plain renames — atomic on one filesystem; on HDFS
-    they map to ``FileSystem.rename``; object stores without atomic
-    rename should hold the store under a table format instead)."""
+    """Swap a directory store's prepared tmp in via the shared
+    protocol (plain renames — atomic on one filesystem; on HDFS they
+    map to ``FileSystem.rename``; object stores without atomic rename
+    should hold the store under a table format instead)."""
     import shutil
 
     tmp, old = _swap_names(path, suffix)
@@ -812,42 +669,15 @@ def _recover_dir_swap(
     )
 
 
-def _carry_swap_sidecars(
-    src: str, tmp: str, new_watermark: int | None = None, copy_meta: bool = True
-) -> None:
-    """Carry a store's non-parquet artifacts into the rewritten tmp:
-    the absorbed-epoch watermark, rolled forward to cover any epochs
-    this rewrite folds into the base, then the quantizer/meta sidecar
-    (copied verbatim — a rewrite never changes the codec). Sidecars
-    land AFTER the data write, and the meta copy lands LAST in this
-    ordering: its presence next to ``_SUCCESS`` is what the recover
-    markers treat as "tmp is complete", so a crash before the
-    watermark write can never leave a complete-looking tmp whose
-    replay protection was lost."""
-    import shutil
-
-    wm = read_absorbed_watermark(src)
-    if new_watermark is not None:
-        wm = new_watermark if wm is None else max(wm, new_watermark)
-    if wm is not None:
-        write_absorbed_watermark(tmp, wm)
-    if copy_meta:
-        shutil.copy2(
-            os.path.join(src, "_index_meta.json"),
-            os.path.join(tmp, "_index_meta.json"),
-        )
-
-
 def store_fingerprint(path: str) -> list:
     """Identity token of a directory store's CURRENT copy, for serving
-    staleness checks: every swap (compaction, delete, retention)
-    replaces the live directory with a freshly-written sibling, so the
-    inode changes even though the path does not. An in-process serving
-    index records this at export and compares on demand —
-    ``ServingIndex.is_stale`` — instead of re-reading any data. Local
-    filesystems only (the test/benchmark deployment); on HDFS/object
-    stores a store-version sidecar written inside the swap would play
-    this role."""
+    staleness checks: every swap (compaction, delete) replaces the live
+    directory with a freshly-written sibling, so the inode changes even
+    though the path does not. An in-process serving index records this
+    at export and compares on demand — ``ServingIndex.is_stale`` —
+    instead of re-reading any data. Local filesystems only (the
+    test/benchmark deployment); on HDFS/object stores a store-version
+    sidecar written inside the swap would play this role."""
     st = os.stat(path)
     return [int(st.st_ino), int(st.st_mtime_ns)]
 
@@ -870,14 +700,6 @@ def table_fingerprint(spark: SparkSession, table: str) -> list:
     return store_fingerprint(_table_location(spark, table))
 
 
-def _fold_watermark(path: str) -> int | None:
-    """The watermark a compaction must carry: the max real epoch
-    partition it is about to fold into the base (None if the store has
-    no epoch partitions)."""
-    epochs = _store_epoch_partitions(path)
-    return max(epochs) if epochs else None
-
-
 def compact_index(
     spark: SparkSession,
     bands_table: str,
@@ -886,8 +708,9 @@ def compact_index(
     """Compact an append-maintained bucketed index: many small appends
     leave one file set per append inside every bucket; scans then pay
     per-file open cost and lose intra-bucket sort locality. Rewrite the
-    table once under its own bucket spec (one shuffle — the same cost
-    as the original build, amortized over many appends).
+    table once under its own bucket spec and partition layout (one
+    shuffle — the same cost as the original build, amortized over many
+    appends).
 
     ``validate_sigs_path``: optionally assert the signature table's
     doc_ids are unique first (the stable-key invariant appends rely
@@ -903,13 +726,6 @@ def compact_index(
     still not atomic for CONCURRENT readers (a reader resolving the
     table name inside the two-rename window fails and must retry);
     run compaction in a maintenance window, like any offline rewrite.
-
-    Batch-partitioned tables (``write_bands_bucketed`` with
-    ``batch_partitioned=True``) compact their whole history into the
-    ``BASE_INGEST_BATCH`` partition. Run this only while the
-    maintenance stream is STOPPED at a committed checkpoint: a
-    replayed epoch after compaction would overwrite-as-new a batch
-    partition whose rows were already folded into the base.
     """
     if validate_sigs_path is not None:
         dup = (
@@ -925,16 +741,7 @@ def compact_index(
                 f"duplicate doc_id {dup[0]['doc_id']} in {validate_sigs_path}; "
                 "an append violated the new-ids contract — dedup before compacting"
             )
-    def fold_history(current: DataFrame, part_cols: list[str]) -> DataFrame:
-        # batch-partitioned history folds into the base epoch; every
-        # OTHER partition column (e.g. the serving shard) keeps its
-        # values — the compacted table must preserve the layout
-        # probes/exports rely on
-        if "ingest_batch" in part_cols:
-            current = current.withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        return current
-
-    _rewrite_bands_swapped(spark, bands_table, fold_history)
+    _rewrite_bands_swapped(spark, bands_table, lambda current: current)
 
 
 def _table_swap_primitives(spark: SparkSession):
@@ -953,77 +760,31 @@ def _table_swap_primitives(spark: SparkSession):
     )
 
 
-def _prepare_table_rewrite(
-    spark: SparkSession,
-    table: str,
-    transform,
-    bucket_cols: tuple[str, ...],
-    suffix: str = "__compact",
-) -> str:
-    """Phase 1 of a bucketed-table rewrite: ``transform(current_df,
-    part_cols)`` produces the replacement rows, written under the SAME
-    bucket/partition spec to the sibling tmp table (stale leftovers
-    cleared first). Returns the tmp table name; phase 2 is
-    :func:`_commit_bands_swap`. Shared by the bands table
-    (``band_id, band_hash``) and the content-hash history table
-    (``content_hash``). ``suffix`` names the swap window — the
-    lifecycle default ``__compact`` for compaction/delete, or a
-    caller-owned suffix (retention uses ``__retention``) whose
-    leftovers the per-store lifecycle recovers must never touch."""
-    num_buckets = _table_num_buckets(spark, table)
-    part_cols = _table_partition_columns(spark, table)
-    tmp = f"{table}{suffix}_tmp"
-    old = f"{table}{suffix}_old"
+def _rewrite_bands_swapped(spark: SparkSession, bands_table: str, transform) -> None:
+    """Crash-safe full rewrite of the bucketed bands table:
+    ``transform(current_df)`` produces the replacement rows, written
+    under the SAME bucket/partition spec to the sibling tmp table
+    (stale leftovers cleared first), then swapped in — a servable copy
+    exists under some name at every instant, an in-process failure
+    restores the original name, and a process death is healed by
+    :func:`recover_compact_swap`. Shared by :func:`compact_index` and
+    :func:`delete_from_index`."""
+    num_buckets = _table_num_buckets(spark, bands_table)
+    part_cols = _table_partition_columns(spark, bands_table)
+    tmp, old = _swap_names(bands_table)
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
     spark.sql(f"DROP TABLE IF EXISTS {old}")
-    current = transform(spark.table(table), part_cols)
-    writer = current.write.mode("overwrite")
+    writer = transform(spark.table(bands_table)).write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     (
-        writer.bucketBy(num_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
+        writer.bucketBy(num_buckets, "band_id", "band_hash")
+        .sortBy("band_id", "band_hash")
         .format("parquet")
         .saveAsTable(tmp)
     )
-    return tmp
-
-
-def _prepare_bands_rewrite(
-    spark: SparkSession, bands_table: str, transform, suffix: str = "__compact"
-) -> str:
-    """:func:`_prepare_table_rewrite` under the bands table's probe-join
-    bucket spec."""
-    return _prepare_table_rewrite(
-        spark, bands_table, transform, ("band_id", "band_hash"), suffix=suffix
-    )
-
-
-def _commit_bands_swap(
-    spark: SparkSession, bands_table: str, suffix: str = "__compact"
-) -> None:
-    """Phase 2: swap the prepared tmp table in via the shared protocol
-    under the catalog primitives."""
     ops = _table_swap_primitives(spark)
-    _swap_in_protocol(
-        bands_table,
-        f"{bands_table}{suffix}_tmp",
-        f"{bands_table}{suffix}_old",
-        ops["rename"],
-        ops["drop"],
-        ops["sync"],
-    )
-
-
-def _rewrite_bands_swapped(spark: SparkSession, bands_table: str, transform) -> None:
-    """Crash-safe full rewrite of the bucketed bands table: prepare the
-    replacement under the sibling tmp name, then swap it in — a
-    servable copy exists under some name at every instant, an
-    in-process failure restores the original name, and a process death
-    is healed by :func:`recover_compact_swap`. Shared by
-    :func:`compact_index` and :func:`delete_from_index`."""
-    _prepare_bands_rewrite(spark, bands_table, transform)
-    _commit_bands_swap(spark, bands_table)
+    _swap_in_protocol(bands_table, tmp, old, ops["rename"], ops["drop"], ops["sync"])
 
 
 def _table_partition_columns(spark: SparkSession, table: str) -> list[str]:
@@ -1036,16 +797,14 @@ def _sync_partitions(spark: SparkSession, table: str) -> None:
     but leaves per-partition locations at the old absolute paths, so a
     scan would silently read zero rows from every partition — and
     DROPPING the renamed-aside copy would delete data at those stale
-    locations. Applies to ANY partition layout (ingest_batch, shard,
-    qed_bin, ...)."""
+    locations. Applies to any partition layout (the serving ``shard``
+    layout of :func:`write_bands_sharded`, ...)."""
     if _table_partition_columns(spark, table):
         spark.sql(f"MSCK REPAIR TABLE {table} SYNC PARTITIONS")
     spark.catalog.refreshTable(table)
 
 
-def recover_compact_swap(
-    spark: SparkSession, bands_table: str, suffix: str = "__compact"
-) -> bool:
+def recover_compact_swap(spark: SparkSession, bands_table: str) -> bool:
     """Startup recovery after a process death inside
     :func:`compact_index`'s swap: if ``bands_table`` is missing,
     re-register the surviving copy — the compacted ``__compact_tmp``
@@ -1074,8 +833,7 @@ def recover_compact_swap(
     ops = _table_swap_primitives(spark)
     return _swap_recover_protocol(
         bands_table,
-        f"{bands_table}{suffix}_tmp",
-        f"{bands_table}{suffix}_old",
+        *_swap_names(bands_table),
         healthy_drops=("old",),
         label="bands table",
         detail=(
@@ -1092,10 +850,12 @@ def delete_from_index(
     sigs_path: str,
     bands_table: str,
 ) -> None:
-    """Targeted deletion from the persisted LSH index — the retention /
-    right-to-be-forgotten operator the create/append/compact lifecycle
-    was missing. Rewrites BOTH index halves without the given doc_ids,
-    preserving the bucketed probe layout and any partition columns.
+    """Targeted deletion from the persisted LSH index (a
+    right-to-be-forgotten request, or documents dropped from the
+    corpus): rewrites BOTH index halves without the given doc_ids,
+    preserving the bucketed probe layout and the ``shard`` partitioning
+    of a serving export (:func:`write_bands_sharded` /
+    :func:`write_sigs_sharded`).
 
     ``delete_ids``: a single-column DataFrame of doc_ids, or a Python
     list of ids (folded to a broadcast anti-join either way — delete
@@ -1122,30 +882,16 @@ def delete_from_index(
     ids = F.broadcast(delete_ids.select("doc_id").distinct())
 
     _rewrite_bands_swapped(
-        spark, bands_table, lambda cur, _parts: cur.join(ids, "doc_id", "left_anti")
+        spark, bands_table, lambda cur: cur.join(ids, "doc_id", "left_anti")
     )
 
-    _prepare_sigs_delete(spark, ids, sigs_path)
-    _commit_dir_swap(sigs_path, suffix="__delete")
-
-
-def _prepare_sigs_delete(
-    spark: SparkSession, ids, sigs_path: str, suffix: str = "__delete"
-) -> str:
-    """Phase 1 of the signature-directory delete: write the filtered
-    copy to the sibling ``{suffix}_tmp`` (partition layout preserved —
-    including the ``ingest_batch`` level of a stream-maintained store
-    and the ``shard`` level of a serving export) and return it; phase 2
-    is ``_commit_dir_swap(sigs_path, suffix=suffix)``."""
     sigs = spark.read.parquet(sigs_path)
-    part_cols = [c for c in ("ingest_batch", "shard") if c in sigs.columns]
-    kept = sigs.join(ids, "doc_id", "left_anti")
-    tmp = _prepare_dir_swap(sigs_path, suffix=suffix)
-    writer = kept.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
+    tmp = _prepare_dir_swap(sigs_path, suffix="__delete")
+    writer = sigs.join(ids, "doc_id", "left_anti").write.mode("overwrite")
+    if "shard" in sigs.columns:
+        writer = writer.partitionBy("shard")
     writer.parquet(tmp)
-    return tmp
+    _commit_dir_swap(sigs_path, suffix="__delete")
 
 
 def recover_sigs_swap(sigs_path: str) -> bool:
@@ -1228,58 +974,16 @@ def append_pq_index(
         pq_encode,
     )
 
-    _reject_stream_codes_store(path)
     _check_store_meta(path, _pq_meta(codebooks))
     pq_encode(embeddings, codebooks, id_col, vec_col).write.mode("append").parquet(
         path
     )
 
 
-def _reject_stream_codes_store(
-    path: str, ingest_hint: str = "stream_codes_ingest"
-) -> None:
-    """Plain appends refuse a stream-maintained (batch-partitioned)
-    store: new vectors must land through the store's epoch loop
-    (:func:`..streaming.codes.stream_codes_ingest` for flat codes,
-    the :func:`..streaming.semantic.stream_semantic_ingest` codes
-    feed for the cell stores — ``ingest_hint`` names the right one in
-    the raised message) whose per-epoch partitions stay
-    replay-idempotent — a plain append would not, and would also
-    write rows without the ``ingest_batch`` partition column, leaving
-    the directory tree at two conflicting depths (unreadable). Same
-    contract as :func:`append_postings_index`.
-
-    A store is stream-maintained if its sidecar says so OR if its
-    directory tree carries ``ingest_batch=`` partitions — bases
-    written before the sidecar grew the ``batch_partitioned`` flag
-    lack it, and the layout itself is the ground truth the append
-    would corrupt. The layout check runs even when the sidecar is
-    MISSING entirely (a store whose meta predates sidecars, or lost
-    it): the meta comparison downstream would skip too, so this guard
-    is the only thing standing between the append and a two-depth
-    directory tree."""
-    if not os.path.isdir(path):
-        return
-    try:
-        meta = read_store_meta(path)
-    except FileNotFoundError:
-        meta = {}
-    batch_partitioned = meta.get("batch_partitioned") or any(
-        name.startswith("ingest_batch=") for name in os.listdir(path)
-    )
-    if batch_partitioned:
-        raise ValueError(
-            f"{path} is a stream-maintained (batch-partitioned) store — "
-            f"land new vectors through {ingest_hint}, whose "
-            "per-epoch partitions stay replay-idempotent; a plain "
-            "append would not"
-        )
-
 def _pq_meta(codebooks: list[list[list[float]]]) -> dict:
-    """Flat-PQ sidecar dict — ONE builder for the base write, the
-    append guard's expectation, and the stream base, so the
-    field-by-field _check_store_meta comparison can never drift
-    between copies of the literal."""
+    """Flat-PQ sidecar dict — ONE builder for the base write and the
+    append guard's expectation, so the field-by-field _check_store_meta
+    comparison can never drift between copies of the literal."""
     return {
         "kind": "pq",
         "codebooks": [
@@ -1347,7 +1051,6 @@ def append_opq_index(
         opq_encode,
     )
 
-    _reject_stream_codes_store(path)
     _check_store_meta(path, _opq_meta(r_cols, codebooks))
     opq_encode(embeddings, r_cols, codebooks, id_col, vec_col).write.mode(
         "append"
@@ -1438,7 +1141,6 @@ def append_ivfpq_index(
         ivfpq_encode,
     )
 
-    _reject_stream_codes_store(path, "the stream_semantic_ingest codes feed")
     _check_store_meta(path, _ivfpq_meta(centroids, codebooks))
     ivfpq_encode(embeddings, centroids, codebooks, id_col, vec_col).write.mode(
         "append"
@@ -1532,7 +1234,6 @@ def append_ivfopq_index(
         ivfopq_encode,
     )
 
-    _reject_stream_codes_store(path, "the stream_semantic_ingest codes feed")
     _check_store_meta(path, _ivfopq_meta(r_cols, centroids, codebooks))
     ivfopq_encode(
         embeddings, r_cols, centroids, codebooks, id_col, vec_col
@@ -1544,100 +1245,10 @@ def append_ivfopq_index(
 # twin of compact_index / delete_from_index / recover_sigs_swap)
 # ---------------------------------------------------------------------------
 
-ABSORBED_WATERMARK_FILE = "_absorbed_watermark.json"
-
-
-def read_absorbed_watermark(path: str) -> int | None:
-    """Max stream epoch ever folded into a store's base partition by a
-    compaction, or None if never compacted. Underscore-prefixed file:
-    parquet scans ignore it, so it rides inside the store directory."""
-    import json
-
-    f = os.path.join(path, ABSORBED_WATERMARK_FILE)
-    if not os.path.exists(f):
-        return None
-    with open(f) as fh:
-        return int(json.load(fh)["max_absorbed_epoch"])
-
-
-def epoch_absorbed(store_path: str, batch_id: int) -> bool:
-    """True iff this stream epoch was already folded into the store's
-    base partition by a compaction — a checkpoint-loss replay of an
-    absorbed epoch must NOT re-land it as a fresh partition (its rows
-    would then exist twice: in the base and in the replayed
-    partition). ONE implementation for every exactly-once loop
-    (MinHash, IVF-PQ/IVF-OPQ, lexical, flat codes) so replay
-    semantics cannot diverge between them."""
-    wm = read_absorbed_watermark(store_path)
-    return wm is not None and int(batch_id) <= wm
-
-
-def write_absorbed_watermark(path: str, epoch: int) -> None:
-    import json
-
-    with open(os.path.join(path, ABSORBED_WATERMARK_FILE), "w") as fh:
-        json.dump({"max_absorbed_epoch": int(epoch)}, fh)
-
-
-def _store_epoch_partitions(path: str) -> list[int]:
-    """Real (>= 0) ``ingest_batch=`` partition ids under ``path``."""
-    out = []
-    for name in os.listdir(path):
-        if name.startswith("ingest_batch="):
-            b = int(name.split("=", 1)[1])
-            if b >= 0:
-                out.append(b)
-    return sorted(out)
-
-
 CELL_STORE_KINDS = ("ivfpq", "ivfpq_hkm", "ivfopq", "ivfopq_hkm")
 FLAT_CODES_KINDS = ("pq", "opq")
-# raw-vector partitioned stores (the document's embedding verbatim, not a
-# quantized code): the bucket-partitioned ANN store, the IVF cell store,
-# and the QED bin store — addressed by the same vec_id and rewritten
-# through the same prepare as the codes stores (retention fan-out)
-RAW_VECTOR_KINDS = ("ann_hyperplane", "ivf", "ivf_hkm", "qed")
 
 CODES_SWAP_MARKERS = ("_SUCCESS", "_index_meta.json")
-
-
-def _prepare_ivfpq_rewrite(
-    spark: SparkSession,
-    path: str,
-    transform,
-    kinds: tuple = CELL_STORE_KINDS,
-    suffix: str = "__compact",
-) -> str:
-    """Phase 1 of a codes-store rewrite: ``transform(current_df,
-    part_cols)`` produces the replacement rows, written to the sibling
-    tmp directory under the SAME partition layout with the quantizer
-    sidecar (and any absorbed-epoch watermark, rolled forward by the
-    transform's ``new_watermark``) carried over. Returns the tmp path;
-    phase 2 is :func:`_commit_dir_swap`. The partition restatement
-    covers every vec_id-addressed family: codes stores (``cell`` and/or
-    stream ``ingest_batch``), the hyperplane ANN store (``bucket``),
-    and the QED store (``qed_bin``)."""
-    meta = read_store_meta(path)
-    if meta.get("kind") not in kinds:
-        raise ValueError(
-            f"{path} is not one of {kinds} (kind={meta.get('kind')!r})"
-        )
-    codes = spark.read.parquet(path)
-    part_cols = [
-        c
-        for c in ("ingest_batch", "cell", "bucket", "qed_bin")
-        if c in codes.columns
-    ]
-    tmp = _prepare_dir_swap(path, suffix=suffix)
-    replacement = transform(codes, part_cols)
-    writer = replacement.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(tmp)
-    _carry_swap_sidecars(
-        path, tmp, new_watermark=getattr(transform, "new_watermark", None)
-    )
-    return tmp
 
 
 def _rewrite_ivfpq_swapped(
@@ -1646,38 +1257,42 @@ def _rewrite_ivfpq_swapped(
     transform,
     kinds: tuple = CELL_STORE_KINDS,
 ) -> None:
-    """Crash-safe full rewrite of a codes store through the shared
-    prepare + swap core. Shared by the cell-partitioned (IVF-PQ,
-    IVF-OPQ) and flat (PQ, OPQ) lifecycles — the flat stores simply
-    have no ``cell`` partition column to restate."""
-    _prepare_ivfpq_rewrite(spark, path, transform, kinds)
+    """Crash-safe full rewrite of a codes store: ``transform(codes)``
+    produces the replacement rows, written to the sibling tmp directory
+    under the SAME ``cell`` partitioning (flat PQ/OPQ stores have none)
+    with the quantizer sidecar copied over, then swapped in through
+    the shared core. Shared by the cell-partitioned (IVF-PQ, IVF-OPQ)
+    and flat (PQ, OPQ) lifecycles; :func:`recover_ivfpq_swap` heals a
+    mid-swap death."""
+    import shutil
+
+    meta = read_store_meta(path)
+    if meta.get("kind") not in kinds:
+        raise ValueError(
+            f"{path} is not one of {kinds} (kind={meta.get('kind')!r})"
+        )
+    codes = spark.read.parquet(path)
+    tmp = _prepare_dir_swap(path)
+    writer = transform(codes).write.mode("overwrite")
+    if "cell" in codes.columns:
+        writer = writer.partitionBy("cell")
+    writer.parquet(tmp)
+    # the meta lands AFTER the data: next to _SUCCESS it is the
+    # CODES_SWAP_MARKERS proof that tmp is complete
+    shutil.copy2(
+        os.path.join(path, "_index_meta.json"),
+        os.path.join(tmp, "_index_meta.json"),
+    )
     _commit_dir_swap(path)
 
 
 def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
-    """Compact an IVF-PQ codes store: many appends (or one stream epoch
-    partition per micro-batch from ``stream_semantic_ingest``) leave
-    small files / unbounded ``ingest_batch=`` directories; rewrite the
-    store once, folding every epoch into ``BASE_INGEST_BATCH`` while
-    KEEPING the cell partitioning (probe pruning must survive
-    compaction). Crash-safe via the sibling-dir + rename swap
-    (:func:`recover_ivfpq_swap` heals a mid-swap death). For
-    batch-partitioned stores the swap carries an absorbed-epoch
-    watermark so a stream replay of a folded epoch is dropped by the
-    maintenance loop instead of double-landing (mirrors
-    ``streaming.sketches``); still run compaction while the stream is
-    stopped — the watermark protects the restart, not a concurrent
-    writer."""
-
-    def fold(codes: DataFrame, part_cols: list[str]) -> DataFrame:
-        if "ingest_batch" in part_cols:
-            codes = codes.withColumn(
-                "ingest_batch", F.lit(BASE_INGEST_BATCH)
-            )
-        return codes
-
-    fold.new_watermark = _fold_watermark(path)
-    _rewrite_ivfpq_swapped(spark, path, fold)
+    """Compact an IVF-PQ codes store: many appends leave small files
+    in every cell directory; rewrite the store once while KEEPING the
+    cell partitioning (probe pruning must survive compaction).
+    Crash-safe via the sibling-dir + rename swap
+    (:func:`recover_ivfpq_swap` heals a mid-swap death)."""
+    _rewrite_ivfpq_swapped(spark, path, lambda codes: codes)
 
 
 def delete_from_ivfpq_index(
@@ -1687,22 +1302,22 @@ def delete_from_ivfpq_index(
     id_col: str = "vec_id",
 ) -> None:
     """Targeted deletion from a persisted IVF-PQ codes store — the
-    retention / right-to-be-forgotten operator, completing the
+    right-to-be-forgotten operator, completing the
     create/append/probe/compact lifecycle at parity with the LSH
     index's :func:`delete_from_index`. ``delete_ids``: a one-column
     DataFrame or a Python list of ids (broadcast anti-join — delete
     sets are small; a corpus-scale delete is a rebuild). The rewrite
-    preserves the cell (and any ingest_batch) partition layout and the
-    quantizer sidecar, and swaps in crash-safely; re-running a delete
-    converges. Parquet files are immutable, so deletion is O(store
-    rewrite) — batch deletes into maintenance windows."""
+    preserves the cell partition layout and the quantizer sidecar, and
+    swaps in crash-safely; re-running a delete converges. Parquet files
+    are immutable, so deletion is O(store rewrite) — batch deletes into
+    maintenance windows."""
     if not isinstance(delete_ids, DataFrame):
         delete_ids = spark.createDataFrame(
             [(int(i),) for i in delete_ids], f"{id_col} bigint"
         )
     ids = F.broadcast(delete_ids.select(id_col).distinct())
     _rewrite_ivfpq_swapped(
-        spark, path, lambda cur, _parts: cur.join(ids, id_col, "left_anti")
+        spark, path, lambda cur: cur.join(ids, id_col, "left_anti")
     )
 
 
@@ -1779,7 +1394,7 @@ def validate_ivfpq_store(spark: SparkSession, path: str) -> None:
 # Flat codes store lifecycle (PQ and OPQ): the same crash-safe
 # sibling-dir-swap compact/delete/recover/validate the cell-partitioned
 # (IVF-PQ/IVF-OPQ) and postings stores get — write/read/append alone left
-# the flat serving artifacts without a retention or small-files story.
+# the flat serving artifacts without a delete or small-files story.
 # The flat stores have no partition column; the shared rewrite simply has
 # nothing to restate, and recovery is layout-generic already.
 # ---------------------------------------------------------------------------
@@ -1792,16 +1407,12 @@ def compact_pq_index(spark: SparkSession, path: str) -> None:
     of parquet files), quantizer sidecar carried over, crash-safe via
     the sibling-dir + rename swap (:func:`recover_pq_swap` heals a
     mid-swap death)."""
-
-    def fold(codes: DataFrame, part_cols: list[str]) -> DataFrame:
-        if "ingest_batch" in part_cols:
-            codes = codes.withColumn(
-                "ingest_batch", F.lit(BASE_INGEST_BATCH)
-            )
-        return codes.coalesce(max(1, codes.rdd.getNumPartitions() // 8))
-
-    fold.new_watermark = _fold_watermark(path)
-    _rewrite_ivfpq_swapped(spark, path, fold, kinds=FLAT_CODES_KINDS)
+    _rewrite_ivfpq_swapped(
+        spark,
+        path,
+        lambda codes: codes.coalesce(max(1, codes.rdd.getNumPartitions() // 8)),
+        kinds=FLAT_CODES_KINDS,
+    )
 
 
 def delete_from_pq_index(
@@ -1810,9 +1421,9 @@ def delete_from_pq_index(
     path: str,
     id_col: str = "vec_id",
 ) -> None:
-    """Targeted deletion from a flat PQ or OPQ codes store — the
-    retention operator completing the create/append/probe/compact
-    lifecycle at parity with :func:`delete_from_ivfpq_index`.
+    """Targeted deletion from a flat PQ or OPQ codes store, completing
+    the create/append/probe/compact lifecycle at parity with
+    :func:`delete_from_ivfpq_index`.
     ``delete_ids``: a one-column DataFrame or a Python list (broadcast
     anti-join). Crash-safe swap; re-running converges."""
     if not isinstance(delete_ids, DataFrame):
@@ -1823,7 +1434,7 @@ def delete_from_pq_index(
     _rewrite_ivfpq_swapped(
         spark,
         path,
-        lambda cur, _parts: cur.join(ids, id_col, "left_anti"),
+        lambda cur: cur.join(ids, id_col, "left_anti"),
         kinds=FLAT_CODES_KINDS,
     )
 
@@ -1874,48 +1485,6 @@ def validate_pq_store(spark: SparkSession, path: str) -> None:
             "new-ids contract — dedup (delete_from_pq_index the stale "
             "copies) before serving"
         )
-
-
-def write_codes_stream_base(
-    embeddings: DataFrame,
-    path: str,
-    codebooks: list[list[list[float]]],
-    r_cols: list[list[float]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Base epoch of a STREAM-maintained flat codes store (PQ, or OPQ
-    when ``r_cols`` is given) — the flat twin of
-    :func:`write_ivfpq_stream_base`: the same artifact as
-    :func:`write_pq_index` / :func:`write_opq_index` with an
-    ``ingest_batch`` partition level on top, so each stream micro-batch
-    owns its partition directory and a replayed epoch OVERWRITES itself
-    instead of appending duplicates. The quantizer (and rotation) stay
-    pinned in the sidecar; every epoch encodes with it, never a
-    retrained one — the codec ships offline, the stream only extends
-    its coverage."""
-    if r_cols is not None:
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.opq import (
-            opq_encode,
-        )
-
-        encoded = opq_encode(embeddings, r_cols, codebooks, id_col, vec_col)
-        meta = _opq_meta(r_cols, codebooks)
-    else:
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.ann import (
-            pq_encode,
-        )
-
-        encoded = pq_encode(embeddings, codebooks, id_col, vec_col)
-        meta = _pq_meta(codebooks)
-    (
-        encoded.withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(path)
-    )
-    meta["batch_partitioned"] = True
-    _write_store_meta(path, meta)
 
 
 # ---------------------------------------------------------------------------
@@ -2012,8 +1581,7 @@ def write_postings_index(
         docs, n_doc_shards, n_token_buckets, id_col, text_col
     ).write.mode("overwrite").partitionBy("doc_shard", "token_bucket").parquet(path)
     # BOTH sidecars derive from the store itself — posting rows carry
-    # dl, so tokenize runs exactly once per build (the same one-pass
-    # rule the streaming loop follows); zero-token docs have no
+    # dl, so tokenize runs exactly once per build; zero-token docs have no
     # posting rows (explode drops them) and are backfilled with dl=0
     # from the id column, keeping N and sum_dl exact
     written = spark.read.parquet(path)
@@ -2026,13 +1594,7 @@ def write_postings_index(
     dl.unionByName(zero).write.mode("overwrite").parquet(
         os.path.join(path, "_doc_lengths")
     )
-    (
-        written
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "_term_stats"))
-    )
+    _write_term_stats(written, os.path.join(path, "_term_stats"))
     _write_store_meta(
         path,
         {
@@ -2041,67 +1603,6 @@ def write_postings_index(
             "b": float(b),
             "n_doc_shards": int(n_doc_shards),
             "n_token_buckets": int(n_token_buckets),
-        },
-    )
-
-
-def write_postings_stream_base(
-    docs: DataFrame,
-    path: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n_doc_shards: int = 4,
-    n_token_buckets: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Base epoch of a STREAM-maintained lexical store (the lexical
-    twin of :func:`write_ivfpq_stream_base`): the same artifact as
-    :func:`write_postings_index` with an ``ingest_batch`` partition
-    level on top of every component — postings under
-    ``ingest_batch=BASE/doc_shard/token_bucket``, doc lengths and
-    per-term df DELTAS under ``ingest_batch=BASE`` — so each stream
-    micro-batch owns its partition directories and a replayed epoch
-    OVERWRITES itself instead of appending duplicates. Readers
-    aggregate the df deltas per term (:func:`read_term_stats`), which
-    also keeps per-epoch maintenance O(micro-batch), never a full
-    postings rescan."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.text import tokenize
-
-    posts = _postings_rows(
-        docs, n_doc_shards, n_token_buckets, id_col, text_col
-    ).withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-    posts.write.mode("overwrite").partitionBy(
-        "ingest_batch", "doc_shard", "token_bucket"
-    ).parquet(path)
-    (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(tokenize(F.col(text_col))).alias("dl"),
-        )
-        .withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(os.path.join(path, "_doc_lengths"))
-    )
-    (
-        docs.sparkSession.read.parquet(path)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(os.path.join(path, "_term_stats"))
-    )
-    _write_store_meta(
-        path,
-        {
-            "kind": "postings",
-            "k1": float(k1),
-            "b": float(b),
-            "n_doc_shards": int(n_doc_shards),
-            "n_token_buckets": int(n_token_buckets),
-            "batch_partitioned": True,
         },
     )
 
@@ -2118,15 +1619,10 @@ def read_postings_index(spark: SparkSession, path: str):
 
 
 def read_term_stats(spark: SparkSession, path: str) -> DataFrame:
-    """GLOBAL (token, df) from the ``_term_stats`` sidecar. Flat stores
-    hold it directly; stream-maintained stores hold one df DELTA per
-    ``ingest_batch`` partition (epoch-local counts, so maintenance never
-    rescans the index) — aggregated here. A doc's postings live in
-    exactly one epoch, so the per-epoch counts sum to the corpus df."""
-    stats = spark.read.parquet(os.path.join(path, "_term_stats"))
-    if "ingest_batch" in stats.columns:
-        return stats.groupBy("token").agg(F.sum("df").alias("df"))
-    return stats.select("token", "df")
+    """GLOBAL (token, df) from the ``_term_stats`` sidecar."""
+    return spark.read.parquet(os.path.join(path, "_term_stats")).select(
+        "token", "df"
+    )
 
 
 def read_postings_corpus_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -2164,12 +1660,6 @@ def append_postings_index(
         raise ValueError(
             f"{path} is not a lexical postings store (kind={meta.get('kind')!r})"
         )
-    if meta.get("batch_partitioned"):
-        raise ValueError(
-            f"{path} is a stream-maintained (batch-partitioned) store — "
-            "land new docs through stream_lexical_ingest, whose per-epoch "
-            "partitions stay replay-idempotent; a plain append would not"
-        )
     spark = new_docs.sparkSession
     new_posts = _postings_rows(
         new_docs,
@@ -2193,31 +1683,13 @@ def append_postings_index(
 def _refresh_term_stats(spark: SparkSession, path: str) -> None:
     """Recompute ``_term_stats`` from the postings and swap it in via a
     sibling tmp dir + rename (never overwrite-in-place what the plan
-    reads; a complete copy exists at every instant). On a
-    stream-maintained store the recompute preserves the per-epoch delta
-    layout (grouped by ``ingest_batch``), so later epoch replays keep
-    overwriting their own partition consistently."""
+    reads; a complete copy exists at every instant)."""
     import shutil
 
     stats_dir = os.path.join(path, "_term_stats")
     tmp = stats_dir + "__tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    posts = spark.read.parquet(path)
-    if "ingest_batch" in posts.columns:
-        (
-            posts.groupBy("ingest_batch", "token")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(tmp)
-        )
-    else:
-        (
-            posts.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
+    _write_term_stats(spark.read.parquet(path), tmp)
     old = stats_dir + "__old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(stats_dir):
@@ -2226,21 +1698,30 @@ def _refresh_term_stats(spark: SparkSession, path: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _write_term_stats(postings: DataFrame, out: str) -> None:
+    """(token, df) over ``postings``: one row per posting, so the
+    count per token is its document frequency."""
+    (
+        postings.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+
+
 POSTINGS_SWAP_MARKERS = ("_SUCCESS", "_term_stats", "_index_meta.json")
 
 
-def _prepare_postings_rewrite(
-    spark: SparkSession, path: str, transform, suffix: str = "__compact"
-) -> str:
-    """Phase 1 of a lexical-store rewrite: ``transform(postings,
-    doc_lengths)`` returns the replacement (postings, doc_lengths)
-    pair, written to the sibling tmp directory under the same partition
-    layout (including the ``ingest_batch`` level of a stream-maintained
-    store) with the term-df sidecar recomputed from the surviving
-    postings and the meta + any absorbed-epoch watermark carried over.
-    Returns the tmp path; phase 2 is :func:`_commit_dir_swap` (shared
-    law with :func:`_prepare_ivfpq_rewrite`; :func:`recover_postings_swap`
-    heals a mid-swap death)."""
+def _rewrite_postings_swapped(spark: SparkSession, path: str, transform) -> None:
+    """Crash-safe full rewrite of a lexical postings store:
+    ``transform(postings, doc_lengths)`` returns the replacement
+    (postings, doc_lengths) pair, written to the sibling tmp directory
+    under the same doc_shard/token_bucket layout with the term-df
+    sidecar recomputed from the surviving postings and the meta copied
+    over, then swapped in through the shared core
+    (:func:`recover_postings_swap` heals a mid-swap death)."""
+    import shutil
+
     meta = read_store_meta(path)
     if meta.get("kind") != "postings":
         raise ValueError(
@@ -2248,70 +1729,29 @@ def _prepare_postings_rewrite(
         )
     postings = spark.read.parquet(path)
     doc_lengths = spark.read.parquet(os.path.join(path, "_doc_lengths"))
-    part_cols = [
-        c
-        for c in ("ingest_batch", "doc_shard", "token_bucket")
-        if c in postings.columns
-    ]
-    dl_part_cols = [c for c in ("ingest_batch",) if c in doc_lengths.columns]
-    tmp = _prepare_dir_swap(path, suffix=suffix)
+    tmp = _prepare_dir_swap(path)
     new_posts, new_dls = transform(postings, doc_lengths)
-    new_posts.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
-    dl_writer = new_dls.write.mode("overwrite")
-    if dl_part_cols:
-        dl_writer = dl_writer.partitionBy(*dl_part_cols)
-    dl_writer.parquet(os.path.join(tmp, "_doc_lengths"))
-    tmp_posts = spark.read.parquet(tmp)
-    if "ingest_batch" in tmp_posts.columns:
-        (
-            tmp_posts.groupBy("ingest_batch", "token")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(os.path.join(tmp, "_term_stats"))
-        )
-    else:
-        (
-            tmp_posts.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "_term_stats"))
-        )
-    _carry_swap_sidecars(
-        path, tmp, new_watermark=getattr(transform, "new_watermark", None)
+    new_posts.write.mode("overwrite").partitionBy(
+        "doc_shard", "token_bucket"
+    ).parquet(tmp)
+    new_dls.write.mode("overwrite").parquet(os.path.join(tmp, "_doc_lengths"))
+    _write_term_stats(spark.read.parquet(tmp), os.path.join(tmp, "_term_stats"))
+    # the meta lands LAST: next to _SUCCESS and _term_stats it is the
+    # POSTINGS_SWAP_MARKERS proof that tmp is complete
+    shutil.copy2(
+        os.path.join(path, "_index_meta.json"),
+        os.path.join(tmp, "_index_meta.json"),
     )
-    return tmp
-
-
-def _rewrite_postings_swapped(spark: SparkSession, path: str, transform) -> None:
-    """Crash-safe full rewrite of a lexical postings store through the
-    shared prepare + swap core."""
-    _prepare_postings_rewrite(spark, path, transform)
     _commit_dir_swap(path)
 
 
 def compact_postings_index(spark: SparkSession, path: str) -> None:
-    """Compact a lexical postings store: many appends (or one stream
-    epoch partition per micro-batch from ``stream_lexical_ingest``)
-    leave small files / unbounded ``ingest_batch=`` directories;
-    rewrite the store once, folding every epoch into
-    :data:`BASE_INGEST_BATCH` while KEEPING the doc_shard/token_bucket
-    levels (replica-export and query-bucket pruning must survive
-    compaction) and refreshing the sidecars from the rewritten data.
-    Crash-safe via the sibling-dir + rename swap; for epoch stores the
-    swap carries an absorbed-epoch watermark so a stream replay of a
-    folded epoch is dropped by the maintenance loop instead of
-    double-landing."""
-
-    def fold(posts: DataFrame, dls: DataFrame):
-        if "ingest_batch" in posts.columns:
-            posts = posts.withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        if "ingest_batch" in dls.columns:
-            dls = dls.withColumn("ingest_batch", F.lit(BASE_INGEST_BATCH))
-        return posts, dls
-
-    fold.new_watermark = _fold_watermark(path)
-    _rewrite_postings_swapped(spark, path, fold)
+    """Compact a lexical postings store: many appends leave small files
+    in every partition directory; rewrite the store once while KEEPING
+    the doc_shard/token_bucket levels (replica-export and query-bucket
+    pruning must survive compaction) and refreshing the sidecars from
+    the rewritten data. Crash-safe via the sibling-dir + rename swap."""
+    _rewrite_postings_swapped(spark, path, lambda posts, dls: (posts, dls))
 
 
 def delete_from_postings_index(
@@ -2321,7 +1761,7 @@ def delete_from_postings_index(
     id_col: str = "doc_id",
 ) -> None:
     """Targeted deletion from a persisted lexical store — the
-    retention / right-to-be-forgotten operator at parity with
+    right-to-be-forgotten operator at parity with
     :func:`delete_from_index` (LSH) and :func:`delete_from_ivfpq_index`.
     Removes the docs' postings AND doc-length rows, so N, sum_dl and
     every term df reflect the post-delete corpus exactly (BM25 scores
@@ -2364,20 +1804,15 @@ def rebuild_postings_stats(spark: SparkSession, path: str) -> None:
     postings alone — the one documented gap, caught by re-appending)."""
     dl_path = os.path.join(path, "_doc_lengths")
     have = spark.read.parquet(dl_path).select("doc_id")
-    posts = spark.read.parquet(path)
-    epoch_store = "ingest_batch" in posts.columns
-    cols = ["doc_id", "dl"] + (["ingest_batch"] if epoch_store else [])
     missing = (
-        posts.select(*cols)
+        spark.read.parquet(path)
+        .select("doc_id", "dl")
         .distinct()
         .join(have, "doc_id", "left_anti")
         .transform(materialize, eager=True)  # cut lineage: the write reads dl_path
     )
     if missing.count() > 0:
-        writer = missing.write.mode("append")
-        if epoch_store:
-            writer = writer.partitionBy("ingest_batch")
-        writer.parquet(dl_path)
+        missing.write.mode("append").parquet(dl_path)
     _refresh_term_stats(spark, path)
 
 

@@ -12,7 +12,9 @@ needs, entirely on Structured Streaming built-ins:
 
 All functions take/return DataFrames; streaming-ness is inherited
 from the input (they work identically on batch DataFrames, which is
-how the oracle checks them).
+how the oracle checks them). The persisted stores are maintained in
+batch only (``sources.tables``: write, append, compact, delete), as
+the reference rebuilds its shards offline.
 """
 
 from __future__ import annotations
@@ -121,69 +123,3 @@ def streaming_lsh_probe(
         broadcast_query=False,
     )
     return scored.filter(F.col("score") >= threshold)
-
-
-def stream_index_maintenance(
-    stream_docs: DataFrame,
-    params: MinHashParams,
-    sigs_path: str,
-    bands_table: str,
-    checkpoint: str,
-    trigger_kwargs: dict | None = None,
-):
-    """Continuous index maintenance: a stream of NEW documents keeps
-    the persisted LSH index fresh — the streaming half of
-    :func:`..sources.tables.append_to_index`.
-
-    Each micro-batch signs + bands only its own documents and writes
-    them through ``foreachBatch`` (streaming sinks cannot write bucketed
-    tables directly, batch writers can), so the index stays the same
-    shuffle-free bucketed probe layout whether rows arrived in batch or
-    on the stream.
-
-    Delivery semantics depend on the index layout. foreachBatch is
-    AT-LEAST-ONCE: an epoch that fails mid-sink is REPLAYED after
-    restart, and the checkpoint only dedups epochs that fully
-    committed. With a batch-partitioned index
-    (``write_bands_bucketed(batch_partitioned=True)`` +
-    ``write_sigs_batch_partitioned``) the sink routes through
-    ``append_to_index_exactly_once`` — each epoch dynamically
-    OVERWRITES its own ``ingest_batch=<epoch>`` partition, so replays
-    converge and the net effect is exactly-once. With a flat index the
-    sink falls back to the blind ``append_to_index`` and a replayed
-    epoch DUPLICATES its rows — detectable via ``compact_index``'s
-    uniqueness validation / ``validate_index``, but not self-healing;
-    use the batch-partitioned layout for production streams.
-
-    Returns the started StreamingQuery; callers control the trigger
-    via ``trigger_kwargs`` (default availableNow for catch-up; pass
-    ``{"processingTime": "..."}`` for continuous).
-    """
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        append_to_index,
-        append_to_index_exactly_once,
-    )
-
-    spark = stream_docs.sparkSession
-    # catalog metadata, NOT spark.table(...): resolving the relation
-    # here would pin its file listing in this session's relation cache
-    # BEFORE any append runs, and later reads through the same session
-    # would silently see the pre-stream snapshot.
-    idempotent = "ingest_batch" in {
-        c.name for c in spark.catalog.listColumns(bands_table)
-    }
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if idempotent:
-            append_to_index_exactly_once(
-                batch_df, int(batch_id), params, sigs_path, bands_table
-            )
-        else:
-            append_to_index(batch_df, params, sigs_path, bands_table)
-
-    writer = stream_docs.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    return writer.trigger(**(trigger_kwargs or {"availableNow": True})).start()

@@ -1,5 +1,5 @@
-"""HyperLogLog: duplicate invariance, shard-merge property, accuracy
-band, and register-count bound."""
+"""HyperLogLog: duplicate invariance, accuracy band, and register-count
+bound."""
 
 from __future__ import annotations
 
@@ -15,15 +15,6 @@ def test_hll_duplicates_do_not_change_sketch(spark):
     once = hll.hll_registers(_items(spark, uniq), "key", p=6)
     thrice = hll.hll_registers(_items(spark, uniq * 3), "key", p=6)
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, thrice.collect()))
-
-
-def test_hll_merge_equals_single_build(spark):
-    keys = [f"k{i}" for i in range(500)]
-    a = hll.hll_registers(_items(spark, keys[:200]), "key", p=6)
-    b = hll.hll_registers(_items(spark, keys[150:]), "key", p=6)  # overlap
-    merged = hll.hll_merge(a, b)
-    single = hll.hll_registers(_items(spark, keys), "key", p=6)
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, single.collect()))
 
 
 def test_hll_estimate_within_error_band(spark):

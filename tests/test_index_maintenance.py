@@ -1,6 +1,6 @@
-"""Index lifecycle hardening: crash-safe compaction swap, cross-table
-consistency validation, and replay-idempotent (exactly-once) appends
-for the batch-partitioned index layout."""
+"""Index lifecycle hardening: crash-safe compaction and delete swaps,
+their recovery, cross-table consistency validation, and the
+shard-partitioned serving layout kept through every rewrite."""
 
 from __future__ import annotations
 
@@ -124,192 +124,6 @@ def test_validate_index_detects_partial_append(spark, corpus, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_exactly_once_append_replay_is_idempotent(spark, corpus, tmp_path):
-    """Replaying a micro-batch (foreachBatch's at-least-once failure
-    mode) against the batch-partitioned layout must converge to the
-    same index — including when the partition holds a PARTIAL previous
-    attempt."""
-    docs, sigs = corpus
-    table = "t_eo_idx"
-    sigs_p = str(tmp_path / "sigs_eo")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        base_sigs = sigs.filter(F.col("doc_id") % 2 == 0)
-        new_docs = docs.filter(F.col("doc_id") % 2 == 1)
-        T.write_sigs_batch_partitioned(base_sigs, sigs_p)
-        T.write_bands_bucketed(
-            lsh.bands_table(base_sigs, PARAMS),
-            table,
-            num_buckets=4,
-            batch_partitioned=True,
-        )
-
-        # simulate a PARTIAL earlier attempt of batch 5: garbage rows
-        # already sitting in its bands partition
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        garbage = spark.createDataFrame(
-            [(999_999, 0, 123456789, 5)],
-            "doc_id long, band_id int, band_hash long, ingest_batch int",
-        )
-        garbage.select(*spark.table(table).columns).write.mode(
-            "overwrite"
-        ).insertInto(table)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        assert spark.table(table).filter(F.col("doc_id") == 999_999).count() == 1
-
-        T.append_to_index_exactly_once(new_docs, 5, PARAMS, sigs_p, table)
-        first_sigs = spark.read.parquet(sigs_p).count()
-        first_bands = spark.table(table).count()
-        # garbage from the partial attempt is gone (partition overwritten)
-        assert spark.table(table).filter(F.col("doc_id") == 999_999).count() == 0
-
-        # replay the SAME batch: nothing changes
-        T.append_to_index_exactly_once(new_docs, 5, PARAMS, sigs_p, table)
-        assert spark.read.parquet(sigs_p).count() == first_sigs
-        assert spark.table(table).count() == first_bands
-
-        sigs_all = spark.read.parquet(sigs_p).select("doc_id", "sig")
-        assert sigs_all.select("doc_id").distinct().count() == docs.count()
-        # probe-identical to a from-scratch batch build
-        got = _probe(spark, sigs_all, table)
-        bands_full = lsh.bands_table(sigs, PARAMS)
-        qdf = sigs.filter(F.col("doc_id") == 13).select(
-            F.col("doc_id").alias("query_id"), "sig"
-        )
-        expect = sorted(
-            map(
-                tuple,
-                lsh.lsh_topk(sigs, bands_full, qdf, PARAMS, k=10, n_queries=1).collect(),
-            )
-        )
-        assert [t[:3] for t in got] == [t[:3] for t in expect]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_exactly_once_append_rejects_flat_table_and_base_batch(
-    spark, corpus, tmp_path
-):
-    docs, sigs = corpus
-    table = "t_eo_guard_idx"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        T.write_bands_bucketed(lsh.bands_table(sigs, PARAMS), table, num_buckets=4)
-        with pytest.raises(ValueError, match="not batch-partitioned"):
-            T.append_to_index_exactly_once(
-                docs.limit(1), 0, PARAMS, str(tmp_path / "s"), table
-            )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}2")
-    try:
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs, PARAMS), f"{table}2", num_buckets=4,
-            batch_partitioned=True,
-        )
-        with pytest.raises(ValueError, match="batch_id must be >= 0"):
-            T.append_to_index_exactly_once(
-                docs.limit(1), -1, PARAMS, str(tmp_path / "s2"), f"{table}2"
-            )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}2")
-
-
-def test_stream_maintenance_uses_exactly_once_on_partitioned_layout(
-    spark, corpus, tmp_path
-):
-    """stream_index_maintenance must route micro-batches through the
-    idempotent partition-overwrite sink when the index is
-    batch-partitioned: epochs land in their own ingest_batch
-    partitions and the final index is probe-identical to a batch
-    build."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import (
-        queries as SQ,
-    )
-
-    docs, sigs = corpus
-    table = "t_eo_stream_idx"
-    sigs_p = str(tmp_path / "sigs_eos")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        half_a = sigs.filter(F.col("doc_id") % 2 == 0)
-        half_b = docs.filter(F.col("doc_id") % 2 == 1)
-        T.write_sigs_batch_partitioned(half_a, sigs_p)
-        T.write_bands_bucketed(
-            lsh.bands_table(half_a, PARAMS), table, num_buckets=4,
-            batch_partitioned=True,
-        )
-        src = str(tmp_path / "src_eos")
-        half_b.repartition(2).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(half_b.schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(src)
-        SQ.stream_index_maintenance(
-            stream, PARAMS, sigs_p, table, str(tmp_path / "ckpt_eos")
-        ).awaitTermination(180)
-
-        batches = sorted(
-            r["ingest_batch"]
-            for r in spark.table(table).select("ingest_batch").distinct().collect()
-        )
-        assert batches[0] == T.BASE_INGEST_BATCH and len(batches) >= 2
-
-        sigs_all = spark.read.parquet(sigs_p).select("doc_id", "sig")
-        assert sigs_all.select("doc_id").distinct().count() == docs.count()
-        got = _probe(spark, sigs_all, table)
-        bands_full = lsh.bands_table(sigs, PARAMS)
-        qdf = sigs.filter(F.col("doc_id") == 13).select(
-            F.col("doc_id").alias("query_id"), "sig"
-        )
-        expect = sorted(
-            map(
-                tuple,
-                lsh.lsh_topk(sigs, bands_full, qdf, PARAMS, k=10, n_queries=1).collect(),
-            )
-        )
-        assert [t[:3] for t in got] == [t[:3] for t in expect]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_compact_batch_partitioned_folds_history_into_base(spark, corpus, tmp_path):
-    """Compacting a batch-partitioned index folds every epoch into the
-    BASE_INGEST_BATCH partition while keeping probes identical."""
-    docs, sigs = corpus
-    table = "t_eo_compact_idx"
-    sigs_p = str(tmp_path / "sigs_cp")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        base_sigs = sigs.filter(F.col("doc_id") % 3 == 0)
-        T.write_sigs_batch_partitioned(base_sigs, sigs_p)
-        T.write_bands_bucketed(
-            lsh.bands_table(base_sigs, PARAMS), table, num_buckets=4,
-            batch_partitioned=True,
-        )
-        T.append_to_index_exactly_once(
-            docs.filter(F.col("doc_id") % 3 == 1), 0, PARAMS, sigs_p, table
-        )
-        T.append_to_index_exactly_once(
-            docs.filter(F.col("doc_id") % 3 == 2), 1, PARAMS, sigs_p, table
-        )
-        sigs_all = spark.read.parquet(sigs_p).select("doc_id", "sig")
-        before = _probe(spark, sigs_all, table)
-        n_before = spark.table(table).count()
-
-        T.compact_index(spark, table)
-        assert spark.table(table).count() == n_before
-        batches = [
-            r["ingest_batch"]
-            for r in spark.table(table).select("ingest_batch").distinct().collect()
-        ]
-        assert batches == [T.BASE_INGEST_BATCH]
-        assert _probe(spark, sigs_all, table) == before
-    finally:
-        for t in (table, f"{table}__compact_tmp", f"{table}__compact_old"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_serving_export_raises_on_orphan_band_ids(spark, corpus):
     """Bands-without-sigs (the append crash window) must fail LOUDLY at
     serving export, not silently map to another document's row."""
@@ -355,23 +169,6 @@ def test_compact_preserves_shard_partitioned_layout(spark, corpus):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_exactly_once_append_rejects_flat_sigs_store(spark, corpus, tmp_path):
-    docs, sigs = corpus
-    table = "t_eo_flats_idx"
-    sigs_p = str(tmp_path / "flat_sigs")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        sigs.write.mode("overwrite").parquet(sigs_p)  # FLAT layout
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs, PARAMS), table, num_buckets=4,
-            batch_partitioned=True,
-        )
-        with pytest.raises(ValueError, match="flat signature store"):
-            T.append_to_index_exactly_once(docs.limit(1), 0, PARAMS, sigs_p, table)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_delete_from_index_removes_ids_from_both_halves(spark, corpus, tmp_path):
     """Deleted doc_ids disappear from probes AND from the signature
     store; the bucket layout and everything else survives."""
@@ -408,47 +205,36 @@ def test_delete_from_index_removes_ids_from_both_halves(spark, corpus, tmp_path)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_delete_preserves_batch_partitioned_layout(spark, corpus, tmp_path):
-    """On the exactly-once (ingest_batch-partitioned) layout, deletion
-    keeps the partition column on both halves so streaming appends keep
-    working afterwards."""
+def test_delete_preserves_shard_partitioned_layout(spark, corpus, tmp_path):
+    """On the shard-partitioned serving layout, deletion keeps the
+    partition column on both halves so appends keep working
+    afterwards."""
     docs, sigs = corpus
     table = "t_delete_part_idx"
     sigs_path = str(tmp_path / "sigs_del_part")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs, PARAMS), table, num_buckets=4, batch_partitioned=True
-        )
-        T.write_sigs_batch_partitioned(sigs, sigs_path)
-        T.append_to_index_exactly_once(
-            docs.filter(F.col("doc_id") < 3).select(
-                (F.col("doc_id") + 10_000).alias("doc_id"), "text"
-            ),
-            0,
-            PARAMS,
-            sigs_path,
-            table,
-        )
-        T.delete_from_index(spark, [10_000, 5], sigs_path, table)
+        T.write_bands_sharded(lsh.bands_table(sigs, PARAMS), table, 2, num_buckets=4)
+        T.write_sigs_sharded(sigs, sigs_path, 2)
+        T.delete_from_index(spark, [13, 5], sigs_path, table)
         left = spark.read.parquet(sigs_path)
-        assert "ingest_batch" in left.columns
-        assert left.filter(F.col("doc_id").isin([10_000, 5])).count() == 0
-        assert spark.table(table).filter(F.col("doc_id").isin([10_000, 5])).count() == 0
-        # appends after the delete still go through the exactly-once path
-        T.append_to_index_exactly_once(
-            docs.filter(F.col("doc_id") == 7).select(
-                (F.col("doc_id") + 20_000).alias("doc_id"), "text"
-            ),
-            1,
-            PARAMS,
-            sigs_path,
-            table,
+        assert "shard" in left.columns
+        assert left.filter(F.col("doc_id").isin([13, 5])).count() == 0
+        assert spark.table(table).filter(F.col("doc_id").isin([13, 5])).count() == 0
+        # appends after the delete still restate the layout
+        new = docs.filter(F.col("doc_id") == 7).select(
+            (F.col("doc_id") + 20_000).alias("doc_id"), "text"
         )
+        new_sigs = minhash.signatures(new, PARAMS)
+        lsh.bands_table(new_sigs, PARAMS).withColumn(
+            "shard", F.pmod(F.col("doc_id"), F.lit(2)).cast("int")
+        ).select(*spark.table(table).columns).write.mode("append").insertInto(table)
+        new_sigs.withColumn(
+            "shard", F.pmod(F.col("doc_id"), F.lit(2)).cast("int")
+        ).write.mode("append").partitionBy("shard").parquet(sigs_path)
         T.validate_index(spark, sigs_path, table)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-
 
 def test_recover_sigs_swap_after_process_death(spark, corpus, tmp_path):
     """Both death windows of the signature-directory swap heal: tmp
@@ -496,16 +282,13 @@ def test_recover_compact_swap_stale_old_partitions_never_alias_live(
     table = "t_recover_stale_idx"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs, PARAMS), table, num_buckets=4,
-            batch_partitioned=True,
-        )
+        T.write_bands_sharded(lsh.bands_table(sigs, PARAMS), table, 2, num_buckets=4)
         n_before = spark.table(table).count()
         before = _probe(spark, sigs, table)
 
         # compacted copy complete under __compact_tmp (same layout)
         spark.table(table).write.mode("overwrite").partitionBy(
-            "ingest_batch"
+            "shard"
         ).bucketBy(4, "band_id", "band_hash").sortBy(
             "band_id", "band_hash"
         ).format("parquet").saveAsTable(f"{table}__compact_tmp")
@@ -544,14 +327,11 @@ def test_recover_compact_swap_drops_lingering_old_when_healthy(spark, corpus):
     table = "t_recover_linger_idx"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs, PARAMS), table, num_buckets=4,
-            batch_partitioned=True,
-        )
+        T.write_bands_sharded(lsh.bands_table(sigs, PARAMS), table, 2, num_buckets=4)
         n_before = spark.table(table).count()
         # a synced set-aside copy, as the normal flow leaves it
         spark.table(table).write.mode("overwrite").partitionBy(
-            "ingest_batch"
+            "shard"
         ).bucketBy(4, "band_id", "band_hash").sortBy(
             "band_id", "band_hash"
         ).format("parquet").saveAsTable(f"{table}__compact_old")

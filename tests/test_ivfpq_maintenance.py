@@ -1,6 +1,6 @@
-"""IVF-PQ store lifecycle: delete, epoch compaction, crash-window
-recovery, and the streaming codes store's absorbed-epoch replay guard —
-the cell-store twin of ``tests/test_index_maintenance.py``."""
+"""IVF-PQ store lifecycle: delete, compaction, crash-window recovery
+and validation — the cell-store twin of
+``tests/test_index_maintenance.py``."""
 
 from __future__ import annotations
 
@@ -12,12 +12,10 @@ from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-    BASE_INGEST_BATCH,
     append_ivfpq_index,
     compact_ivfpq_index,
     delete_from_ivfpq_index,
     load_table,
-    read_absorbed_watermark,
     read_ivfpq_index,
     recover_ivfpq_swap,
     write_ivfpq_index,
@@ -86,8 +84,8 @@ def test_delete_from_ivfpq_rejects_non_ivfpq_store(spark, tmp_path):
 
 
 def test_compact_ivfpq_appends_preserves_answers(spark, tmp_path):
-    """Append-heavy flat store (no epochs): compaction rewrites the
-    same rows, preserving probe answers and the cell layout."""
+    """Append-heavy store: compaction rewrites the same rows,
+    preserving probe answers and the cell layout."""
     emb = _emb(spark)
     cents, books = _quant()
     p = str(tmp_path / "ivfpq_app")
@@ -104,66 +102,6 @@ def test_compact_ivfpq_appends_preserves_answers(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == want
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-    # flat store: no watermark (nothing stream-replayable was absorbed)
-    assert read_absorbed_watermark(p) is None
-
-
-def _epoch_store(spark, tmp_path, tag):
-    """Batch-partitioned codes store: base + two stream-style epochs."""
-    emb = _emb(spark)
-    cents, books = _quant()
-    p = str(tmp_path / f"ivfpq_ep_{tag}")
-    codes = ann.ivfpq_encode(emb, cents, books)
-
-    def land(df, batch):
-        (
-            df.withColumn("ingest_batch", F.lit(batch))
-            .write.mode("append")
-            .partitionBy("ingest_batch", "cell")
-            .parquet(p)
-        )
-
-    land(codes.filter(F.col("vec_id") < 40), BASE_INGEST_BATCH)
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        _ivfpq_meta,
-        _write_store_meta,
-    )
-
-    _write_store_meta(p, _ivfpq_meta(cents, books))
-    land(codes.filter((F.col("vec_id") >= 40) & (F.col("vec_id") < 50)), 0)
-    land(codes.filter(F.col("vec_id") >= 50), 1)
-    return emb, cents, books, p
-
-
-def test_compact_ivfpq_folds_epochs_sets_watermark(spark, tmp_path):
-    emb, cents, books, p = _epoch_store(spark, tmp_path, "fold")
-    before = _rows(spark, p)
-    compact_ivfpq_index(spark, p)
-    assert _rows(spark, p) == before
-    batches = {
-        r["ingest_batch"]
-        for r in spark.read.parquet(p).select("ingest_batch").distinct().collect()
-    }
-    assert batches == {BASE_INGEST_BATCH}
-    # cell partitioning survives under the folded base
-    base_dir = os.path.join(p, f"ingest_batch={BASE_INGEST_BATCH}")
-    assert any(n.startswith("cell=") for n in os.listdir(base_dir))
-    assert read_absorbed_watermark(p) == 1
-    # second compaction carries the watermark forward
-    compact_ivfpq_index(spark, p)
-    assert read_absorbed_watermark(p) == 1
-
-
-def test_streaming_codes_replay_of_absorbed_epoch_is_dropped(spark, tmp_path):
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming.semantic import (
-        _epoch_absorbed,
-    )
-
-    _, _, _, p = _epoch_store(spark, tmp_path, "rp")
-    assert not _epoch_absorbed(p, 0)
-    compact_ivfpq_index(spark, p)
-    assert _epoch_absorbed(p, 0) and _epoch_absorbed(p, 1)
-    assert not _epoch_absorbed(p, 2)
 
 
 def test_recover_ivfpq_swap_windows(spark, tmp_path):

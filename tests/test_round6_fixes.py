@@ -1,149 +1,20 @@
-"""Round-6 hardening: sketch-store compaction crash windows and replay
-watermark, HLL parameter validation, distinct k-means reseeds, and the
-degenerate-query (d1 == 0) alpha-probe/calibration convention."""
+"""Round-6 hardening: HLL parameter validation, distinct k-means
+reseeds, and the degenerate-query (d1 == 0) alpha-probe/calibration
+convention."""
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import numpy as np
 import pytest
 
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions import cms, hll
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions import hll
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import (
-    sketches as SK,
-)
 
-D, W, P = 4, 32, 6
+P = 6
 
 
 def _items(spark, rows):
     return spark.createDataFrame([(k,) for k in rows], "key string")
-
-
-def _build_store(spark, tmp_path, tag):
-    """Two-epoch CMS+HLL store via the real stream."""
-    src = str(tmp_path / f"src_{tag}")
-    cms_p = str(tmp_path / f"cms_{tag}")
-    hll_p = str(tmp_path / f"hll_{tag}")
-    ckpt = str(tmp_path / f"ckpt_{tag}")
-    rows = [f"k{i % 11}" for i in range(120)]
-    _items(spark, rows[:60]).coalesce(1).write.mode("overwrite").parquet(src)
-    _items(spark, rows[60:]).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    SK.stream_sketch_maintenance(
-        stream, "key", cms_p, hll_p, d=D, width=W, p=P, checkpoint=ckpt
-    ).awaitTermination(180)
-    return src, cms_p, hll_p, ckpt, rows
-
-
-# ---------- compaction crash windows ----------
-
-
-def test_compact_sketch_swap_leaves_no_leftovers(spark, tmp_path):
-    _, cms_p, _, _, rows = _build_store(spark, tmp_path, "clean")
-    before = sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect()))
-    SK.compact_sketch_store(spark, cms_p, "cms")
-    assert sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect())) == before
-    assert not os.path.exists(cms_p + "__compact_tmp")
-    assert not os.path.exists(cms_p + "__compact_old")
-    # watermark records the max absorbed epoch (two epochs: 0 and 1)
-    assert SK._read_watermark(cms_p) == 1
-    # recovery on a healthy store is a no-op
-    assert SK.recover_sketch_compact(cms_p) is False
-
-
-def test_recover_sketch_compact_mid_swap_tmp_complete(spark, tmp_path):
-    """Death between rename-aside and rename-in, with a complete tmp:
-    recovery must install the compacted copy."""
-    _, cms_p, _, _, _ = _build_store(spark, tmp_path, "w1")
-    before = sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect()))
-    SK.compact_sketch_store(spark, cms_p, "cms")
-    # reconstruct the mid-swap state: store renamed aside, tmp complete
-    os.rename(cms_p, cms_p + "__compact_tmp")  # compacted copy as tmp
-    # (no __compact_old: simulate old already renamed but tmp not yet in)
-    assert SK.recover_sketch_compact(cms_p) is True
-    assert sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect())) == before
-    assert not os.path.exists(cms_p + "__compact_tmp")
-
-
-def test_recover_sketch_compact_incomplete_tmp_restores_old(spark, tmp_path):
-    """Death mid-tmp-write (no _SUCCESS): recovery restores the
-    set-aside original and clears the partial tmp."""
-    _, cms_p, _, _, _ = _build_store(spark, tmp_path, "w2")
-    before = sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect()))
-    tmp = cms_p + "__compact_tmp"
-    old = cms_p + "__compact_old"
-    os.rename(cms_p, old)
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"partial")  # no _SUCCESS -> incomplete
-    assert SK.recover_sketch_compact(cms_p) is True
-    assert sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect())) == before
-    assert not os.path.exists(tmp) and not os.path.exists(old)
-
-
-def test_recover_sketch_compact_healthy_store_clears_leftovers(spark, tmp_path):
-    _, cms_p, _, _, _ = _build_store(spark, tmp_path, "w3")
-    os.makedirs(cms_p + "__compact_tmp")
-    assert SK.recover_sketch_compact(cms_p) is True
-    assert not os.path.exists(cms_p + "__compact_tmp")
-
-
-def test_recover_sketch_compact_nothing_survives_raises(tmp_path):
-    with pytest.raises(ValueError, match="no surviving copy"):
-        SK.recover_sketch_compact(str(tmp_path / "absent"))
-
-
-# ---------- replay watermark ----------
-
-
-def test_replayed_absorbed_epoch_is_dropped(spark, tmp_path):
-    """Checkpoint-loss replay after compaction: every epoch re-fires
-    with its original batch id; the watermark must drop them all so the
-    merged view stays equal to the batch build (no CMS double count)."""
-    src, cms_p, hll_p, ckpt, rows = _build_store(spark, tmp_path, "rp")
-    SK.compact_sketch_store(spark, cms_p, "cms")
-    SK.compact_sketch_store(spark, hll_p, "hll")
-    want = sorted(map(tuple, cms.cms_build(_items(spark, rows), "key", D, W).collect()))
-    assert sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect())) == want
-    # lose the checkpoint -> the restarted stream replays epochs 0..1
-    shutil.rmtree(ckpt)
-    stream = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    SK.stream_sketch_maintenance(
-        stream, "key", cms_p, hll_p, d=D, width=W, p=P, checkpoint=ckpt
-    ).awaitTermination(180)
-    assert sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect())) == want
-    got_hll = sorted(map(tuple, SK.read_hll_sketch(spark, hll_p).collect()))
-    want_hll = sorted(
-        map(tuple, hll.hll_registers(_items(spark, rows), "key", p=P).collect())
-    )
-    assert got_hll == want_hll
-    # and a genuinely NEW epoch (id above the watermark) still lands
-    extra = [f"new{i % 3}" for i in range(30)]
-    _items(spark, extra).coalesce(1).write.mode("append").parquet(src)
-    stream2 = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    SK.stream_sketch_maintenance(
-        stream2, "key", cms_p, hll_p, d=D, width=W, p=P, checkpoint=ckpt
-    ).awaitTermination(180)
-    want2 = sorted(
-        map(tuple, cms.cms_build(_items(spark, rows + extra), "key", D, W).collect())
-    )
-    assert sorted(map(tuple, SK.read_cms_sketch(spark, cms_p).collect())) == want2
 
 
 # ---------- HLL p validation ----------

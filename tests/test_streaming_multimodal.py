@@ -193,101 +193,3 @@ def test_write_sharded_and_metrics_csv(spark, sf_dir, tmp_path):
     sinks.write_metrics_csv(m, csv_out)
     back_csv = spark.read.option("header", True).csv(csv_out)
     assert int(back_csv.collect()[0]["n_docs"]) == docs.count()
-
-
-def test_stream_index_maintenance_matches_batch_build(spark, tmp_path):
-    """A file stream of new documents must leave the persisted index
-    probe-identical to a batch build over the full corpus."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import MinHashParams
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import lsh, minhash
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import tables as T
-
-    params = MinHashParams()
-    docs = T.load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1)
-    sigs_p = str(tmp_path / "sigs_stream")
-    try:
-        # batch-build on half A
-        sigs_a = minhash.signatures(half_a, params)
-        sigs_a.write.mode("overwrite").parquet(sigs_p)
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs_a, params), "t_stream_idx", num_buckets=4
-        )
-        # stream half B in (two source files -> micro-batches)
-        src = str(tmp_path / "doc_stream")
-        half_b.repartition(2).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(half_b.schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(src)
-        q = SQ.stream_index_maintenance(
-            stream, params, sigs_p, "t_stream_idx", str(tmp_path / "idx_ckpt")
-        )
-        q.awaitTermination(180)
-
-        sigs_all = spark.read.parquet(sigs_p)
-        assert sigs_all.count() == docs.count()
-        qdf = sigs_all.filter(F.col("doc_id") == 13).select(
-            F.col("doc_id").alias("query_id"), "sig"
-        )
-        got = lsh.lsh_topk(
-            sigs_all, spark.table("t_stream_idx"), qdf, params, k=10, n_queries=1
-        ).collect()
-        # full batch build as the oracle
-        sigs_full = minhash.signatures(docs, params).cache()
-        bands_full = lsh.bands_table(sigs_full, params)
-        expect = lsh.lsh_topk(
-            sigs_full, bands_full, qdf, params, k=10, n_queries=1
-        ).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, expect))
-        assert len(got) == 10
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_stream_idx")
-
-
-def test_stream_index_maintenance_checkpoint_resume_no_duplicates(spark, tmp_path):
-    """Exactly-once across restarts: a second run over the same
-    checkpoint must pick up only files added since the first run —
-    doc_ids in the index stay unique."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import MinHashParams
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import minhash
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import tables as T
-
-    params = MinHashParams()
-    docs = T.load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    part1 = docs.filter(F.col("doc_id") % 3 == 1)
-    part2 = docs.filter(F.col("doc_id") % 3 == 2)
-    base = docs.filter(F.col("doc_id") % 3 == 0)
-    sigs_p = str(tmp_path / "sigs_ckpt")
-    src = str(tmp_path / "src_ckpt")
-    ckpt = str(tmp_path / "ckpt_resume")
-    try:
-        sigs_0 = minhash.signatures(base, params)
-        sigs_0.write.mode("overwrite").parquet(sigs_p)
-        T.write_bands_bucketed(
-            lsh.bands_table(sigs_0, params), "t_ckpt_idx", num_buckets=4
-        )
-        part1.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        SQ.stream_index_maintenance(
-            stream, params, sigs_p, "t_ckpt_idx", ckpt
-        ).awaitTermination(120)
-        n_after_first = spark.read.parquet(sigs_p).count()
-        assert n_after_first == base.count() + part1.count()
-
-        # restart over the SAME checkpoint with new files added
-        part2.write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema(docs.schema).parquet(src)
-        SQ.stream_index_maintenance(
-            stream2, params, sigs_p, "t_ckpt_idx", ckpt
-        ).awaitTermination(120)
-        sigs_all = spark.read.parquet(sigs_p)
-        assert sigs_all.count() == docs.count()
-        # exactly-once: no doc signed twice
-        assert sigs_all.select("doc_id").distinct().count() == docs.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_ckpt_idx")
