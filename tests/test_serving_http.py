@@ -492,7 +492,7 @@ M, CODES, CELLS = 8, 16, 8  # the reload tests' IVF-PQ quantizer
 DELETE_IDS = [3, 7, 11]
 
 
-def test_serving_reload_after_store_deletes(spark, tmp_path):
+def test_serving_reload_after_store_deletes(spark, sf_dir, tmp_path):
     """The in-process serving tiers snapshot their stores at load and
     keep answering with a deleted id after a store delete; the
     staleness check must fire (O(stat), no data read) and reload()
@@ -518,8 +518,8 @@ def test_serving_reload_after_store_deletes(spark, tmp_path):
         host, port = server.server_address
         return f"http://{host}:{port}"
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     p = MinHashParams()
     sigs = minhash.signatures(docs, p)
     table = "reload_bands"
@@ -651,7 +651,7 @@ def test_serving_reload_after_store_deletes(spark, tmp_path):
 
 
 def test_reload_failure_is_an_http_error_not_a_dropped_connection(
-    spark, tmp_path
+    spark, sf_dir, tmp_path
 ):
     """A staleness probe that fails hard (store directory gone — e.g.
     caught mid-swap or misconfigured) must surface as an HTTP 500 with
@@ -665,7 +665,7 @@ def test_reload_failure_is_an_http_error_not_a_dropped_connection(
         ServingVectorIndex,
     )
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     books = ann.random_codebooks(DIM, M, CODES, seed=44)
     cents = ann.random_centroids(DIM, CELLS, seed=45)
     path = str(tmp_path / "reload_err_ivfpq")
