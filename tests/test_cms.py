@@ -1,5 +1,5 @@
-"""Count-Min sketch: one-sided error guarantee, unseen-key estimates, and
-sketch-size bound."""
+"""Count-Min sketch: one-sided error guarantee, shard-merge property,
+unseen-key estimates, and sketch-size bound."""
 
 from __future__ import annotations
 
@@ -32,6 +32,22 @@ def test_cms_never_underestimates(spark):
         for r in sketch.groupBy("d").agg(F.sum("cnt").alias("s")).collect()
     }
     assert all(v == len(rows) for v in per_row.values())
+
+
+def test_cms_merge_equals_single_build(spark):
+    """Sketches built on disjoint shards, summed cell by cell, equal the
+    sketch of the whole corpus: a key's bucket depends only on the
+    sketch row and the width, never on which shard the key landed in."""
+    rows = [f"k{i % 17}" for i in range(300)]
+    a, b = _items(spark, rows[:120]), _items(spark, rows[120:])
+    merged = (
+        cms.cms_build(a, d=4, width=32)
+        .unionByName(cms.cms_build(b, d=4, width=32))
+        .groupBy("d", "bucket")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    single = cms.cms_build(_items(spark, rows), d=4, width=32)
+    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, single.collect()))
 
 
 def test_cms_unseen_key_estimates_from_empty_cells(spark):

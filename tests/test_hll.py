@@ -1,7 +1,9 @@
-"""HyperLogLog: duplicate invariance, accuracy band, and register-count
-bound."""
+"""HyperLogLog: duplicate invariance, shard-merge property, accuracy
+band, and register-count bound."""
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions import hll
 
@@ -15,6 +17,17 @@ def test_hll_duplicates_do_not_change_sketch(spark):
     once = hll.hll_registers(_items(spark, uniq), "key", p=6)
     thrice = hll.hll_registers(_items(spark, uniq * 3), "key", p=6)
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, thrice.collect()))
+
+
+def test_hll_merge_equals_single_build(spark):
+    """Registers built on overlapping shards, merged by register-wise
+    max, equal the registers of the whole key set."""
+    keys = [f"k{i}" for i in range(500)]
+    a = hll.hll_registers(_items(spark, keys[:200]), "key", p=6)
+    b = hll.hll_registers(_items(spark, keys[150:]), "key", p=6)  # overlap
+    merged = a.unionByName(b).groupBy("register").agg(F.max("m_j").alias("m_j"))
+    single = hll.hll_registers(_items(spark, keys), "key", p=6)
+    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, single.collect()))
 
 
 def test_hll_estimate_within_error_band(spark):

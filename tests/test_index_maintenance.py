@@ -205,9 +205,10 @@ def test_delete_from_index_removes_ids_from_both_halves(spark, corpus, tmp_path)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_delete_preserves_shard_partitioned_layout(spark, corpus, tmp_path):
-    """On the shard-partitioned serving layout, deletion keeps the
-    partition column on both halves so appends keep working
+def test_delete_preserves_batch_partitioned_layout(spark, corpus, tmp_path):
+    """On a partitioned index layout (the ``shard`` partitioning of a
+    serving export, which later batches append into), deletion keeps
+    the partition column on both halves so appends keep working
     afterwards."""
     docs, sigs = corpus
     table = "t_delete_part_idx"
@@ -235,6 +236,7 @@ def test_delete_preserves_shard_partitioned_layout(spark, corpus, tmp_path):
         T.validate_index(spark, sigs_path, table)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
 
 def test_recover_sigs_swap_after_process_death(spark, corpus, tmp_path):
     """Both death windows of the signature-directory swap heal: tmp

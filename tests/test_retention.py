@@ -1,23 +1,46 @@
-"""Cross-store retention: `delete_docs_everywhere` removes a deletion
-set from every persisted index family all-or-nothing, and a process
-death anywhere in the fan-out recovers to a consistent state (round-9
-verdict item #3)."""
+"""Retention: a deletion set removed from every persisted index family
+through each store's own delete (LSH bands + signatures, IVF-PQ, flat
+PQ, lexical postings) leaves no trace in any store or probe path; a
+process death inside those deletes is healed by each store's own
+``recover_*``; and the serving tiers reload onto the post-delete
+stores without dropping a connection."""
 
 from __future__ import annotations
 
 import json
 import os
 import shutil
+import urllib.error
+import urllib.request
 
 import pytest
 from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark import MinHashParams
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann, lsh, minhash, retrieval
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import retention
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import (
+    ann,
+    lsh,
+    minhash,
+    retrieval,
+    serving_http,
+)
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving import ServingIndex
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
+    ServingVectorIndex,
+)
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import tables as T
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
+    delete_from_index,
+    delete_from_ivfpq_index,
+    delete_from_postings_index,
+    delete_from_pq_index,
     load_table,
     read_postings_corpus_stats,
+    recover_compact_swap,
+    recover_ivfpq_swap,
+    recover_postings_swap,
+    recover_pq_swap,
+    recover_sigs_swap,
     validate_index,
     validate_ivfpq_store,
     validate_postings_store,
@@ -32,83 +55,88 @@ DIM, M, CODES, CELLS = 64, 8, 16, 8
 DELETE_IDS = [3, 7, 11]
 
 
-def _build_all_stores(spark, tmp_path, tag):
-    """One store per family over the sf0.001 fixtures, all holding the
-    same id space."""
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+def _build_all_stores(spark, sf_dir, tmp_path, tag):
+    """One store per family over the same fixture corpus, all holding
+    the same id space."""
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     p = MinHashParams()
     sigs = minhash.signatures(docs, p)
-    bands = lsh.bands_table(sigs, p)
 
     table = f"retention_bands_{tag}"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_bands_bucketed(bands, table, num_buckets=4)
+    write_bands_bucketed(lsh.bands_table(sigs, p), table, num_buckets=4)
     sigs_path = str(tmp_path / f"sigs_{tag}")
     sigs.write.parquet(sigs_path)
 
     books = ann.random_codebooks(DIM, M, CODES, seed=44)
-    cents = ann.random_centroids(DIM, CELLS, seed=45)
     ivfpq_path = str(tmp_path / f"ivfpq_{tag}")
-    write_ivfpq_index(emb, ivfpq_path, cents, books)
+    write_ivfpq_index(emb, ivfpq_path, ann.random_centroids(DIM, CELLS, seed=45), books)
     pq_path = str(tmp_path / f"pq_{tag}")
     write_pq_index(emb, pq_path, books)
 
     postings_path = str(tmp_path / f"postings_{tag}")
     write_postings_index(docs, postings_path, n_doc_shards=2, n_token_buckets=4)
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.hashing import portable_hash64
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.dedup import normalize_text
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        write_content_hashes_bucketed,
-    )
-
-    hash_table = f"retention_hashes_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {hash_table}")
-    write_content_hashes_bucketed(
-        docs.select(
-            "doc_id",
-            portable_hash64(normalize_text(F.col("text"))).alias("content_hash"),
-        ),
-        hash_table,
-        num_buckets=4,
-    )
-
     return dict(
         table=table,
         sigs_path=sigs_path,
         ivfpq_path=ivfpq_path,
         pq_path=pq_path,
         postings_path=postings_path,
-        hash_table=hash_table,
         emb=emb,
         docs=docs,
     )
+
+
+def _drop_tables(spark, st):
+    for suffix in ("", "__compact_tmp", "__compact_old"):
+        spark.sql(f"DROP TABLE IF EXISTS {st['table']}{suffix}")
+
+
+def _delete_everywhere(spark, st, ids=DELETE_IDS):
+    delete_from_index(spark, ids, st["sigs_path"], st["table"])
+    delete_from_ivfpq_index(spark, ids, st["ivfpq_path"])
+    delete_from_pq_index(spark, ids, st["pq_path"])
+    delete_from_postings_index(spark, ids, st["postings_path"])
+
+
+def _count_ids(spark, st):
+    """How many rows of the deletion set each store still holds."""
+    ids = tuple(DELETE_IDS)
+    return {
+        "bands": spark.table(st["table"]).filter(F.col("doc_id").isin(*ids)).count(),
+        "sigs": spark.read.parquet(st["sigs_path"])
+        .filter(F.col("doc_id").isin(*ids))
+        .count(),
+        "ivfpq": spark.read.parquet(st["ivfpq_path"])
+        .filter(F.col("vec_id").isin(*ids))
+        .count(),
+        "pq": spark.read.parquet(st["pq_path"])
+        .filter(F.col("vec_id").isin(*ids))
+        .count(),
+        "postings": spark.read.parquet(st["postings_path"])
+        .filter(F.col("doc_id").isin(*ids))
+        .count(),
+        "doc_lengths": spark.read.parquet(
+            os.path.join(st["postings_path"], "_doc_lengths")
+        )
+        .filter(F.col("doc_id").isin(*ids))
+        .count(),
+    }
+
+
+def _validate_all(spark, st):
+    validate_index(spark, st["sigs_path"], st["table"])
+    validate_ivfpq_store(spark, st["ivfpq_path"])
+    validate_pq_store(spark, st["pq_path"])
+    validate_postings_store(spark, st["postings_path"])
 
 
 def _assert_no_trace(spark, st):
     """Every store's contents AND probe paths are clean of the deleted
     ids, and every store still validates against its own sidecars."""
     ids = tuple(DELETE_IDS)
-    assert spark.table(st["table"]).filter(F.col("doc_id").isin(*ids)).count() == 0
-    assert (
-        spark.read.parquet(st["sigs_path"])
-        .filter(F.col("doc_id").isin(*ids))
-        .count()
-        == 0
-    )
-    for p in (st["ivfpq_path"], st["pq_path"]):
-        assert (
-            spark.read.parquet(p).filter(F.col("vec_id").isin(*ids)).count() == 0
-        )
-    assert (
-        spark.table(st["hash_table"]).filter(F.col("doc_id").isin(*ids)).count()
-        == 0
-    )
-    posts = spark.read.parquet(st["postings_path"])
-    assert posts.filter(F.col("doc_id").isin(*ids)).count() == 0
-    dls = spark.read.parquet(os.path.join(st["postings_path"], "_doc_lengths"))
-    assert dls.filter(F.col("doc_id").isin(*ids)).count() == 0
+    assert set(_count_ids(spark, st).values()) == {0}
 
     # probe paths: a deleted doc's own vector/text cannot reach any
     # result list (it was its own rank-1 hit before the delete)
@@ -125,764 +153,132 @@ def _assert_no_trace(spark, st):
     ).collect()
     assert all(r["doc_id"] not in ids for r in got)
 
-    validate_index(spark, st["sigs_path"], st["table"])
-    validate_ivfpq_store(spark, st["ivfpq_path"])
-    validate_pq_store(spark, st["pq_path"])
-    validate_postings_store(spark, st["postings_path"])
+    _validate_all(spark, st)
 
 
-def test_delete_docs_everywhere_no_trace(spark, tmp_path):
-    st = _build_all_stores(spark, tmp_path, "full")
+def _recover_all_stores(spark, st):
+    return {
+        "bands": recover_compact_swap(spark, st["table"]),
+        "sigs": recover_sigs_swap(st["sigs_path"]),
+        "ivfpq": recover_ivfpq_swap(st["ivfpq_path"]),
+        "pq": recover_pq_swap(st["pq_path"]),
+        "postings": recover_postings_swap(st["postings_path"]),
+    }
+
+
+def test_delete_docs_everywhere_no_trace(spark, sf_dir, tmp_path):
+    st = _build_all_stores(spark, sf_dir, tmp_path, "full")
     n_docs_before, _ = read_postings_corpus_stats(spark, st["postings_path"])
     try:
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_full"),
-            lsh=(st["sigs_path"], st["table"]),
-            vector_stores=[st["ivfpq_path"], st["pq_path"]],
-            postings_stores=[st["postings_path"]],
-            content_hash_tables=[st["hash_table"]],
-        )
+        _delete_everywhere(spark, st)
         _assert_no_trace(spark, st)
         # corpus stats shrink with the corpus: BM25 idf/avgdl reflect
         # the post-delete corpus, not the original
         n_docs_after, _ = read_postings_corpus_stats(spark, st["postings_path"])
         assert n_docs_after == n_docs_before - len(DELETE_IDS)
-        # no manifest left behind; re-running the delete converges
-        assert not os.path.exists(
-            str(tmp_path / "manifest_full" / retention.MANIFEST_NAME)
-        )
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_full"),
-            lsh=(st["sigs_path"], st["table"]),
-            vector_stores=[st["ivfpq_path"], st["pq_path"]],
-            postings_stores=[st["postings_path"]],
-            content_hash_tables=[st["hash_table"]],
-        )
+        # no swap leftovers next to any store
+        for path in (st["sigs_path"], st["ivfpq_path"], st["pq_path"], st["postings_path"]):
+            parent, name = os.path.split(path)
+            assert [n for n in os.listdir(parent) if n.startswith(name + "__")] == []
+        # re-running the deletes converges
+        _delete_everywhere(spark, st)
         _assert_no_trace(spark, st)
+        assert read_postings_corpus_stats(spark, st["postings_path"])[0] == n_docs_after
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
+        _drop_tables(spark, st)
 
 
-def test_sketch_stores_raise_rebuild_only(spark, tmp_path):
-    with pytest.raises(ValueError, match="cannot unlearn"):
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_sketch"),
-            sketch_stores=[str(tmp_path / "cms_store")],
-        )
+def test_recover_retention_rolls_forward_mid_fan(spark, sf_dir, tmp_path, monkeypatch):
+    """Deletes fanned over every store, the process dying inside the
+    swaps of all but the first: each store died AFTER its original was
+    set aside and BEFORE its rewrite was renamed in. Every store's own
+    recover rolls the complete rewrite forward; re-running the LSH
+    delete finishes the signature half its bands swap never reached,
+    and no store keeps serving the deleted ids."""
+    st = _build_all_stores(spark, sf_dir, tmp_path, "crash")
 
+    def dying_swap(live, tmp, old, rename, drop, sync=lambda name: None):
+        rename(live, old)
+        sync(old)
+        raise RuntimeError("simulated process death mid-swap")
 
-def test_recover_retention_rolls_forward_mid_fan(spark, tmp_path, monkeypatch):
-    """Death AFTER the manifest landed and after SOME stores swapped:
-    recovery completes every remaining swap — no store keeps serving
-    the deleted ids."""
-    st = _build_all_stores(spark, tmp_path, "crash")
-    manifest_dir = str(tmp_path / "manifest_crash")
-
-    calls = {"n": 0}
-    real_commit = retention._commit_dir_swap
-
-    def dying_commit(path, suffix="__compact"):
-        # let the sigs dir (first dir store) swap, then die before the
-        # vector/postings stores commit
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("simulated process death mid-fan")
-        real_commit(path, suffix=suffix)
-
-    monkeypatch.setattr(retention, "_commit_dir_swap", dying_commit)
     try:
-        with pytest.raises(RuntimeError, match="mid-fan"):
-            retention.delete_docs_everywhere(
-                spark,
-                DELETE_IDS,
-                manifest_dir,
-                lsh=(st["sigs_path"], st["table"]),
-                vector_stores=[st["ivfpq_path"], st["pq_path"]],
-                postings_stores=[st["postings_path"]],
-                content_hash_tables=[st["hash_table"]],
-            )
-        monkeypatch.setattr(retention, "_commit_dir_swap", real_commit)
-        # manifest survived the death: the transaction must roll forward
-        assert os.path.exists(os.path.join(manifest_dir, retention.MANIFEST_NAME))
-        assert retention.recover_retention(spark, manifest_dir) is True
-        assert not os.path.exists(
-            os.path.join(manifest_dir, retention.MANIFEST_NAME)
-        )
+        delete_from_ivfpq_index(spark, DELETE_IDS, st["ivfpq_path"])
+        monkeypatch.setattr(T, "_swap_in_protocol", dying_swap)
+        with pytest.raises(RuntimeError, match="mid-swap"):
+            delete_from_pq_index(spark, DELETE_IDS, st["pq_path"])
+        with pytest.raises(RuntimeError, match="mid-swap"):
+            delete_from_postings_index(spark, DELETE_IDS, st["postings_path"])
+        with pytest.raises(RuntimeError, match="mid-swap"):
+            delete_from_index(spark, DELETE_IDS, st["sigs_path"], st["table"])
+        monkeypatch.undo()
+
+        # the died-in stores have no live copy until recovery runs
+        assert not os.path.exists(st["pq_path"])
+        assert not os.path.exists(st["postings_path"])
+        assert not spark.catalog.tableExists(st["table"])
+
+        assert _recover_all_stores(spark, st) == {
+            "bands": True, "sigs": False, "ivfpq": False, "pq": True, "postings": True,
+        }
+        left = _count_ids(spark, st)
+        assert left.pop("sigs") > 0  # the delete died before this half
+        assert set(left.values()) == {0}
+        delete_from_index(spark, DELETE_IDS, st["sigs_path"], st["table"])
         _assert_no_trace(spark, st)
         # idempotent: a second recovery pass is a no-op
-        assert retention.recover_retention(spark, manifest_dir) is False
+        assert set(_recover_all_stores(spark, st).values()) == {False}
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
+        _drop_tables(spark, st)
 
 
-def test_retention_audit_log_proves_deletions(spark, tmp_path, monkeypatch):
-    """With audit_log set, exactly one JSON line per cleared manifest
-    lands in the append-only trail — id count, stores touched,
-    caller-clock timestamps — including when startup recovery, not the
-    caller, finishes the commit (via='recover'): the manifest is gone
-    after commit, so this line is the 100 TB operator's only proof the
-    deletion happened."""
-    st = _build_all_stores(spark, tmp_path, "audit")
-    log = str(tmp_path / "audit" / "retention_audit.jsonl")
-    ticks = iter(range(100, 200))
-    clock = lambda: next(ticks)  # noqa: E731 — deterministic fake clock
+def test_crash_before_manifest_rolls_back(spark, sf_dir, tmp_path, monkeypatch):
+    """Death after each delete prepared its rewrite but BEFORE its swap
+    began: no live store changed and every store still serves the
+    not-yet-deleted ids. Recovery keeps the live copy, clears the
+    prepared rewrites, and leaves every store valid."""
+    st = _build_all_stores(spark, sf_dir, tmp_path, "prep")
+    before = _count_ids(spark, st)
+    assert all(n > 0 for n in before.values())
+
+    def dying_swap(live, tmp, old, rename, drop, sync=lambda name: None):
+        raise RuntimeError("simulated death before the swap")
+
     try:
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_audit"),
-            lsh=(st["sigs_path"], st["table"]),
-            content_hash_tables=[st["hash_table"]],
-            audit_log=log,
-            clock=clock,
-        )
-        lines = [json.loads(x) for x in open(log)]
-        assert len(lines) == 1
-        assert lines[0] == {
-            "n_ids": len(DELETE_IDS),
-            "stores": [st["table"], st["sigs_path"], st["hash_table"]],
-            "requested_at": 100,
-            "committed_at": 101,
-            "via": "delete",
-        }
-
-        # a crash after the commit point: the recover path appends the
-        # proof line (via='recover') the moment it clears the manifest
-        calls = {"n": 0}
-        real_commit = retention._commit_dir_swap
-
-        def dying_commit(path, suffix="__compact"):
-            calls["n"] += 1
-            raise RuntimeError("simulated death mid-fan")
-
-        monkeypatch.setattr(retention, "_commit_dir_swap", dying_commit)
-        with pytest.raises(RuntimeError, match="mid-fan"):
-            retention.delete_docs_everywhere(
-                spark,
-                DELETE_IDS,
-                str(tmp_path / "manifest_audit"),
-                lsh=(st["sigs_path"], st["table"]),
-                audit_log=log,
-                clock=clock,
-            )
-        monkeypatch.setattr(retention, "_commit_dir_swap", real_commit)
-        # no audit line for an uncleared manifest — the deletion is not
-        # yet provable because it is not yet fully applied
-        assert len(open(log).readlines()) == 1
-        assert retention.recover_retention(
-            spark, str(tmp_path / "manifest_audit"), clock=clock
-        )
-        lines = [json.loads(x) for x in open(log)]
-        assert len(lines) == 2
-        assert lines[1]["via"] == "recover"
-        assert lines[1]["n_ids"] == len(DELETE_IDS)
-        assert lines[1]["requested_at"] == 102  # captured at request time
-        assert lines[1]["committed_at"] == 103
-        # without audit_log nothing is written (feature is opt-in)
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_audit"),
-            lsh=(st["sigs_path"], st["table"]),
-        )
-        assert len(open(log).readlines()) == 2
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
-
-
-def test_recover_all_one_call_heals_everything(spark, tmp_path, monkeypatch):
-    """recover_all is the SINGLE startup-recovery entrypoint (round-11
-    verdict item #1): a crash mid-retention (manifest committed, some
-    stores swapped) PLUS stranded lifecycle debris in two OTHER
-    families — a flat PQ store dead mid-compact-swap and a content-hash
-    table with a set-aside old — all heal with one call, in the fixed
-    order (retention roll-forward, then per-store recovers, then the
-    vacuum sweep), and every store serves correct answers after.
-    Idempotent: a second call on the healed layout reports all-False
-    and touches nothing."""
-    st = _build_all_stores(spark, tmp_path, "recall")
-    manifest_dir = str(tmp_path / "manifest_recall")
-
-    calls = {"n": 0}
-    real_commit = retention._commit_dir_swap
-
-    def dying_commit(path, suffix="__compact"):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("simulated process death mid-fan")
-        real_commit(path, suffix=suffix)
-
-    monkeypatch.setattr(retention, "_commit_dir_swap", dying_commit)
-    try:
-        with pytest.raises(RuntimeError, match="mid-fan"):
-            retention.delete_docs_everywhere(
-                spark,
-                DELETE_IDS,
-                manifest_dir,
-                lsh=(st["sigs_path"], st["table"]),
-                vector_stores=[st["ivfpq_path"]],
-                postings_stores=[st["postings_path"]],
-            )
-        monkeypatch.setattr(retention, "_commit_dir_swap", real_commit)
-        assert os.path.exists(os.path.join(manifest_dir, retention.MANIFEST_NAME))
-
-        # family 2: flat PQ store dead INSIDE its compact swap window —
-        # complete tmp written, live renamed aside, death before the
-        # tmp->live rename (the state recover_pq_swap exists to heal)
-        n_pq = spark.read.parquet(st["pq_path"]).count()
-        shutil.copytree(st["pq_path"], st["pq_path"] + "__compact_tmp")
-        os.rename(st["pq_path"], st["pq_path"] + "__compact_old")
-        # family 3: content-hash table healthy but its compact's
-        # set-aside old survived a death in the final cleanup step
-        spark.table(st["hash_table"]).write.format("parquet").saveAsTable(
-            f"{st['hash_table']}__compact_old"
-        )
-
-        report = retention.recover_all(
-            spark,
-            manifest_dir,
-            lsh=(st["sigs_path"], st["table"]),
-            vector_stores=[st["ivfpq_path"], st["pq_path"]],
-            postings_stores=[st["postings_path"]],
-            content_hash_tables=[st["hash_table"]],
-            vacuum=True,
-        )
-        # the committed retention transaction rolled forward...
-        assert report["retention"] == {manifest_dir: True}
-        assert not os.path.exists(
-            os.path.join(manifest_dir, retention.MANIFEST_NAME)
-        )
-        # ...the two lifecycle-debris families acted, the rest no-op'd
-        assert report["stores"][st["pq_path"]] is True
-        assert report["stores"][st["hash_table"]] is True
-        assert report["stores"][st["ivfpq_path"]] is False
-        assert report["stores"][st["postings_path"]] is False
-        # everything the recovers consumed left no debris for the sweep
-        assert report["vacuumed"] == []
-
-        # the retention-covered stores serve post-delete answers
-        ids = tuple(DELETE_IDS)
-        for probe in (
-            spark.table(st["table"]).filter(F.col("doc_id").isin(*ids)),
-            spark.read.parquet(st["sigs_path"]).filter(
-                F.col("doc_id").isin(*ids)
-            ),
-            spark.read.parquet(st["ivfpq_path"]).filter(
-                F.col("vec_id").isin(*ids)
-            ),
-            spark.read.parquet(st["postings_path"]).filter(
-                F.col("doc_id").isin(*ids)
-            ),
+        monkeypatch.setattr(T, "_swap_in_protocol", dying_swap)
+        for delete in (
+            lambda: delete_from_index(spark, DELETE_IDS, st["sigs_path"], st["table"]),
+            lambda: delete_from_ivfpq_index(spark, DELETE_IDS, st["ivfpq_path"]),
+            lambda: delete_from_pq_index(spark, DELETE_IDS, st["pq_path"]),
+            lambda: delete_from_postings_index(spark, DELETE_IDS, st["postings_path"]),
         ):
-            assert probe.count() == 0
-        # the healed PQ store is byte-complete and probe-able again
-        assert spark.read.parquet(st["pq_path"]).count() == n_pq
-        q_emb = st["emb"].filter(F.col("vec_id") == 0).first()["embedding"]
-        assert ann.pq_topk_store(
-            spark, st["pq_path"], list(q_emb), k=3
-        ).count() == 3
-        assert not spark.catalog.tableExists(f"{st['hash_table']}__compact_old")
-        validate_index(spark, st["sigs_path"], st["table"])
-        validate_ivfpq_store(spark, st["ivfpq_path"])
-        validate_pq_store(spark, st["pq_path"])
-        validate_postings_store(spark, st["postings_path"])
+            with pytest.raises(RuntimeError, match="before the swap"):
+                delete()
+        monkeypatch.undo()
 
-        # idempotent on a healthy layout: all-False, nothing swept
-        report = retention.recover_all(
-            spark,
-            manifest_dir,
-            lsh=(st["sigs_path"], st["table"]),
-            vector_stores=[st["ivfpq_path"], st["pq_path"]],
-            postings_stores=[st["postings_path"]],
-            content_hash_tables=[st["hash_table"]],
-            vacuum=True,
-        )
-        assert report["retention"] == {manifest_dir: False}
-        assert set(report["stores"].values()) == {False}
-        assert report["vacuumed"] == []
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}__compact_old")
-
-
-def test_crash_before_manifest_rolls_back(spark, tmp_path, monkeypatch):
-    """Death during PREPARE (before the manifest): no live store
-    changed, recovery reports nothing to do, and the stores still
-    serve the not-yet-deleted ids."""
-    st = _build_all_stores(spark, tmp_path, "prep")
-    manifest_dir = str(tmp_path / "manifest_prep")
-
-    def dying_prepare(spark_, path, transform, suffix="__compact"):
-        raise RuntimeError("simulated death during prepare")
-
-    monkeypatch.setattr(retention, "_prepare_postings_rewrite", dying_prepare)
-    try:
-        with pytest.raises(RuntimeError, match="during prepare"):
-            retention.delete_docs_everywhere(
-                spark,
-                DELETE_IDS,
-                manifest_dir,
-                lsh=(st["sigs_path"], st["table"]),
-                vector_stores=[st["ivfpq_path"], st["pq_path"]],
-                postings_stores=[st["postings_path"]],
-            )
-        assert retention.recover_retention(spark, manifest_dir) is False
         # every live store is untouched — the ids are all still present
-        assert (
-            spark.table(st["table"])
-            .filter(F.col("doc_id").isin(*DELETE_IDS))
-            .count()
-            > 0
-        )
-        assert (
-            spark.read.parquet(st["ivfpq_path"])
-            .filter(F.col("vec_id").isin(*DELETE_IDS))
-            .count()
-            > 0
-        )
-        assert (
-            spark.read.parquet(st["postings_path"])
-            .filter(F.col("doc_id").isin(*DELETE_IDS))
-            .count()
-            > 0
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}__retention_tmp")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}__retention_tmp")
-
-
-def test_recover_retention_tolerates_torn_manifest(spark, tmp_path):
-    """A power loss can persist the manifest rename without its data
-    (zero-length file): recovery must treat it as not-committed —
-    clear the husk, return False — rather than crash on json.load."""
-    manifest_dir = tmp_path / "manifest_torn"
-    manifest_dir.mkdir()
-    torn = manifest_dir / retention.MANIFEST_NAME
-    torn.write_bytes(b"")
-    assert retention.recover_retention(spark, str(manifest_dir)) is False
-    assert not torn.exists()
-
-
-# ---------------------------------------------------------------------------
-# round 10: raw-vector + sharded-export coverage, retention-exclusive
-# suffix vs lifecycle recovers, stream-maintained stores, vacuum
-# ---------------------------------------------------------------------------
-
-
-def _build_raw_vector_stores(spark, tmp_path, tag):
-    """The vec_id-addressed stores that hold the document's embedding
-    VERBATIM (not a code): hyperplane-bucketed ANN, IVF cell, QED bin —
-    plus the shard-partitioned serving exports of the LSH index."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import qed
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        write_bands_sharded,
-        write_embeddings_partitioned,
-        write_ivf_partitioned,
-        write_qed_partitioned,
-        write_sigs_sharded,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    ann_p = str(tmp_path / f"ann_{tag}")
-    write_embeddings_partitioned(emb, ann_p, dim=DIM, n_planes=4)
-    ivf_p = str(tmp_path / f"ivf_{tag}")
-    cents = ann.random_centroids(DIM, CELLS, seed=45)
-    write_ivf_partitioned(emb, ivf_p, cents)
-    edges = qed.histogram_edges(emb, n_bins=64).collect()
-    qed_p = str(tmp_path / f"qed_{tag}")
-    write_qed_partitioned(emb, qed_p, edges, n_part_bins=8)
-
-    p = MinHashParams()
-    sigs = minhash.signatures(docs, p)
-    bands = lsh.bands_table(sigs, p)
-    sh_table = f"retention_sh_bands_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {sh_table}")
-    write_bands_sharded(bands, sh_table, n_shards=2, num_buckets=4)
-    sh_sigs = str(tmp_path / f"sh_sigs_{tag}")
-    write_sigs_sharded(sigs, sh_sigs, n_shards=2)
-    return dict(
-        ann_p=ann_p, ivf_p=ivf_p, qed_p=qed_p, edges=edges,
-        sh_table=sh_table, sh_sigs=sh_sigs, emb=emb,
-    )
-
-
-def test_delete_covers_raw_vector_and_sharded_stores(spark, tmp_path):
-    """Round-10 coverage gap: the ANN/IVF/QED raw-vector stores and the
-    sharded serving exports hold the forgotten doc's vector/signature
-    verbatim — the retention fan-out must clear them too, preserving
-    each store's partition pruning layout."""
-    st = _build_raw_vector_stores(spark, tmp_path, "raw")
-    ids = tuple(DELETE_IDS)
-
-    def layout(path, prefix):
-        return sorted(
-            n for n in os.listdir(path) if n.startswith(prefix + "=")
-        )
-
-    before = {
-        "ann": layout(st["ann_p"], "bucket"),
-        "ivf": layout(st["ivf_p"], "cell"),
-        "qed": layout(st["qed_p"], "qed_bin"),
-        "sigs": layout(st["sh_sigs"], "shard"),
-    }
-    try:
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_raw"),
-            lsh_sharded=[(st["sh_sigs"], st["sh_table"])],
-            vector_stores=[st["ann_p"], st["ivf_p"], st["qed_p"]],
-        )
-        for key, path in (("ann", "ann_p"), ("ivf", "ivf_p"), ("qed", "qed_p")):
-            assert (
-                spark.read.parquet(st[path])
-                .filter(F.col("vec_id").isin(*ids))
-                .count()
-                == 0
-            ), key
-        assert (
-            spark.read.parquet(st["sh_sigs"])
-            .filter(F.col("doc_id").isin(*ids))
-            .count()
-            == 0
-        )
-        assert (
-            spark.table(st["sh_table"])
-            .filter(F.col("doc_id").isin(*ids))
-            .count()
-            == 0
-        )
-        # partition layout preserved exactly (pruning survives retention);
-        # a bucket/cell/bin emptied by the delete may drop its directory,
-        # so assert the surviving layout is a subset holding all rows
-        after = {
-            "ann": layout(st["ann_p"], "bucket"),
-            "ivf": layout(st["ivf_p"], "cell"),
-            "qed": layout(st["qed_p"], "qed_bin"),
-            "sigs": layout(st["sh_sigs"], "shard"),
+        assert _count_ids(spark, st) == before
+        # the prepared rewrites of the directory stores are what the
+        # recovers clear; the live copies win
+        assert _recover_all_stores(spark, st) == {
+            "bands": False, "sigs": False, "ivfpq": True, "pq": True, "postings": True,
         }
-        for k in before:
-            assert set(after[k]) <= set(before[k]) and after[k], k
-        # the shard column still partitions the serving export
-        assert "shard" in [
-            c.name
-            for c in spark.catalog.listColumns(st["sh_table"])
-            if c.isPartition
-        ]
-        # probe paths: the deleted doc (its own rank-1 hit before the
-        # delete) cannot reach any result list
-        q = [
-            float(v)
-            for v in st["emb"]
-            .filter(F.col("vec_id") == DELETE_IDS[0])
-            .first()["embedding"]
-        ]
-        got = ann.ann_lsh_topk_store(
-            spark, st["ann_p"], q, k=5, n_probe=16
-        ).collect()
-        assert got and all(r["vec_id"] not in ids for r in got)
-        got = ann.ivf_topk_store(
-            spark, st["ivf_p"], q, k=5, n_probe=CELLS
-        ).collect()
-        assert got and all(r["vec_id"] not in ids for r in got)
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import qed as qed_op
-
-        got = qed_op.qed_topk_store(
-            spark, st["qed_p"], q, st["edges"], k=5, n_bins=64, p_fraction=0.1
-        ).collect()
-        assert all(r["vec_id"] not in ids for r in got)
+        for path in (st["ivfpq_path"], st["pq_path"], st["postings_path"]):
+            assert not os.path.exists(path + "__compact_tmp")
+        assert _count_ids(spark, st) == before
+        _validate_all(spark, st)
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['sh_table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['sh_table']}__retention_tmp")
+        _drop_tables(spark, st)
 
 
-def test_lifecycle_recovers_cannot_eat_retention_tmps(spark, tmp_path, monkeypatch):
-    """THE round-9 ADVICE hazard: after a mid-fan death, a startup that
-    runs the per-store lifecycle recovers BEFORE recover_retention must
-    not clear the manifest-listed prepared copies — the __retention
-    suffix is exclusive, so the lifecycle recovers see healthy stores
-    with no __compact/__delete debris and touch nothing."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        recover_compact_swap,
-        recover_ivfpq_swap,
-        recover_postings_swap,
-        recover_sigs_swap,
-    )
-
-    st = _build_all_stores(spark, tmp_path, "interleave")
-    manifest_dir = str(tmp_path / "manifest_interleave")
-    real_commit = retention._commit_dir_swap
-
-    def dying_commit(path, suffix="__compact"):
-        raise RuntimeError("simulated process death mid-fan")
-
-    monkeypatch.setattr(retention, "_commit_dir_swap", dying_commit)
-    try:
-        with pytest.raises(RuntimeError, match="mid-fan"):
-            retention.delete_docs_everywhere(
-                spark,
-                DELETE_IDS,
-                manifest_dir,
-                lsh=(st["sigs_path"], st["table"]),
-                vector_stores=[st["ivfpq_path"], st["pq_path"]],
-                postings_stores=[st["postings_path"]],
-                content_hash_tables=[st["hash_table"]],
-            )
-        monkeypatch.setattr(retention, "_commit_dir_swap", real_commit)
-        # a fresh delete is refused while the committed manifest waits
-        with pytest.raises(ValueError, match="manifest already exists"):
-            retention.delete_docs_everywhere(
-                spark, DELETE_IDS, manifest_dir, lsh=(st["sigs_path"], st["table"])
-            )
-        # interleaved startup: every per-store lifecycle recover runs
-        # FIRST (healthy stores -> no-ops) and must leave the prepared
-        # retention copies alone
-        recover_sigs_swap(st["sigs_path"])
-        recover_ivfpq_swap(st["ivfpq_path"])
-        recover_ivfpq_swap(st["pq_path"])
-        recover_postings_swap(st["postings_path"])
-        assert os.path.exists(st["sigs_path"] + "__retention_tmp")
-        assert os.path.exists(st["ivfpq_path"] + "__retention_tmp")
-        assert os.path.exists(st["pq_path"] + "__retention_tmp")
-        assert os.path.exists(st["postings_path"] + "__retention_tmp")
-        # the roll-forward then completes from those surviving copies
-        assert retention.recover_retention(spark, manifest_dir) is True
-        _assert_no_trace(spark, st)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
-
-
-def test_recover_retention_tolerates_scalar_husk(spark, tmp_path):
-    """A husk that PARSES but as the wrong JSON shape (scalar / list /
-    stores-not-a-list) is the same torn-commit-point case as a
-    zero-length file: clear it and report not-committed."""
-    for i, payload in enumerate((b"42", b"[1, 2]", b'{"stores": 7}')):
-        d = tmp_path / f"manifest_husk_{i}"
-        d.mkdir()
-        husk = d / retention.MANIFEST_NAME
-        husk.write_bytes(payload)
-        assert retention.recover_retention(spark, str(d)) is False
-        assert not husk.exists()
-
-
-def test_retention_over_stream_maintained_stores(spark, tmp_path):
-    """Deleting from stream-maintained (ingest_batch-partitioned)
-    stores preserves the epoch layout and the absorbed-epoch watermark,
-    and the maintenance loop resumes cleanly after the delete."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann as ann_op
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        BASE_INGEST_BATCH,
-        append_to_index_exactly_once,
-        compact_pq_index,
-        load_table as _lt,
-        read_absorbed_watermark,
-        validate_pq_store,
-        write_bands_bucketed,
-        write_codes_stream_base,
-        write_sigs_batch_partitioned,
-    )
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import codes as SC
-
-    docs = _lt(spark, "/root/testdata/sf0.001", "documents")
-    emb = _lt(spark, "/root/testdata/sf0.001", "embeddings")
-    p = MinHashParams()
-
-    # --- LSH stream store: base + two exactly-once epochs -------------
-    base = docs.filter(F.col("doc_id") < 400)
-    ep0 = docs.filter((F.col("doc_id") >= 400) & (F.col("doc_id") < 450))
-    ep1 = docs.filter((F.col("doc_id") >= 450) & (F.col("doc_id") < 480))
-    sigs_p = str(tmp_path / "stream_sigs")
-    table = "retention_stream_bands"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    base_sigs = minhash.signatures(base, p)
-    write_sigs_batch_partitioned(base_sigs, sigs_p)
-    write_bands_bucketed(
-        lsh.bands_table(base_sigs, p), table, num_buckets=4,
-        batch_partitioned=True,
-    )
-    append_to_index_exactly_once(ep0, 0, p, sigs_p, table)
-    append_to_index_exactly_once(ep1, 1, p, sigs_p, table)
-
-    # --- flat-PQ stream store: base + one real stream epoch, compacted
-    books = ann_op.random_codebooks(DIM, M, CODES, seed=44)
-    pq_p = str(tmp_path / "stream_pq")
-    write_codes_stream_base(emb.filter(F.col("vec_id") % 2 == 0), pq_p, books)
-    src = str(tmp_path / "stream_src")
-    emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    ckpt = str(tmp_path / "stream_ckpt")
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    SC.stream_codes_ingest(stream, pq_p, ckpt).awaitTermination(180)
-    compact_pq_index(spark, pq_p)
-    assert read_absorbed_watermark(pq_p) == 0
-
-    ids = tuple(DELETE_IDS)
-    try:
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_stream"),
-            lsh=(sigs_p, table),
-            vector_stores=[pq_p],
-        )
-        # no trace, epoch layout preserved, watermark intact
-        sigs_after = spark.read.parquet(sigs_p)
-        assert sigs_after.filter(F.col("doc_id").isin(*ids)).count() == 0
-        assert spark.table(table).filter(F.col("doc_id").isin(*ids)).count() == 0
-        batches = {
-            int(n.split("=")[1])
-            for n in os.listdir(sigs_p)
-            if n.startswith("ingest_batch=")
-        }
-        assert batches == {BASE_INGEST_BATCH, 0, 1}
-        assert set(
-            r["ingest_batch"]
-            for r in spark.table(table).select("ingest_batch").distinct().collect()
-        ) == {BASE_INGEST_BATCH, 0, 1}
-        assert spark.read.parquet(pq_p).filter(
-            F.col("vec_id").isin(*ids)
-        ).count() == 0
-        assert read_absorbed_watermark(pq_p) == 0
-        validate_pq_store(spark, pq_p)
-
-        # post-delete stream resume: the next epoch lands normally and
-        # the deleted ids stay gone
-        ep2 = docs.filter((F.col("doc_id") >= 480) & (F.col("doc_id") < 490))
-        append_to_index_exactly_once(ep2, 2, p, sigs_p, table)
-        sigs_after = spark.read.parquet(sigs_p)
-        assert (
-            sigs_after.filter(F.col("ingest_batch") == 2).count()
-            == ep2.count()
-        )
-        assert sigs_after.filter(F.col("doc_id").isin(*ids)).count() == 0
-        validate_index(spark, sigs_p, table)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__retention_tmp")
-
-
-def test_vacuum_stores_clears_debris_and_respects_manifest(spark, tmp_path):
-    """vacuum_stores sweeps crash debris (__compact/__delete/__retention
-    siblings) next to healthy stores across families, refuses a store
-    with no live copy, and skips stores a live retention manifest still
-    references (their tmps are roll-forward inputs). Round-11 (ADVICE):
-    __retention siblings are swept ONLY when the caller supplied
-    manifest_paths (its assertion that the list is complete) or the
-    explicit allow flag — a default-args vacuum must never eat a
-    committed transaction's roll-forward inputs it was never told
-    about."""
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    books = ann.random_codebooks(DIM, M, CODES, seed=44)
-    pq_p = str(tmp_path / "vac_pq")
-    write_pq_index(emb, pq_p, books)
-    p = MinHashParams()
-    sigs = minhash.signatures(docs, p)
-    table = "retention_vac_bands"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_bands_bucketed(lsh.bands_table(sigs, p), table, num_buckets=4)
-
-    # fabricate crash debris: mid-compact (tmp) and mid-retention (old)
-    os.makedirs(pq_p + "__compact_tmp")
-    os.makedirs(pq_p + "__retention_old")
-    spark.table(table).write.format("parquet").saveAsTable(
-        f"{table}__compact_old"
-    )
-    try:
-        # default call (no manifest_paths): lifecycle debris is swept,
-        # but the __retention sibling is REFUSED — without the full
-        # manifest list it cannot be proven uncommitted debris
-        removed = retention.vacuum_stores(
-            spark, dir_stores=[pq_p], tables=[table]
-        )
-        assert pq_p + "__compact_tmp" in removed
-        assert pq_p + "__retention_old" not in removed
-        assert f"{table}__compact_old" in removed
-        assert not os.path.exists(pq_p + "__compact_tmp")
-        assert os.path.exists(pq_p + "__retention_old")
-        assert not spark.catalog.tableExists(f"{table}__compact_old")
-        # manifest_paths=[] IS the completeness assertion ("I have no
-        # manifest dirs"): now the unlisted __retention sibling is
-        # provably debris and gets swept
-        removed = retention.vacuum_stores(
-            spark, dir_stores=[pq_p], manifest_paths=[]
-        )
-        assert pq_p + "__retention_old" in removed
-        assert not os.path.exists(pq_p + "__retention_old")
-        # the explicit waiver flag works the same way
-        os.makedirs(pq_p + "__retention_old")
-        removed = retention.vacuum_stores(
-            spark, dir_stores=[pq_p], allow_unmanifested_retention=True
-        )
-        assert pq_p + "__retention_old" in removed
-        # the stores still serve
-        q = [float(v) for v in emb.first()["embedding"]]
-        assert ann.pq_topk_store(spark, pq_p, q, k=3).count() == 3
-        assert spark.table(table).count() > 0
-
-        # a live manifest protects its stores: the listed tmp survives
-        os.makedirs(pq_p + "__retention_tmp")
-        mdir = tmp_path / "vac_manifest"
-        mdir.mkdir()
-        (mdir / retention.MANIFEST_NAME).write_text(
-            json.dumps(
-                {"stores": [{"medium": "dir", "path": pq_p,
-                             "suffix": "__retention", "markers": ["_SUCCESS"]}]}
-            )
-        )
-        removed = retention.vacuum_stores(
-            spark, dir_stores=[pq_p], manifest_paths=[str(mdir)]
-        )
-        assert removed == []
-        assert os.path.exists(pq_p + "__retention_tmp")
-        shutil.rmtree(pq_p + "__retention_tmp")
-
-        # no live copy -> refuse: that is a recovery, not a cleanup
-        with pytest.raises(ValueError, match="no live copy"):
-            retention.vacuum_stores(
-                spark, dir_stores=[str(tmp_path / "vac_missing")]
-            )
-        with pytest.raises(ValueError, match="does not exist"):
-            retention.vacuum_stores(spark, tables=["retention_vac_nope"])
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__compact_old")
-
-
-def test_serving_reload_after_retention(spark, tmp_path):
+def test_serving_reload_after_retention(spark, sf_dir, tmp_path):
     """The in-process serving tiers snapshot their stores at load and
-    keep answering with a forgotten id after a retention delete; the
+    keep answering with a deleted id after a store delete; the
     staleness check must fire (O(stat), no data read) and reload()
     must re-snapshot WITHOUT dropping the sockets — after the swap no
     tier returns the deleted ids."""
-    import urllib.request
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import serving_http
     from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.retrieval import (
         ServingLexicalIndex,
-    )
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving import ServingIndex
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
-        ServingVectorIndex,
     )
 
     def _post(url, path, body):
@@ -898,7 +294,7 @@ def test_serving_reload_after_retention(spark, tmp_path):
         host, port = server.server_address
         return f"http://{host}:{port}"
 
-    st = _build_all_stores(spark, tmp_path, "reload")
+    st = _build_all_stores(spark, sf_dir, tmp_path, "reload")
     p = MinHashParams()
     ids = tuple(DELETE_IDS)
     # pre-delete probes, captured while the doc still exists
@@ -946,24 +342,17 @@ def test_serving_reload_after_retention(spark, tmp_path):
         body = _post(_url(lex_server), "/query", {"query": q_text, "k": 500})
         assert any(c["id"] == DELETE_IDS[0] for c in body["candidates"])
 
-        retention.delete_docs_everywhere(
-            spark,
-            DELETE_IDS,
-            str(tmp_path / "manifest_reload"),
-            lsh=(st["sigs_path"], st["table"]),
-            vector_stores=[st["ivfpq_path"]],
-            postings_stores=[st["postings_path"]],
-        )
+        _delete_everywhere(spark, st)
         # the snapshots are now stale — and, until reloaded, STILL
-        # serve the forgotten id (the gap this check exists to close)
+        # serve the deleted id (the gap this check exists to close)
         assert lsh_idx.is_stale(spark)
         assert vec_idx.is_stale(spark)
         assert lex_idx.is_stale(spark)
         body = _post(_url(router), "/query", {"vector": qsig, "k": 5})
         assert body["candidates"][0]["id"] == DELETE_IDS[0]
-        # round-11: the router's /health surfaces the pending reload —
-        # per-replica stale=true, liveness still ok (a stale replica
-        # serves a consistent pre-delete snapshot, not an outage)
+        # the router's /health surfaces the pending reload — per-replica
+        # stale=true, liveness still ok (a stale replica serves a
+        # consistent pre-delete snapshot, not an outage)
         with urllib.request.urlopen(_url(router) + "/health") as resp:
             assert resp.status == 200
             h = json.loads(resp.read())
@@ -1022,63 +411,17 @@ def test_serving_reload_after_retention(spark, tmp_path):
         for server in (router, vec_server, lex_server, replica):
             server.shutdown()
             server.server_close()
-        spark.sql(f"DROP TABLE IF EXISTS {st['table']}")
-        spark.sql(f"DROP TABLE IF EXISTS {st['hash_table']}")
-
-
-def test_vacuum_validates_everything_before_removing_anything(spark, tmp_path):
-    """A missing live copy anywhere in the argument list must abort
-    the WHOLE sweep before any debris is removed — a partial vacuum
-    whose removed names are lost with the exception would leave the
-    operator unable to tell what was deleted."""
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    books = ann.random_codebooks(DIM, M, CODES, seed=44)
-    pq_p = str(tmp_path / "vac2_pq")
-    write_pq_index(emb, pq_p, books)
-    os.makedirs(pq_p + "__compact_tmp")
-    with pytest.raises(ValueError, match="no live copy"):
-        retention.vacuum_stores(
-            spark, dir_stores=[pq_p, str(tmp_path / "vac2_missing")]
-        )
-    # the healthy store's debris was NOT touched: all-or-nothing
-    assert os.path.exists(pq_p + "__compact_tmp")
-    with pytest.raises(ValueError, match="does not exist"):
-        retention.vacuum_stores(
-            spark, dir_stores=[pq_p], tables=["vac2_missing_table"]
-        )
-    assert os.path.exists(pq_p + "__compact_tmp")
-
-
-def test_recover_retention_tolerates_non_dict_store_entries(spark, tmp_path):
-    """A torn manifest whose 'stores' parses as a list of NON-dicts is
-    the same husk class as a scalar: cleared, reported not-committed —
-    never a TypeError that wedges startup recovery with the manifest
-    left in place."""
-    d = tmp_path / "manifest_husk_items"
-    d.mkdir()
-    husk = d / retention.MANIFEST_NAME
-    husk.write_text('{"stores": [7, "x"]}')
-    assert retention.recover_retention(spark, str(d)) is False
-    assert not husk.exists()
+        _drop_tables(spark, st)
 
 
 def test_reload_failure_is_an_http_error_not_a_dropped_connection(
-    spark, tmp_path
+    spark, sf_dir, tmp_path
 ):
     """A staleness probe that fails hard (store directory gone — e.g.
     caught mid-swap or misconfigured) must surface as an HTTP 500 with
     the error text, keep the old snapshot serving, and never drop the
     client connection."""
-    import urllib.error
-    import urllib.request
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import serving_http
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
-        ServingVectorIndex,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     books = ann.random_codebooks(DIM, M, CODES, seed=44)
     cents = ann.random_centroids(DIM, CELLS, seed=45)
     path = str(tmp_path / "reload_err_ivfpq")

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import gc
 import json
-import shutil
 import urllib.error
 import urllib.request
 import weakref
@@ -25,13 +24,8 @@ from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators im
 )
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving import ServingIndex
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-    delete_from_index,
-    delete_from_ivfpq_index,
-    delete_from_postings_index,
     load_table,
-    write_bands_bucketed,
     write_ivfpq_index,
-    write_postings_index,
 )
 
 PARAMS = MinHashParams()
@@ -486,215 +480,3 @@ def test_every_error_reply_is_pinned(endpoint, spark, sf_dir, tmp_path):
         for server in (vec, lex, router, hybrid):
             server.shutdown()
             server.server_close()
-
-
-M, CODES, CELLS = 8, 16, 8  # the reload tests' IVF-PQ quantizer
-DELETE_IDS = [3, 7, 11]
-
-
-def test_serving_reload_after_store_deletes(spark, sf_dir, tmp_path):
-    """The in-process serving tiers snapshot their stores at load and
-    keep answering with a deleted id after a store delete; the
-    staleness check must fire (O(stat), no data read) and reload()
-    must re-snapshot WITHOUT dropping the sockets — after the swap no
-    tier returns the deleted ids."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.retrieval import (
-        ServingLexicalIndex,
-    )
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
-        ServingVectorIndex,
-    )
-
-    def _post(url, path, body):
-        req = urllib.request.Request(
-            url + path,
-            data=json.dumps(body).encode(),
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req) as resp:
-            return json.loads(resp.read())
-
-    def _url(server):
-        host, port = server.server_address
-        return f"http://{host}:{port}"
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    p = MinHashParams()
-    sigs = minhash.signatures(docs, p)
-    table = "reload_bands"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_bands_bucketed(lsh.bands_table(sigs, p), table, num_buckets=4)
-    sigs_path = str(tmp_path / "sigs_reload")
-    sigs.write.parquet(sigs_path)
-    ivfpq_path = str(tmp_path / "ivfpq_reload")
-    write_ivfpq_index(
-        emb,
-        ivfpq_path,
-        ann.random_centroids(DIM, CELLS, seed=45),
-        ann.random_codebooks(DIM, M, CODES, seed=44),
-    )
-    postings_path = str(tmp_path / "postings_reload")
-    write_postings_index(docs, postings_path, n_doc_shards=2, n_token_buckets=4)
-
-    ids = tuple(DELETE_IDS)
-    # pre-delete probes, captured while the doc still exists
-    qsig = [
-        int(v)
-        for v in spark.read.parquet(sigs_path)
-        .filter(F.col("doc_id") == DELETE_IDS[0])
-        .first()["sig"]
-    ]
-    q_emb = [
-        float(v)
-        for v in emb.filter(F.col("vec_id") == DELETE_IDS[0]).first()["embedding"]
-    ]
-    q_text = " ".join(
-        docs.filter(F.col("doc_id") == DELETE_IDS[0]).first()["text"].split()[:8]
-    )
-
-    lsh_idx = ServingIndex.from_paths(spark, sigs_path, table, p)
-    vec_idx = ServingVectorIndex.from_store(spark, ivfpq_path, embeddings=emb)
-    lex_idx = ServingLexicalIndex.from_store(spark, postings_path)
-    replica, rt1 = serving_http.start_server(lsh_idx, spark=spark)
-    router, rt2 = serving_http.start_router_server("lsh", [_url(replica)])
-    vec_server, vt = serving_http.start_vector_server(vec_idx, spark=spark)
-    lex_server, lt = serving_http.start_lexical_server(lex_idx, spark=spark)
-    try:
-        assert not lsh_idx.is_stale(spark)
-        assert not vec_idx.is_stale(spark)
-        assert not lex_idx.is_stale(spark)
-        # the doc is its own rank-1 hit on every tier before the delete
-        body = _post(_url(router), "/query", {"vector": qsig, "k": 5})
-        assert body["candidates"][0]["id"] == DELETE_IDS[0]
-        body = _post(_url(vec_server), "/query", {"vector": q_emb, "k": 5,
-                                                  "n_probe": CELLS,
-                                                  "shortlist": 20})
-        assert body["candidates"][0]["id"] == DELETE_IDS[0]
-        # shared synthetic vocab -> membership, not rank: ask for the
-        # whole corpus and assert the doc is retrievable at all
-        body = _post(_url(lex_server), "/query", {"query": q_text, "k": 500})
-        assert any(c["id"] == DELETE_IDS[0] for c in body["candidates"])
-
-        delete_from_index(spark, DELETE_IDS, sigs_path, table)
-        delete_from_ivfpq_index(spark, DELETE_IDS, ivfpq_path)
-        delete_from_postings_index(spark, DELETE_IDS, postings_path)
-        # the snapshots are now stale — and, until reloaded, STILL
-        # serve the deleted id (the gap this check exists to close)
-        assert lsh_idx.is_stale(spark)
-        assert vec_idx.is_stale(spark)
-        assert lex_idx.is_stale(spark)
-        body = _post(_url(router), "/query", {"vector": qsig, "k": 5})
-        assert body["candidates"][0]["id"] == DELETE_IDS[0]
-        # the router's /health surfaces the pending reload — per-replica
-        # stale=true, liveness still ok (a stale replica serves a
-        # consistent pre-delete snapshot, not an outage)
-        with urllib.request.urlopen(_url(router) + "/health") as resp:
-            assert resp.status == 200
-            h = json.loads(resp.read())
-        assert h["status"] == "ok"
-        assert h["stale"] == {_url(replica): True}
-        with urllib.request.urlopen(_url(vec_server) + "/health") as resp:
-            h = json.loads(resp.read())
-        assert h["stale"] == {"vector": True}
-
-        # hot-swap every tier without dropping a socket — over the
-        # wire: the router fans POST /reload to its replicas, the
-        # other tiers take it directly; each reload is staleness-
-        # checked, so the response reports was_stale=true
-        body = _post(_url(router), "/reload", {})
-        assert body["status"] == "ok"
-        (rep_report,) = body["replicas"].values()
-        assert rep_report["indexes"]["lsh"] == {
-            "tracked": True, "was_stale": True, "reloaded": True,
-        }
-        body = _post(_url(vec_server), "/reload", {})
-        assert body["indexes"]["vector"]["reloaded"] is True
-        body = _post(_url(lex_server), "/reload", {})
-        assert body["indexes"]["lexical"]["reloaded"] is True
-        # a second reload is a no-op (fresh snapshots, not forced)
-        body = _post(_url(vec_server), "/reload", {})
-        assert body["indexes"]["vector"] == {
-            "tracked": True, "was_stale": False, "reloaded": False,
-        }
-
-        body = _post(_url(router), "/query", {"vector": qsig, "k": 5})
-        assert body["candidates"] and all(
-            c["id"] not in ids for c in body["candidates"]
-        )
-        body = _post(_url(vec_server), "/query", {"vector": q_emb, "k": 5,
-                                                  "n_probe": CELLS,
-                                                  "shortlist": 20})
-        assert body["candidates"] and all(
-            c["id"] not in ids for c in body["candidates"]
-        )
-        body = _post(_url(lex_server), "/query", {"query": q_text, "k": 500})
-        assert body["candidates"] and all(
-            c["id"] not in ids for c in body["candidates"]
-        )
-        # the reloaded snapshots are fresh
-        assert not replica.service.index.is_stale(spark)
-        assert not vec_server.service.index.is_stale(spark)
-        assert not lex_server.service.index.is_stale(spark)
-        # ...and the router's health sweep reports the replica clean
-        with urllib.request.urlopen(_url(router) + "/health") as resp:
-            h = json.loads(resp.read())
-        assert h["stale"] == {_url(replica): False}
-        with urllib.request.urlopen(_url(vec_server) + "/health") as resp:
-            h = json.loads(resp.read())
-        assert h["stale"] == {"vector": False}
-    finally:
-        for server in (router, vec_server, lex_server, replica):
-            server.shutdown()
-            server.server_close()
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_reload_failure_is_an_http_error_not_a_dropped_connection(
-    spark, sf_dir, tmp_path
-):
-    """A staleness probe that fails hard (store directory gone — e.g.
-    caught mid-swap or misconfigured) must surface as an HTTP 500 with
-    the error text, keep the old snapshot serving, and never drop the
-    client connection."""
-    import urllib.error
-    import urllib.request
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import serving_http
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.serving_vector import (
-        ServingVectorIndex,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = ann.random_codebooks(DIM, M, CODES, seed=44)
-    cents = ann.random_centroids(DIM, CELLS, seed=45)
-    path = str(tmp_path / "reload_err_ivfpq")
-    write_ivfpq_index(emb, path, cents, books)
-    idx = ServingVectorIndex.from_store(spark, path)
-    server, _t = serving_http.start_vector_server(idx, spark=spark)
-    host, port = server.server_address
-    url = f"http://{host}:{port}"
-    try:
-        shutil.rmtree(path)  # the store vanishes under the snapshot
-        req = urllib.request.Request(
-            url + "/reload", data=b"{}",
-            headers={"Content-Type": "application/json"},
-        )
-        with pytest.raises(urllib.error.HTTPError) as exc:
-            urllib.request.urlopen(req)
-        assert exc.value.code == 500
-        body = json.loads(exc.value.read())
-        assert body["indexes"]["vector"]["tracked"] is True
-        assert "error" in body["indexes"]["vector"]
-        # the old snapshot still answers queries
-        q = [float(v) for v in emb.first()["embedding"]]
-        req = urllib.request.Request(
-            url + "/query",
-            data=json.dumps({"vector": q, "k": 3}).encode(),
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req) as resp:
-            assert json.loads(resp.read())["candidates"]
-    finally:
-        server.shutdown()
-        server.server_close()

@@ -1,51 +1,33 @@
-"""Streaming maintenance for the FLAT codes stores (PQ/OPQ): per-epoch
-encode-with-the-sidecar-codec landings with exactly-once replay
-semantics, compaction with the absorbed-epoch watermark, and answer
-identity with a fresh batch build — the fourth index loop, at parity
-with the MinHash, IVF-PQ, and lexical ones (round-7 verdict item #6)."""
+"""Incremental maintenance of the FLAT codes stores (PQ/OPQ): epochs of
+new vectors appended one after another, each encoded with the codec
+pinned in the store's sidecar, answer exactly like a fresh batch build;
+an append under any other codec is refused."""
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann, opq
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-    BASE_INGEST_BATCH,
     append_opq_index,
     append_pq_index,
-    compact_pq_index,
     load_table,
-    read_absorbed_watermark,
     validate_pq_store,
-    write_codes_stream_base,
+    write_ivfpq_index,
     write_opq_index,
     write_pq_index,
 )
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import codes as SC
 
 DIM, M, CODES = 64, 8, 16
 
 
-def _emb(spark):
-    return load_table(spark, "/root/testdata/sf0.001", "embeddings")
+def _emb(spark, sf_dir):
+    return load_table(spark, sf_dir, "embeddings")
 
 
 def _books():
     return ann.random_codebooks(DIM, M, CODES, seed=44)
-
-
-def _run_stream(spark, src_dir, store, ckpt, schema):
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = SC.stream_codes_ingest(stream, store, ckpt)
-    q.awaitTermination(180)
 
 
 def _pq_answers(spark, p, q, k=10):
@@ -56,45 +38,31 @@ def _opq_answers(spark, p, q, k=10):
     return [tuple(r) for r in opq.opq_topk_store(spark, p, q, k=k).collect()]
 
 
-def test_pq_stream_epochs_match_fresh_batch_build(spark, tmp_path):
-    emb = _emb(spark)
+def test_pq_stream_epochs_match_fresh_batch_build(spark, sf_dir, tmp_path):
+    emb = _emb(spark, sf_dir)
     books = _books()
-    base = emb.filter(F.col("vec_id") % 3 == 0)
-    ep1 = emb.filter(F.col("vec_id") % 3 == 1)
-    ep2 = emb.filter(F.col("vec_id") % 3 == 2)
-    store = str(tmp_path / "pq_stream")
-    write_codes_stream_base(base, store, books)
-    src = str(tmp_path / "src")
-    ep1.coalesce(1).write.mode("overwrite").parquet(src)
-    ep2.coalesce(1).write.mode("append").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt"), emb.schema)
+    store = str(tmp_path / "pq_epochs")
+    write_pq_index(emb.filter(F.col("vec_id") % 3 == 0), store, books)
+    for epoch in (1, 2):
+        append_pq_index(emb.filter(F.col("vec_id") % 3 == epoch), store, books)
 
     validate_pq_store(spark, store)
+    codes = spark.read.parquet(store)
+    assert codes.count() == codes.select("vec_id").distinct().count() == emb.count()
     flat = str(tmp_path / "pq_flat")
     write_pq_index(emb, flat, books)
     qv = [float(v) for v in emb.filter(F.col("vec_id") == 7).first()["embedding"]]
     assert _pq_answers(spark, store, qv) == _pq_answers(spark, flat, qv)
-    # epochs landed as their own partitions
-    batches = {
-        n.split("=")[1]
-        for n in os.listdir(store)
-        if n.startswith("ingest_batch=")
-    }
-    assert batches == {str(BASE_INGEST_BATCH), "0", "1"}
 
 
-def test_opq_stream_epochs_match_fresh_batch_build(spark, tmp_path):
+def test_opq_stream_epochs_match_fresh_batch_build(spark, sf_dir, tmp_path):
     """The OPQ variant: every epoch rotates with the SIDECAR rotation
-    before encoding — the rotation never retrains mid-stream."""
-    emb = _emb(spark)
+    before encoding — the rotation never retrains between epochs."""
+    emb = _emb(spark, sf_dir)
     r_cols, books = opq.opq_train_offline()
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    ep = emb.filter(F.col("vec_id") % 2 == 1)
-    store = str(tmp_path / "opq_stream")
-    write_codes_stream_base(base, store, books, r_cols=r_cols)
-    src = str(tmp_path / "src_opq")
-    ep.coalesce(1).write.mode("overwrite").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_opq"), emb.schema)
+    store = str(tmp_path / "opq_epochs")
+    write_opq_index(emb.filter(F.col("vec_id") % 2 == 0), store, r_cols, books)
+    append_opq_index(emb.filter(F.col("vec_id") % 2 == 1), store, r_cols, books)
 
     validate_pq_store(spark, store)
     flat = str(tmp_path / "opq_flat")
@@ -103,121 +71,37 @@ def test_opq_stream_epochs_match_fresh_batch_build(spark, tmp_path):
     assert _opq_answers(spark, store, qv) == _opq_answers(spark, flat, qv)
 
 
-def test_replay_overwrites_not_duplicates(spark, tmp_path):
-    emb = _emb(spark)
+def test_guards(spark, sf_dir, tmp_path):
+    """An append must restate the store's own codec: other codebooks,
+    another rotation, or a store of another kind (OPQ, IVF-PQ) are
+    refused before anything is written."""
+    emb = _emb(spark, sf_dir)
     books = _books()
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    ep = emb.filter(F.col("vec_id") % 2 == 1)
-    store = str(tmp_path / "pq_rp")
-    write_codes_stream_base(base, store, books)
-    src = str(tmp_path / "src_rp")
-    ep.coalesce(1).write.mode("overwrite").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_rp"), emb.schema)
-    qv = [float(v) for v in emb.filter(F.col("vec_id") == 3).first()["embedding"]]
-    want = _pq_answers(spark, store, qv)
-    n_want = spark.read.parquet(store).count()
-    # checkpoint loss -> full replay of epoch 0
-    shutil.rmtree(str(tmp_path / "ckpt_rp"))
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_rp2"), emb.schema)
-    validate_pq_store(spark, store)
-    assert _pq_answers(spark, store, qv) == want
-    assert spark.read.parquet(store).count() == n_want
-
-
-def test_compaction_folds_epochs_and_blocks_absorbed_replay(spark, tmp_path):
-    emb = _emb(spark)
-    books = _books()
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    ep = emb.filter(F.col("vec_id") % 2 == 1)
-    store = str(tmp_path / "pq_cp")
-    write_codes_stream_base(base, store, books)
-    src = str(tmp_path / "src_cp")
-    ep.coalesce(1).write.mode("overwrite").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_cp"), emb.schema)
-    qv = [float(v) for v in emb.filter(F.col("vec_id") == 3).first()["embedding"]]
-    want = _pq_answers(spark, store, qv)
-    assert not SC._epoch_absorbed(store, 0)
-    compact_pq_index(spark, store)
-    # epochs folded into the base, answers stable, watermark set
-    batches = {
-        n.split("=")[1]
-        for n in os.listdir(store)
-        if n.startswith("ingest_batch=")
-    }
-    assert batches == {str(BASE_INGEST_BATCH)}
-    assert _pq_answers(spark, store, qv) == want
-    assert read_absorbed_watermark(store) == 0
-    assert SC._epoch_absorbed(store, 0)
-    assert not SC._epoch_absorbed(store, 1)
-    # a replay of the absorbed epoch is dropped, not re-landed
-    shutil.rmtree(str(tmp_path / "ckpt_cp"))
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_cp2"), emb.schema)
-    validate_pq_store(spark, store)
-    assert _pq_answers(spark, store, qv) == want
-
-
-def test_guards(spark, tmp_path):
-    """Plain appends refuse a stream store; the stream refuses a flat
-    store and a non-flat kind — the regimes cannot interleave."""
-    emb = _emb(spark)
-    books = _books()
-    stream_store = str(tmp_path / "pq_guard_stream")
-    write_codes_stream_base(emb.limit(20), stream_store, books)
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_pq_index(emb.limit(1), stream_store, books)
     r_cols, obooks = opq.opq_train_offline()
-    opq_stream = str(tmp_path / "opq_guard_stream")
-    write_codes_stream_base(emb.limit(20), opq_stream, obooks, r_cols=r_cols)
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_opq_index(emb.limit(1), opq_stream, r_cols, obooks)
+    new = emb.limit(1)
 
-    # pre-flag stream base: a store written before the sidecar grew
-    # batch_partitioned still has ingest_batch= partition directories,
-    # and the guard must read the layout as ground truth (round-9
-    # review fix) — a plain append would leave the tree at two depths
-    import json as _json
+    pq_store = str(tmp_path / "pq_guard")
+    write_pq_index(emb.limit(20), pq_store, books)
+    with pytest.raises(ValueError, match="different quantizer config"):
+        append_pq_index(new, pq_store, ann.random_codebooks(DIM, M, CODES, seed=99))
+    with pytest.raises(ValueError, match="different quantizer config"):
+        append_opq_index(new, pq_store, r_cols, obooks)
 
-    meta_file = os.path.join(stream_store, "_index_meta.json")
-    with open(meta_file) as fh:
-        meta = _json.load(fh)
-    meta.pop("batch_partitioned")
-    with open(meta_file, "w") as fh:
-        _json.dump(meta, fh)
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_pq_index(emb.limit(1), stream_store, books)
-
-    flat = str(tmp_path / "pq_guard_flat")
-    write_pq_index(emb.limit(20), flat, books)
-    src = str(tmp_path / "src_guard")
-    emb.limit(1).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with pytest.raises(ValueError, match="not batch-partitioned"):
-        SC.stream_codes_ingest(stream, flat, str(tmp_path / "ckpt_g"))
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        write_ivfpq_index,
-    )
+    opq_store = str(tmp_path / "opq_guard")
+    write_opq_index(emb.limit(20), opq_store, r_cols, obooks)
+    other_r = [[0.0] * DIM for _ in range(DIM)]
+    with pytest.raises(ValueError, match="different quantizer config"):
+        append_opq_index(new, opq_store, other_r, obooks)
+    with pytest.raises(ValueError, match="different quantizer config"):
+        append_pq_index(new, opq_store, obooks)
 
     ivf = str(tmp_path / "pq_guard_ivf")
-    write_ivfpq_index(
-        emb.limit(20), ivf, ann.random_centroids(DIM, 8, seed=43), books
-    )
-    with pytest.raises(ValueError, match="not a flat codes store"):
-        SC.stream_codes_ingest(stream, ivf, str(tmp_path / "ckpt_g2"))
+    write_ivfpq_index(emb.limit(20), ivf, ann.random_centroids(DIM, 8, seed=43), books)
+    with pytest.raises(ValueError, match="different quantizer config"):
+        append_pq_index(new, ivf, books)
 
-
-def test_guard_holds_without_sidecar(spark, tmp_path):
-    """A stream store that LOST its sidecar entirely still refuses a
-    plain append: the ingest_batch= directory layout is the ground
-    truth, and with no meta the downstream codec comparison would skip
-    too — this guard is the only thing preventing a two-depth tree."""
-    emb = _emb(spark)
-    books = _books()
-    store = str(tmp_path / "pq_nosidecar")
-    write_codes_stream_base(emb.limit(20), store, books)
-    os.remove(os.path.join(store, "_index_meta.json"))
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_pq_index(emb.limit(1), store, books)
+    # nothing landed: each store still holds its 20 base rows and validates
+    for p in (pq_store, opq_store):
+        assert spark.read.parquet(p).count() == 20
+        validate_pq_store(spark, p)
+    assert spark.read.parquet(ivf).count() == 20

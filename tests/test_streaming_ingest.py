@@ -1,6 +1,8 @@
-"""Streaming ingest dedup: per-micro-batch exact dedup against the
-persisted history, exactly-once across checkpoint restarts, and
-batch/stream parity with incremental_exact_dedup."""
+"""Ingest dedup, batch by batch: each arriving batch is deduped against
+the persisted content-hash history (``incremental_exact_dedup``) and
+within itself, its survivors' hashes are appended to the history, and
+the survivors can be indexed — so a later batch repeating an earlier
+batch's text is dropped as a history duplicate."""
 
 from __future__ import annotations
 
@@ -8,11 +10,14 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import MinHashParams
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.functions.hashing import (
     portable_hash64,
 )
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import dedup
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import ingest as SI
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import dedup, lsh, minhash
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import tables as T
+
+SCHEMA = "doc_id long, text string"
 
 
 def _hashed(df):
@@ -30,175 +35,94 @@ def _fresh_table(spark, name):
     )
 
 
-def test_stream_ingest_dedup_drops_history_and_cross_batch_dups(spark, tmp_path):
-    base = spark.createDataFrame(
-        [(i, f"seed doc {i}") for i in range(50)], "doc_id long, text string"
-    )
+def _ingest(spark, batch, hist_table, index=None):
+    """One ingest step: dedup ``batch`` against the history table, append
+    the survivors' hashes under the table's bucket spec and, with
+    ``index=(params, sigs_path, bands_table)``, append the surviving
+    documents to the LSH index. Returns the surviving doc_ids."""
+    kept = dedup.incremental_exact_dedup(batch, spark.table(hist_table)).collect()
+    ids = {r["doc_id"] for r in kept}
+    if kept:
+        (
+            spark.createDataFrame(kept, "doc_id long, content_hash long")
+            .write.mode("append")
+            .bucketBy(4, "content_hash")
+            .sortBy("content_hash")
+            .format("parquet")
+            .saveAsTable(hist_table)
+        )
+        if index is not None:
+            T.append_to_index(batch.filter(F.col("doc_id").isin(*ids)), *index)
+    return ids
+
+
+def test_stream_ingest_dedup_drops_history_and_cross_batch_dups(spark):
+    base = spark.createDataFrame([(i, f"seed doc {i}") for i in range(50)], SCHEMA)
     _fresh_table(spark, "t_ingest_hist")
-    SI.write_hash_history_partitioned(_hashed(base), "t_ingest_hist", num_buckets=4)
-    # two stream files: file A has a history dup + fresh rows; file B
-    # repeats one of file A's texts (cross-batch dup) + fresh rows
+    T.write_content_hashes_bucketed(_hashed(base), "t_ingest_hist", num_buckets=4)
+    # batch A has a history dup + fresh rows; batch B repeats one of
+    # batch A's texts (a cross-batch dup) + a fresh row
     a = spark.createDataFrame(
-        [(100, "brand new a"), (101, "seed doc 7"), (102, "brand new b")],
-        "doc_id long, text string",
+        [(100, "brand new a"), (101, "seed doc 7"), (102, "brand new b")], SCHEMA
     )
-    b = spark.createDataFrame(
-        [(200, "brand new a"), (201, "brand new c")], "doc_id long, text string"
-    )
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    a.coalesce(1).write.mode("overwrite").parquet(src)
-    b.coalesce(1).write.mode("append").parquet(src)
+    b = spark.createDataFrame([(200, "brand new a"), (201, "brand new c")], SCHEMA)
     try:
-        stream = (
-            spark.readStream.schema(a.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = SI.stream_ingest_dedup(
-            stream, "t_ingest_hist", out, str(tmp_path / "ckpt")
-        )
-        q.awaitTermination(180)
-        kept = spark.read.parquet(out)
-        kept_ids = {r["doc_id"] for r in kept.collect()}
+        kept_ids = _ingest(spark, a, "t_ingest_hist") | _ingest(spark, b, "t_ingest_hist")
         # 101 is a history dup; 200 duplicates 100 across batches
-        # (file order by name is deterministic within this writer: two
-        # possible arrival orders both keep exactly one of {100, 200})
-        assert kept_ids & {100, 200} and len(kept_ids & {100, 200}) == 1
-        assert {102, 201} <= kept_ids and 101 not in kept_ids
+        assert kept_ids == {100, 102, 201}
         # the history absorbed exactly the kept hashes
         hist = spark.table("t_ingest_hist")
         assert hist.count() == 50 + len(kept_ids)
         assert hist.select("content_hash").distinct().count() == 50 + len(kept_ids)
         # batch parity: one-shot incremental dedup over the union gives
         # the same surviving content hashes
-        union = a.unionByName(b)
-        expect = dedup.incremental_exact_dedup(union, _hashed(base))
+        expect = dedup.incremental_exact_dedup(a.unionByName(b), _hashed(base))
+        got = hist.filter(F.col("doc_id") >= 100)
         assert {r["content_hash"] for r in expect.collect()} == {
-            r["content_hash"] for r in kept.select("content_hash").collect()
+            r["content_hash"] for r in got.collect()
         }
     finally:
         spark.sql("DROP TABLE IF EXISTS t_ingest_hist")
 
 
-def test_stream_ingest_dedup_checkpoint_restart_no_duplicates(spark, tmp_path):
-    base = spark.createDataFrame(
-        [(i, f"seed doc {i}") for i in range(30)], "doc_id long, text string"
-    )
-    _fresh_table(spark, "t_ingest_hist2")
-    SI.write_hash_history_partitioned(_hashed(base), "t_ingest_hist2", num_buckets=4)
-    src = str(tmp_path / "src2")
-    out = str(tmp_path / "out2")
-    ckpt = str(tmp_path / "ckpt2")
-    first = spark.createDataFrame(
-        [(100, "alpha"), (101, "seed doc 3")], "doc_id long, text string"
-    )
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-    try:
-        stream = spark.readStream.schema(first.schema).parquet(src)
-        SI.stream_ingest_dedup(
-            stream, "t_ingest_hist2", out, ckpt
-        ).awaitTermination(120)
-        assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {100}
-        # restart over the same checkpoint with one new file: the new
-        # file repeats "alpha" (now history) and adds a fresh row
-        second = spark.createDataFrame(
-            [(200, "alpha"), (201, "beta")], "doc_id long, text string"
-        )
-        second.coalesce(1).write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema(first.schema).parquet(src)
-        SI.stream_ingest_dedup(
-            stream2, "t_ingest_hist2", out, ckpt
-        ).awaitTermination(120)
-        kept = spark.read.parquet(out)
-        assert {r["doc_id"] for r in kept.collect()} == {100, 201}
-        hist = spark.table("t_ingest_hist2")
-        # exactly-once: hash set is exactly base + kept, no duplicates
-        assert hist.count() == 30 + 2
-        assert hist.select("content_hash").distinct().count() == 32
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_ingest_hist2")
-
-
-def test_stream_ingest_dedup_rejects_flat_history(spark, tmp_path):
-    import pytest
-
-    base = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    _fresh_table(spark, "t_ingest_flat")
-    _hashed(base).write.saveAsTable("t_ingest_flat")
-    try:
-        empty_src = tmp_path / "empty_src"
-        empty_src.mkdir()
-        stream = spark.readStream.schema(base.schema).parquet(str(empty_src))
-        with pytest.raises(ValueError, match="batch-partitioned"):
-            SI.stream_ingest_dedup(
-                stream, "t_ingest_flat", str(tmp_path / "o"), str(tmp_path / "c")
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_ingest_flat")
-
-
 def test_stream_ingest_pipeline_dedup_plus_index(spark, tmp_path):
-    """The full production loop: stream -> dedup vs history -> index
-    the survivors. The index must end probe-identical to a batch build
-    over base + kept docs, across a checkpoint restart."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.config import MinHashParams
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import lsh, minhash
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import tables as T
-
+    """The full ingest loop: batch -> dedup vs history -> index the
+    survivors. The index must end probe-identical to a batch build
+    over base + kept docs, holding each kept doc once."""
     params = MinHashParams()
     base = spark.createDataFrame(
-        [(i, f"seed doc number {i} with words") for i in range(40)],
-        "doc_id long, text string",
+        [(i, f"seed doc number {i} with words") for i in range(40)], SCHEMA
     )
     _fresh_table(spark, "t_pipe_hist")
     _fresh_table(spark, "t_pipe_idx")
-    SI.write_hash_history_partitioned(_hashed(base), "t_pipe_hist", num_buckets=4)
+    T.write_content_hashes_bucketed(_hashed(base), "t_pipe_hist", num_buckets=4)
     sigs_p = str(tmp_path / "pipe_sigs")
     base_sigs = minhash.signatures(base, params)
-    T.write_sigs_batch_partitioned(base_sigs, sigs_p)
-    T.write_bands_bucketed(
-        lsh.bands_table(base_sigs, params), "t_pipe_idx",
-        num_buckets=4, batch_partitioned=True,
-    )
-    src = str(tmp_path / "pipe_src")
-    out = str(tmp_path / "pipe_out")
-    ckpt = str(tmp_path / "pipe_ckpt")
+    base_sigs.write.parquet(sigs_p)
+    T.write_bands_bucketed(lsh.bands_table(base_sigs, params), "t_pipe_idx", num_buckets=4)
+    index = (params, sigs_p, "t_pipe_idx")
     first = spark.createDataFrame(
         [(100, "a brand new crawl document"), (101, "seed doc number 3 with words")],
-        "doc_id long, text string",
+        SCHEMA,
     )
-    first.coalesce(1).write.mode("overwrite").parquet(src)
+    # the second batch: one cross-batch dup + one fresh doc
+    second = spark.createDataFrame(
+        [(200, "a brand new crawl document"), (201, "another fresh one")], SCHEMA
+    )
     try:
-        SI.stream_ingest_dedup(
-            spark.readStream.schema(first.schema).parquet(src),
-            "t_pipe_hist", out, ckpt,
-            index_params=params, sigs_path=sigs_p, bands_table="t_pipe_idx",
-        ).awaitTermination(180)
-        # restart with a second file: one cross-run dup + one fresh doc
-        second = spark.createDataFrame(
-            [(200, "a brand new crawl document"), (201, "another fresh one")],
-            "doc_id long, text string",
-        )
-        second.coalesce(1).write.mode("append").parquet(src)
-        SI.stream_ingest_dedup(
-            spark.readStream.schema(first.schema).parquet(src),
-            "t_pipe_hist", out, ckpt,
-            index_params=params, sigs_path=sigs_p, bands_table="t_pipe_idx",
-        ).awaitTermination(180)
-
-        kept_ids = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+        kept_ids = _ingest(spark, first, "t_pipe_hist", index)
+        kept_ids |= _ingest(spark, second, "t_pipe_hist", index)
         assert kept_ids == {100, 201}
+        T.validate_index(spark, sigs_p, "t_pipe_idx")
         # the index holds exactly base + kept, once each
         sigs_all = spark.read.parquet(sigs_p)
         assert sigs_all.count() == 40 + 2
         assert sigs_all.select("doc_id").distinct().count() == 42
         # probe-identical to a batch build over the same corpus
-        full = base.unionByName(
-            spark.read.parquet(out).select("doc_id", "text")
+        full = base.unionByName(first.unionByName(second)).filter(
+            F.col("doc_id").isin(*kept_ids) | (F.col("doc_id") < 100)
         )
         sigs_full = minhash.signatures(full, params).cache()
-        bands_full = lsh.bands_table(sigs_full, params)
         qd = sigs_full.filter(F.col("doc_id") == 100).select(
             F.col("doc_id").alias("query_id"), "sig"
         )
@@ -207,7 +131,7 @@ def test_stream_ingest_pipeline_dedup_plus_index(spark, tmp_path):
             qd, params, k=5, n_queries=1,
         ).collect()
         expect = lsh.lsh_topk(
-            sigs_full, bands_full, qd, params, k=5, n_queries=1
+            sigs_full, lsh.bands_table(sigs_full, params), qd, params, k=5, n_queries=1
         ).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, expect))
     finally:

@@ -1,36 +1,22 @@
-"""Streaming lexical index maintenance: per-epoch postings/doc-length/
-df-delta landings with exactly-once replay semantics, compaction with
-the absorbed-epoch watermark, and answer identity with a fresh batch
-build — the BM25 twin of test_streaming_semantic."""
+"""Incremental lexical index maintenance: epochs of new documents
+appended to a postings store one after another (postings, doc lengths
+and term df rolled forward by each append) answer exactly like one
+batch build over all the documents."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import pytest
 from pyspark.sql import functions as F
 
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import retrieval
 from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-    BASE_INGEST_BATCH,
-    compact_postings_index,
+    append_postings_index,
     load_table,
-    read_absorbed_watermark,
     read_postings_corpus_stats,
     validate_postings_store,
     write_postings_index,
-    write_postings_stream_base,
 )
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import lexical as SL
 
 QUERY = "column window scan merge"
-
-
-def _docs(spark):
-    return load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
 
 
 def _store_answers(spark, p, k=10):
@@ -40,30 +26,17 @@ def _store_answers(spark, p, k=10):
     ]
 
 
-def _run_stream(spark, src_dir, store, ckpt, schema):
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = SL.stream_lexical_ingest(stream, store, ckpt)
-    q.awaitTermination(180)
-
-
-def test_stream_epochs_match_fresh_batch_build(spark, tmp_path):
-    """Base + two streamed epochs must answer exactly like one batch
+def test_stream_epochs_match_fresh_batch_build(spark, sf_dir, tmp_path):
+    """Base + two appended epochs must answer exactly like one batch
     build over all the docs (postings, N, sum_dl and global df all
-    correct through the delta layout)."""
-    docs = _docs(spark)
-    base = docs.filter(F.col("doc_id") % 3 == 0)
-    ep1 = docs.filter(F.col("doc_id") % 3 == 1)
-    ep2 = docs.filter(F.col("doc_id") % 3 == 2)
-    store = str(tmp_path / "lex_stream")
-    write_postings_stream_base(base, store, n_doc_shards=2, n_token_buckets=8)
-    src = str(tmp_path / "src")
-    ep1.coalesce(1).write.mode("overwrite").parquet(src)
-    ep2.coalesce(1).write.mode("append").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt"), docs.schema)
+    correct after the appends)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    store = str(tmp_path / "lex_epochs")
+    write_postings_index(
+        docs.filter(F.col("doc_id") % 3 == 0), store, n_doc_shards=2, n_token_buckets=8
+    )
+    for epoch in (1, 2):
+        append_postings_index(docs.filter(F.col("doc_id") % 3 == epoch), store)
 
     validate_postings_store(spark, store)
     flat = str(tmp_path / "lex_flat")
@@ -72,84 +45,7 @@ def test_stream_epochs_match_fresh_batch_build(spark, tmp_path):
     assert read_postings_corpus_stats(spark, store) == (
         read_postings_corpus_stats(spark, flat)
     )
-    # serving tier reads the epoch store identically
+    # the serving tier reads the appended store identically
     assert retrieval.ServingLexicalIndex.from_store(spark, store).query(
         QUERY, k=10
     ) == _store_answers(spark, flat)
-    # epochs landed as their own partitions
-    batches = {
-        n.split("=")[1] for n in os.listdir(store) if n.startswith("ingest_batch=")
-    }
-    assert batches == {str(BASE_INGEST_BATCH), "0", "1"}
-
-
-def test_replay_overwrites_not_duplicates(spark, tmp_path):
-    """Killing the checkpoint and re-running the same epochs must
-    converge to the same store (dynamic overwrite of each epoch's own
-    partitions in all three components)."""
-    docs = _docs(spark)
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    ep = docs.filter(F.col("doc_id") % 2 == 1)
-    store = str(tmp_path / "lex_rp")
-    write_postings_stream_base(base, store, n_doc_shards=2, n_token_buckets=4)
-    src = str(tmp_path / "src_rp")
-    ep.coalesce(1).write.mode("overwrite").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_rp"), docs.schema)
-    want = _store_answers(spark, store)
-    n_want = read_postings_corpus_stats(spark, store)
-    # checkpoint loss -> full replay of epoch 0
-    shutil.rmtree(str(tmp_path / "ckpt_rp"))
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_rp2"), docs.schema)
-    validate_postings_store(spark, store)
-    assert _store_answers(spark, store) == want
-    assert read_postings_corpus_stats(spark, store) == n_want
-
-
-def test_compaction_folds_epochs_and_blocks_absorbed_replay(spark, tmp_path):
-    docs = _docs(spark)
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    ep = docs.filter(F.col("doc_id") % 2 == 1)
-    store = str(tmp_path / "lex_cp")
-    write_postings_stream_base(base, store, n_doc_shards=2, n_token_buckets=4)
-    src = str(tmp_path / "src_cp")
-    ep.coalesce(1).write.mode("overwrite").parquet(src)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_cp"), docs.schema)
-    want = _store_answers(spark, store)
-    compact_postings_index(spark, store)
-    validate_postings_store(spark, store)
-    assert _store_answers(spark, store) == want
-    batches = {
-        n.split("=")[1] for n in os.listdir(store) if n.startswith("ingest_batch=")
-    }
-    assert batches == {str(BASE_INGEST_BATCH)}
-    assert read_absorbed_watermark(store) == 0
-    assert SL._epoch_absorbed(store, 0) and not SL._epoch_absorbed(store, 1)
-    # checkpoint-loss replay of the folded epoch is a no-op
-    shutil.rmtree(str(tmp_path / "ckpt_cp"))
-    _run_stream(spark, src, store, str(tmp_path / "ckpt_cp2"), docs.schema)
-    validate_postings_store(spark, store)
-    assert _store_answers(spark, store) == want
-    assert read_postings_corpus_stats(spark, store)[0] == docs.count()
-
-
-def test_stream_guards(spark, tmp_path):
-    docs = _docs(spark)
-    flat = str(tmp_path / "lex_flatg")
-    write_postings_index(docs.limit(10), flat)
-    os.makedirs(str(tmp_path / "nosrc"), exist_ok=True)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "nosrc"))
-    )
-    with pytest.raises(ValueError, match="not batch-partitioned"):
-        SL.stream_lexical_ingest(stream, flat, str(tmp_path / "ck"))
-    # plain appends refuse a stream store (replay safety would be lost)
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        append_postings_index,
-    )
-
-    st = str(tmp_path / "lex_streamg")
-    write_postings_stream_base(docs.limit(10), st)
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_postings_index(docs.limit(1), st)

@@ -1,5 +1,6 @@
 """Structured Streaming operators (real streams via file source +
-availableNow trigger) and multimodal mapInPandas plumbing."""
+availableNow trigger), index maintenance by micro-batch appends, and
+multimodal mapInPandas plumbing."""
 
 from __future__ import annotations
 
@@ -193,3 +194,46 @@ def test_write_sharded_and_metrics_csv(spark, sf_dir, tmp_path):
     sinks.write_metrics_csv(m, csv_out)
     back_csv = spark.read.option("header", True).csv(csv_out)
     assert int(back_csv.collect()[0]["n_docs"]) == docs.count()
+
+
+def test_stream_index_maintenance_matches_batch_build(spark, sf_dir, tmp_path):
+    """New documents arriving in micro-batches, each appended to the
+    persisted index with ``append_to_index``, must leave the index
+    probe-identical to a batch build over the full corpus."""
+    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources import tables as T
+
+    params = MinHashParams()
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    sigs_p = str(tmp_path / "sigs_epochs")
+    table = "t_epochs_idx"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        # batch-build on half the corpus
+        sigs_a = minhash.signatures(docs.filter(F.col("doc_id") % 2 == 0), params)
+        sigs_a.write.mode("overwrite").parquet(sigs_p)
+        T.write_bands_bucketed(lsh.bands_table(sigs_a, params), table, num_buckets=4)
+        # the other half arrives as two micro-batches
+        for part in (1, 3):
+            T.append_to_index(
+                docs.filter(F.col("doc_id") % 4 == part), params, sigs_p, table
+            )
+        T.validate_index(spark, sigs_p, table)
+
+        sigs_all = spark.read.parquet(sigs_p)
+        assert sigs_all.count() == docs.count()
+        qdf = sigs_all.filter(F.col("doc_id") == 13).select(
+            F.col("doc_id").alias("query_id"), "sig"
+        )
+        got = lsh.lsh_topk(
+            sigs_all, spark.table(table), qdf, params, k=10, n_queries=1
+        ).collect()
+        # full batch build as the oracle
+        sigs_full = minhash.signatures(docs, params).cache()
+        expect = lsh.lsh_topk(
+            sigs_full, lsh.bands_table(sigs_full, params), qdf, params,
+            k=10, n_queries=1,
+        ).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, expect))
+        assert len(got) == 10
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")

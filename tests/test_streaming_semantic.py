@@ -1,17 +1,23 @@
-"""Streaming semantic ingest dedup: per-epoch cell-blocked cosine
-dedup against the persisted cell store, exactly-once across checkpoint
-restarts, batch/stream parity — the embedding-side twin of
-test_streaming_ingest."""
+"""Semantic ingest dedup, batch by batch: each arriving batch of
+embeddings is deduped against the history and within itself with
+``semantic_dedup`` (SemDeDup semantics: cosine >= threshold inside one
+coarse-quantizer cell, the smallest id of a group survives), and the
+survivors are appended to the IVF-PQ / IVF-OPQ serving store, whose
+codes must equal a batch encode of the same vectors."""
 
 from __future__ import annotations
 
-import shutil
-
 import numpy as np
-from pyspark.sql import functions as F
 
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann
-from finding_similar_high_dimensional_items_for_big_data_sets_spark.streaming import semantic as SS
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import ann, dedup, opq
+from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
+    append_ivfopq_index,
+    append_ivfpq_index,
+    read_ivfpq_index,
+    validate_ivfpq_store,
+    write_ivfopq_index,
+    write_ivfpq_index,
+)
 
 DIM = 8
 
@@ -24,540 +30,138 @@ def _corpus(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def _fresh_table(spark, name):
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(
-        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:") + f"/{name}",
-        ignore_errors=True,
-    )
-
-
-def _setup(spark, table):
+def _setup():
     """Seeded base corpus of 4 well-separated directions + quantizer."""
     rs = np.random.RandomState(3)
     base_dirs = [rs.normal(size=DIM) * 6 for _ in range(4)]
     rows = [(i, [float(v) for v in base_dirs[i]]) for i in range(4)]
-    cents = ann.random_centroids(DIM, n_cells=4, seed=5)
-    _fresh_table(spark, table)
-    SS.write_cell_store_partitioned(
-        _corpus(spark, rows), table, cents, num_buckets=2
-    )
-    return base_dirs, cents
+    return base_dirs, rows, ann.random_centroids(DIM, n_cells=4, seed=5)
+
+
+def _new_rows(history, batch, quantizer, threshold=0.99):
+    """The batch rows that survive dedup against the history and
+    within the batch (history ids are smaller than every batch id, so
+    a history row always represents its group)."""
+    keep = dedup.semantic_dedup(history.unionByName(batch), quantizer, threshold)
+    return batch.join(keep.filter("keep").select("vec_id"), "vec_id")
+
+
+def _codes(df):
+    return {r["vec_id"]: (r["cell"], list(r["codes"])) for r in df.collect()}
 
 
 def test_semantic_new_rows_greedy_rule(spark):
     """History dup dropped; within-batch smaller-id wins; fresh rows
-    survive; the greedy rule never revives a vector whose neighbor was
-    itself dropped."""
-    base_dirs, cents = _setup(spark, "t_sem_hist0")
-    try:
-        hist = spark.table("t_sem_hist0")
-        batch = _corpus(
-            spark,
-            [
-                (100, [float(v) for v in base_dirs[0]]),  # history dup
-                (101, [float(v) for v in base_dirs[1] * 1.0001]),  # ~cos 1 to hist 1
-                (102, [float(v) for v in -base_dirs[2]]),  # anti-parallel: fresh
-                (110, [float(v) for v in base_dirs[3] * 2.0]),  # batch clone A
-                (111, [float(v) for v in base_dirs[3] * 3.0]),  # batch clone B
-            ],
-        )
-        kept = SS.semantic_new_rows(batch, hist, cents, threshold=0.99)
-        ids = {r["vec_id"] for r in kept.collect()}
-        # 100, 101 die to history; 111 dies to smaller-id 110; 110 is a
-        # history dup of base dir 3 -> also dies; 102 survives
-        assert ids == {102}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist0")
-
-
-def test_stream_semantic_ingest_cross_batch_and_store(spark, tmp_path):
-    base_dirs, cents = _setup(spark, "t_sem_hist1")
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    rs = np.random.RandomState(9)
-    fresh_a = _vec(rs, 4.0)
-    fresh_b = _vec(rs, 4.0)
-    a = _corpus(
-        spark,
-        [
-            (100, fresh_a),
-            (101, [float(v) for v in base_dirs[2]]),  # history dup
-        ],
-    )
-    b = _corpus(
-        spark,
-        [
-            (200, [float(v * 1.5) for v in fresh_a]),  # cross-batch dup of 100
-            (201, fresh_b),
-        ],
-    )
-    a.coalesce(1).write.mode("overwrite").parquet(src)
-    b.coalesce(1).write.mode("append").parquet(src)
-    try:
-        stream = (
-            spark.readStream.schema(a.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = SS.stream_semantic_ingest(
-            stream, "t_sem_hist1", out, str(tmp_path / "ckpt"), cents,
-            threshold=0.99,
-        )
-        q.awaitTermination(180)
-        kept = spark.read.parquet(out)
-        kept_ids = {r["vec_id"] for r in kept.collect()}
-        # one of {100, 200} (arrival order decides), plus 201; never 101
-        assert len(kept_ids & {100, 200}) == 1 and 201 in kept_ids
-        assert 101 not in kept_ids and len(kept_ids) == 2
-        # the store absorbed exactly the survivors, with cells
-        store = spark.table("t_sem_hist1")
-        assert store.count() == 4 + 2
-        assert store.filter(F.col("cell").isNull()).count() == 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist1")
-
-
-def test_stream_semantic_checkpoint_restart_no_duplicates(spark, tmp_path):
-    """Epoch 1, stop, restart on the same checkpoint with a file that
-    near-duplicates epoch 1's survivor: exactly-once into both the
-    survivor store and the cell store across the restart."""
-    base_dirs, cents = _setup(spark, "t_sem_hist2")
-    src = str(tmp_path / "src2")
-    out = str(tmp_path / "out2")
-    ckpt = str(tmp_path / "ckpt2")
-    rs = np.random.RandomState(17)
-    alpha = _vec(rs, 4.0)
-    beta = _vec(rs, 4.0)
-    first = _corpus(
-        spark,
-        [(100, alpha), (101, [float(v) for v in base_dirs[1]])],
-    )
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-    try:
-        stream = spark.readStream.schema(first.schema).parquet(src)
-        SS.stream_semantic_ingest(
-            stream, "t_sem_hist2", out, ckpt, cents, threshold=0.99
-        ).awaitTermination(120)
-        assert {r["vec_id"] for r in spark.read.parquet(out).collect()} == {100}
-        second = _corpus(
-            spark,
-            [(200, [float(v * 2.0) for v in alpha]), (201, beta)],
-        )
-        second.coalesce(1).write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema(first.schema).parquet(src)
-        SS.stream_semantic_ingest(
-            stream2, "t_sem_hist2", out, ckpt, cents, threshold=0.99
-        ).awaitTermination(120)
-        kept = spark.read.parquet(out)
-        assert {r["vec_id"] for r in kept.collect()} == {100, 201}
-        store = spark.table("t_sem_hist2")
-        # exactly-once: base 4 + the 2 survivors, no replay duplicates
-        assert store.count() == 6
-        assert store.select("vec_id").distinct().count() == 6
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist2")
-
-
-def test_stream_semantic_ingest_hkm_quantizer(spark, tmp_path):
-    """The loop accepts an HKMQuantizer: exact clones share every
-    descent decision, so clone dedup is guaranteed at any tree."""
-    rs = np.random.RandomState(23)
-    X = np.vstack([rs.normal(size=DIM) * 6 for _ in range(8)])
-    tree = ann.hkm_train(X, n_leaves=4, branch=2, seed=7)
-    rows = [(i, [float(v) for v in X[i]]) for i in range(8)]
-    _fresh_table(spark, "t_sem_hist3")
-    SS.write_cell_store_partitioned(
-        _corpus(spark, rows), "t_sem_hist3", tree, num_buckets=2
-    )
-    src = str(tmp_path / "src3")
-    out = str(tmp_path / "out3")
-    fresh = _vec(rs, 4.0)
+    survive; a vector whose neighbor was itself dropped is never
+    revived."""
+    base_dirs, rows, cents = _setup()
     batch = _corpus(
         spark,
-        [(100, [float(v) for v in X[5]]), (101, fresh)],  # clone + fresh
+        [
+            (100, [float(v) for v in base_dirs[0]]),  # history dup
+            (101, [float(v) for v in base_dirs[1] * 1.0001]),  # ~cos 1 to hist 1
+            (102, [float(v) for v in -base_dirs[2]]),  # anti-parallel: fresh
+            (110, [float(v) for v in base_dirs[3] * 2.0]),  # batch clone A
+            (111, [float(v) for v in base_dirs[3] * 3.0]),  # batch clone B
+        ],
     )
-    batch.coalesce(1).write.mode("overwrite").parquet(src)
-    try:
-        stream = spark.readStream.schema(batch.schema).parquet(src)
-        SS.stream_semantic_ingest(
-            stream, "t_sem_hist3", out, str(tmp_path / "ckpt3"), tree,
-            threshold=0.99,
-        ).awaitTermination(120)
-        assert {r["vec_id"] for r in spark.read.parquet(out).collect()} == {101}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist3")
-
-
-def test_stream_semantic_rejects_flat_store(spark, tmp_path):
-    import pytest
-
-    cents = ann.random_centroids(DIM, n_cells=2, seed=5)
-    _fresh_table(spark, "t_sem_flat")
-    assigned = _corpus(spark, [(0, [1.0] * DIM)])
-    SS._assign_cells(assigned, cents, "embedding").write.saveAsTable("t_sem_flat")
-    try:
-        src = tmp_path / "emptysrc"
-        src.mkdir()
-        stream = spark.readStream.schema(assigned.schema).parquet(str(src))
-        with pytest.raises(ValueError, match="batch-partitioned"):
-            SS.stream_semantic_ingest(
-                stream, "t_sem_flat", str(tmp_path / "o"), str(tmp_path / "c"),
-                cents,
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_flat")
+    kept = _new_rows(_corpus(spark, rows), batch, cents)
+    # 100, 101 die to history; 111 dies to smaller-id 110; 110 is a
+    # history dup of base dir 3 -> also dies; 102 survives
+    assert {r["vec_id"] for r in kept.collect()} == {102}
 
 
 def test_stream_semantic_maintains_ivfpq_codes_store(spark, tmp_path):
-    """With pq_codebooks + codes_path the loop also lands each epoch's
-    survivors in the IVF-PQ serving index: exactly-once across a
-    checkpoint restart, codes bit-equal to a batch encode of the same
-    vectors, and the streamed store is directly probe-able."""
-    import pytest
-
-    base_dirs, cents = _setup(spark, "t_sem_hist5")
+    """Each batch's survivors land in the IVF-PQ serving store: the
+    store holds base + survivors once each, codes bit-equal to a batch
+    encode of the same vectors, and the store is directly probe-able."""
+    base_dirs, base_rows, cents = _setup()
     books = ann.random_codebooks(DIM, 2, 4, seed=11)
-    src = str(tmp_path / "src5")
-    out = str(tmp_path / "out5")
-    ckpt = str(tmp_path / "ckpt5")
     codes_p = str(tmp_path / "codes5")
-    base_rows = [(i, [float(v) for v in base_dirs[i]]) for i in range(4)]
-    SS.write_ivfpq_stream_base(_corpus(spark, base_rows), codes_p, cents, books)
+    write_ivfpq_index(_corpus(spark, base_rows), codes_p, cents, books)
     rs = np.random.RandomState(31)
     alpha = _vec(rs, 4.0)
     beta = _vec(rs, 4.0)
-    first = _corpus(
-        spark, [(100, alpha), (101, [float(v) for v in base_dirs[1]])]
-    )
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-    try:
-        with pytest.raises(ValueError, match="together"):
-            SS.stream_semantic_ingest(
-                spark.readStream.schema(first.schema).parquet(src),
-                "t_sem_hist5", out, ckpt, cents, pq_codebooks=books,
-            )
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(first.schema).parquet(src),
-            "t_sem_hist5", out, ckpt, cents, threshold=0.99,
-            pq_codebooks=books, codes_path=codes_p,
-        ).awaitTermination(120)
-        second = _corpus(
-            spark, [(200, [float(v * 2.0) for v in alpha]), (201, beta)]
-        )
-        second.coalesce(1).write.mode("append").parquet(src)
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(first.schema).parquet(src),
-            "t_sem_hist5", out, ckpt, cents, threshold=0.99,
-            pq_codebooks=books, codes_path=codes_p,
-        ).awaitTermination(120)
-        codes = spark.read.parquet(codes_p)
-        # exactly-once: base 4 + survivors {100, 201}; 200 deduped
-        assert codes.count() == 6
-        assert {r["vec_id"] for r in codes.collect()} == {0, 1, 2, 3, 100, 201}
-        # batch parity: streamed codes == one-shot encode of same rows
-        all_rows = _corpus(
-            spark, base_rows + [(100, alpha), (201, beta)]
-        )
-        expect = {
-            r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in ann.ivfpq_encode(all_rows, cents, books).collect()
-        }
-        got = {
-            r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in codes.collect()
-        }
-        assert got == expect
-        # the streamed store serves probes directly: exact-rerank over
-        # the full probe set must surface the query's own vector (ADC-
-        # only rank order is NOT asserted — with tiny random codebooks
-        # every reconstruction is near zero and ADC ties are noise)
-        top = ann.ivfpq_topk_store(
-            spark, codes_p, alpha, k=3, n_probe=4,
-            shortlist=10, embeddings=all_rows,
-        )
-        first = top.first()
-        assert first["vec_id"] == 100 and first["dist"] == 0.0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist5")
+    history = _corpus(spark, base_rows)
+    for batch in (
+        _corpus(spark, [(100, alpha), (101, [float(v) for v in base_dirs[1]])]),
+        _corpus(spark, [(200, [float(v * 2.0) for v in alpha]), (201, beta)]),
+    ):
+        kept = _corpus(spark, _new_rows(history, batch, cents).collect())
+        append_ivfpq_index(kept, codes_p, cents, books)
+        history = history.unionByName(kept)
+
+    validate_ivfpq_store(spark, codes_p)
+    codes = spark.read.parquet(codes_p)
+    # base 4 + survivors {100, 201}; 101 and 200 deduped
+    assert codes.count() == 6
+    assert {r["vec_id"] for r in codes.collect()} == {0, 1, 2, 3, 100, 201}
+    all_rows = _corpus(spark, base_rows + [(100, alpha), (201, beta)])
+    assert _codes(codes) == _codes(ann.ivfpq_encode(all_rows, cents, books))
+    # exact-rerank over the full probe set must surface the query's own
+    # vector (ADC-only rank order is NOT asserted — with tiny random
+    # codebooks every reconstruction is near zero and ADC ties are noise)
+    top = ann.ivfpq_topk_store(
+        spark, codes_p, alpha, k=3, n_probe=4, shortlist=10, embeddings=all_rows,
+    ).first()
+    assert top["vec_id"] == 100 and top["dist"] == 0.0
 
 
 def test_stream_semantic_ivfpq_codes_with_hkm_tree(spark, tmp_path):
-    """The codes-store maintenance also composes with an HKMQuantizer:
-    base + survivors encoded through the tree kernel, store readable
-    and probe-able, sidecar round-trips the tree."""
+    """The same maintenance with an HKMQuantizer as the coarse
+    quantizer: exact clones share every descent decision, so the clone
+    is deduped; survivors are encoded through the tree, and the
+    sidecar round-trips the tree."""
     rs = np.random.RandomState(41)
     X = np.vstack([rs.normal(size=DIM) * 6 for _ in range(8)])
     tree = ann.hkm_train(X, n_leaves=4, branch=2, seed=7)
     books = ann.random_codebooks(DIM, 2, 4, seed=11)
     rows = [(i, [float(v) for v in X[i]]) for i in range(8)]
-    _fresh_table(spark, "t_sem_hist6")
-    SS.write_cell_store_partitioned(
-        _corpus(spark, rows), "t_sem_hist6", tree, num_buckets=2
-    )
     codes_p = str(tmp_path / "codes6")
-    SS.write_ivfpq_stream_base(_corpus(spark, rows), codes_p, tree, books)
+    write_ivfpq_index(_corpus(spark, rows), codes_p, tree, books)
     fresh = _vec(rs, 4.0)
-    batch = _corpus(
-        spark, [(100, [float(v) for v in X[5]]), (101, fresh)]  # clone + fresh
-    )
-    src = str(tmp_path / "src6")
-    batch.coalesce(1).write.mode("overwrite").parquet(src)
-    try:
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(batch.schema).parquet(src),
-            "t_sem_hist6", str(tmp_path / "out6"), str(tmp_path / "ckpt6"),
-            tree, threshold=0.99, pq_codebooks=books, codes_path=codes_p,
-        ).awaitTermination(120)
-        from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-            read_ivfpq_index,
-        )
+    batch = _corpus(spark, [(100, [float(v) for v in X[5]]), (101, fresh)])  # clone + fresh
+    kept = _corpus(spark, _new_rows(_corpus(spark, rows), batch, tree).collect())
+    append_ivfpq_index(kept, codes_p, tree, books)
 
-        codes, t2, _ = read_ivfpq_index(spark, codes_p)
-        assert isinstance(t2, ann.HKMQuantizer)
-        assert {r["vec_id"] for r in codes.collect()} == set(range(8)) | {101}
-        # streamed codes == batch encode of the same vectors via the tree
-        all_rows = _corpus(spark, rows + [(101, fresh)])
-        expect = {
-            r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in ann.ivfpq_encode(all_rows, tree, books).collect()
-        }
-        got = {
-            r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in codes.collect()
-        }
-        assert got == expect
-        top = ann.ivfpq_topk_store(
-            spark, codes_p, fresh, k=3, n_probe=4,
-            shortlist=10, embeddings=all_rows,
-        )
-        first = top.first()
-        assert first["vec_id"] == 101 and first["dist"] == 0.0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist6")
-
-
-def test_stream_semantic_codes_store_compaction_and_replay(spark, tmp_path):
-    """Compose the codes-store maintenance with compact_ivfpq_index:
-    folding the epochs keeps the merged codes identical and probe-able,
-    and a checkpoint-LOSS replay of absorbed epochs is dropped by the
-    watermark instead of re-landing next to the folded base."""
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        BASE_INGEST_BATCH,
-        compact_ivfpq_index,
-        read_absorbed_watermark,
-    )
-
-    base_dirs, cents = _setup(spark, "t_sem_hist7")
-    books = ann.random_codebooks(DIM, 2, 4, seed=11)
-    src = str(tmp_path / "src7")
-    out = str(tmp_path / "out7")
-    ckpt = str(tmp_path / "ckpt7")
-    codes_p = str(tmp_path / "codes7")
-    base_rows = [(i, [float(v) for v in base_dirs[i]]) for i in range(4)]
-    SS.write_ivfpq_stream_base(_corpus(spark, base_rows), codes_p, cents, books)
-    rs = np.random.RandomState(53)
-    alpha, beta = _vec(rs, 4.0), _vec(rs, 4.0)
-    a = _corpus(spark, [(100, alpha)])
-    b = _corpus(spark, [(200, beta)])
-    a.coalesce(1).write.mode("overwrite").parquet(src)
-    b.coalesce(1).write.mode("append").parquet(src)
-    try:
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(a.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            "t_sem_hist7", out, ckpt, cents, threshold=0.99,
-            pq_codebooks=books, codes_path=codes_p,
-        ).awaitTermination(180)
-        want = sorted(
-            (r["vec_id"], r["cell"], tuple(r["codes"]))
-            for r in spark.read.parquet(codes_p).collect()
-        )
-        compact_ivfpq_index(spark, codes_p)
-        got = sorted(
-            (r["vec_id"], r["cell"], tuple(r["codes"]))
-            for r in spark.read.parquet(codes_p).collect()
-        )
-        assert got == want
-        assert read_absorbed_watermark(codes_p) == 1
-        # checkpoint loss: the restarted stream replays epochs 0..1 —
-        # the watermark must keep them out of the codes store
-        shutil.rmtree(ckpt)
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(a.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            "t_sem_hist7", out, ckpt, cents, threshold=0.99,
-            pq_codebooks=books, codes_path=codes_p,
-        ).awaitTermination(180)
-        batches = {
-            r["ingest_batch"]
-            for r in spark.read.parquet(codes_p)
-            .select("ingest_batch").distinct().collect()
-        }
-        assert batches == {BASE_INGEST_BATCH}
-        assert sorted(
-            (r["vec_id"], r["cell"], tuple(r["codes"]))
-            for r in spark.read.parquet(codes_p).collect()
-        ) == want
-        # a genuinely NEW epoch (id 2, above the watermark) still lands
-        gamma = _vec(rs, 4.0)
-        _corpus(spark, [(300, gamma)]).coalesce(1).write.mode("append").parquet(src)
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(a.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            "t_sem_hist7", out, ckpt, cents, threshold=0.99,
-            pq_codebooks=books, codes_path=codes_p,
-        ).awaitTermination(180)
-        ids = {r["vec_id"] for r in spark.read.parquet(codes_p).collect()}
-        assert 300 in ids and len(ids) == 7
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist7")
+    codes, t2, _ = read_ivfpq_index(spark, codes_p)
+    assert isinstance(t2, ann.HKMQuantizer)
+    assert {r["vec_id"] for r in codes.collect()} == set(range(8)) | {101}
+    all_rows = _corpus(spark, rows + [(101, fresh)])
+    assert _codes(codes) == _codes(ann.ivfpq_encode(all_rows, tree, books))
+    top = ann.ivfpq_topk_store(
+        spark, codes_p, fresh, k=3, n_probe=4, shortlist=10, embeddings=all_rows,
+    ).first()
+    assert top["vec_id"] == 101 and top["dist"] == 0.0
 
 
 def test_stream_semantic_maintains_ivfopq_codes_store(spark, tmp_path):
-    """With pq_r_cols the serving index the loop maintains is IVF-OPQ:
-    each epoch's survivors are rotated with the PINNED sidecar rotation
-    before the residual encode (never retrained mid-stream), streamed
-    codes are bit-equal to a batch ivfopq_encode of the same vectors,
-    and the store answers ivfopq_topk_store probes directly."""
-    import pytest
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import opq
-
-    base_dirs, cents = _setup(spark, "t_sem_hist7")
+    """With an IVF-OPQ serving store each batch's survivors are rotated
+    with the PINNED sidecar rotation before the residual encode (never
+    retrained between batches), codes are bit-equal to a batch
+    ivfopq_encode of the same vectors, and the store answers
+    ivfopq_topk_store probes directly."""
+    base_dirs, base_rows, cents = _setup()
     rs = np.random.RandomState(61)
     r_cols, books = opq.opq_train(
         np.vstack([rs.normal(size=DIM) for _ in range(32)]),
         m=2, n_codes=4, iters=2, kmeans_iters=3, seed=5,
     )
-    src = str(tmp_path / "src7")
-    out = str(tmp_path / "out7")
-    ckpt = str(tmp_path / "ckpt7")
     codes_p = str(tmp_path / "codes7")
-    base_rows = [(i, [float(v) for v in base_dirs[i]]) for i in range(4)]
-    SS.write_ivfpq_stream_base(
-        _corpus(spark, base_rows), codes_p, cents, books, r_cols=r_cols
-    )
+    write_ivfopq_index(_corpus(spark, base_rows), codes_p, r_cols, cents, books)
     alpha = _vec(rs, 4.0)
-    first = _corpus(
-        spark, [(100, alpha), (101, [float(v) for v in base_dirs[1]])]
-    )
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-    try:
-        with pytest.raises(ValueError, match="requires pq_codebooks"):
-            SS.stream_semantic_ingest(
-                spark.readStream.schema(first.schema).parquet(src),
-                "t_sem_hist7", out, ckpt, cents, pq_r_cols=r_cols,
-            )
-        SS.stream_semantic_ingest(
-            spark.readStream.schema(first.schema).parquet(src),
-            "t_sem_hist7", out, ckpt, cents, threshold=0.99,
-            pq_codebooks=books, codes_path=codes_p, pq_r_cols=r_cols,
-        ).awaitTermination(120)
-        codes = spark.read.parquet(codes_p)
-        # base 4 + survivor 100; 101 deduped against history
-        assert {r["vec_id"] for r in codes.collect()} == {0, 1, 2, 3, 100}
-        # batch parity: streamed codes == one-shot IVF-OPQ encode
-        all_rows = _corpus(spark, base_rows + [(100, alpha)])
-        expect = {
-            r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in opq.ivfopq_encode(
-                all_rows, r_cols, cents, books
-            ).collect()
-        }
-        got = {
-            r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in codes.collect()
-        }
-        assert got == expect
-        # the maintained store answers the IVF-OPQ store query, with
-        # exact original-space rerank surfacing the query's own vector
-        top = opq.ivfopq_topk_store(
-            spark, codes_p, alpha, k=3, n_probe=4,
-            shortlist=10, embeddings=all_rows,
-        )
-        first_row = top.first()
-        assert first_row["vec_id"] == 100 and first_row["dist"] == 0.0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_hist7")
+    batch = _corpus(spark, [(100, alpha), (101, [float(v) for v in base_dirs[1]])])
+    kept = _corpus(spark, _new_rows(_corpus(spark, base_rows), batch, cents).collect())
+    append_ivfopq_index(kept, codes_p, r_cols, cents, books)
 
-
-def test_plain_appends_reject_stream_maintained_cell_store(spark, tmp_path):
-    """write_ivfpq_stream_base lays the store out at ingest_batch/cell
-    depth; a plain append writes at cell-only depth, which would leave
-    the directory tree unreadable — both cell-store appends must
-    refuse up front (the cell-store twin of the flat-codes guard)."""
-    import pytest
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import opq
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.sources.tables import (
-        append_ivfopq_index,
-        append_ivfpq_index,
-    )
-
-    base_dirs, cents = _setup(spark, "t_sem_guard1")
-    rs = np.random.RandomState(77)
-    books = ann.random_codebooks(DIM, 2, 4, seed=9)
-    rows = [(i, [float(v) for v in base_dirs[i]]) for i in range(4)]
-    p1 = str(tmp_path / "stream_ivfpq")
-    SS.write_ivfpq_stream_base(_corpus(spark, rows), p1, cents, books)
-    newbie = _corpus(spark, [(50, _vec(rs))])
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_ivfpq_index(newbie, p1, cents, books)
-
-    r_cols, obooks = opq.opq_train(
-        np.vstack([rs.normal(size=DIM) for _ in range(32)]),
-        m=2, n_codes=4, iters=2, kmeans_iters=3, seed=5,
-    )
-    p2 = str(tmp_path / "stream_ivfopq")
-    SS.write_ivfpq_stream_base(
-        _corpus(spark, rows), p2, cents, obooks, r_cols=r_cols
-    )
-    with pytest.raises(ValueError, match="stream-maintained"):
-        append_ivfopq_index(newbie, p2, r_cols, cents, obooks)
-
-
-def test_stream_semantic_rejects_mismatched_codec(spark, tmp_path):
-    """The codes store's sidecar pins the codec; starting the stream
-    with a different rotation or codebooks must refuse up front —
-    otherwise streamed epochs land codes the store's own query path
-    reads with garbage ADC distances, silently."""
-    import pytest
-
-    from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators import opq
-
-    base_dirs, cents = _setup(spark, "t_sem_guard2")
-    rs = np.random.RandomState(78)
-    r_cols, books = opq.opq_train(
-        np.vstack([rs.normal(size=DIM) for _ in range(32)]),
-        m=2, n_codes=4, iters=2, kmeans_iters=3, seed=5,
-    )
-    other_r, other_books = opq.opq_train(
-        np.vstack([rs.normal(size=DIM) for _ in range(32)]),
-        m=2, n_codes=4, iters=2, kmeans_iters=3, seed=6,
-    )
-    rows = [(i, [float(v) for v in base_dirs[i]]) for i in range(4)]
-    codes_p = str(tmp_path / "codes_guard")
-    SS.write_ivfpq_stream_base(
-        _corpus(spark, rows), codes_p, cents, books, r_cols=r_cols
-    )
-    src = str(tmp_path / "src_guard")
-    _corpus(spark, [(100, _vec(rs))]).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(src)
-    with pytest.raises(ValueError, match="different quantizer config"):
-        SS.stream_semantic_ingest(
-            stream, "t_sem_guard2", str(tmp_path / "o"),
-            str(tmp_path / "c"), cents,
-            pq_codebooks=books, codes_path=codes_p, pq_r_cols=other_r,
-        )
-    with pytest.raises(ValueError, match="different quantizer config"):
-        SS.stream_semantic_ingest(
-            stream, "t_sem_guard2", str(tmp_path / "o"),
-            str(tmp_path / "c"), cents,
-            pq_codebooks=other_books, codes_path=codes_p, pq_r_cols=r_cols,
-        )
+    validate_ivfpq_store(spark, codes_p)
+    codes = spark.read.parquet(codes_p)
+    # base 4 + survivor 100; 101 deduped against history
+    assert {r["vec_id"] for r in codes.collect()} == {0, 1, 2, 3, 100}
+    all_rows = _corpus(spark, base_rows + [(100, alpha)])
+    assert _codes(codes) == _codes(opq.ivfopq_encode(all_rows, r_cols, cents, books))
+    # exact original-space rerank surfaces the query's own vector
+    top = opq.ivfopq_topk_store(
+        spark, codes_p, alpha, k=3, n_probe=4, shortlist=10, embeddings=all_rows,
+    ).first()
+    assert top["vec_id"] == 100 and top["dist"] == 0.0
